@@ -5,9 +5,9 @@ pandas UDF fitting one model per key).
 
 The kernel here is a closed-form least-squares linear trend per
 event_type over hourly buckets (deterministic, no solver) — the seam a
-real deployment swaps for Prophet/ARIMA per key. Accuracy vs DuckDB's
-regr_slope/regr_intercept is asserted in tests (1e-9), but the query is
-rows-only: float summation order across engines differs in ulps.
+real deployment swaps for Prophet/ARIMA per key. Tests assert the fit
+against exact rational least squares (1e-9), and forecast_trend_per_type
+carries a full value oracle (_TREND_ORACLE).
 
 Scale notes: groupBy().applyInPandas ships each key's rows to one task —
 the pattern holds while per-key data fits a task (hours × years is

@@ -387,8 +387,15 @@ def test_pq_encode_shape_and_determinism(spark, tables):
 
 
 def test_trend_fit_matches_duckdb_regression(spark, sf_dir):
-    # the applyInPandas closed-form fit must agree with DuckDB's
-    # regr_slope/regr_intercept on the same hourly series to 1e-9
+    # the applyInPandas closed-form fit must agree with an exact
+    # least-squares fit of the same hourly series to 1e-9: DuckDB sums
+    # n, Σx, Σx², Σy_micro and Σx·y_micro in HUGEINT (x = bucket_idx) and
+    # the slope and intercept are formed from them as Fractions. DuckDB's
+    # regr_intercept is not the reference: it is a double-precision
+    # streaming fit, off by up to 1.67e-9 at x ≈ 2.5e5 hours since 1995.
+    # Its regr_slope stays within 1e-14 of exact and is still compared.
+    from fractions import Fraction
+
     import duckdb
 
     from iceberg_metadata_pipeline_spark.llmops.forecast import (
@@ -407,12 +414,19 @@ def test_trend_fit_matches_duckdb_regression(spark, sf_dir):
     con = duckdb.connect()
     con.register("hourly", pdf)
     want = con.execute(
-        "SELECT event_type, regr_slope(y, bucket_idx) s, regr_intercept(y, bucket_idx) i "
+        "SELECT event_type, COUNT(*)::HUGEINT, SUM(bucket_idx::HUGEINT), "
+        "SUM(bucket_idx::HUGEINT * bucket_idx), SUM(y_micro::HUGEINT), "
+        "SUM(bucket_idx::HUGEINT * y_micro), regr_slope(y, bucket_idx) "
         "FROM hourly GROUP BY event_type"
     ).fetchall()
-    for et, s, i in want:
+    assert {r[0] for r in want} == set(got)
+    for et, n, sx, sxx, sy, sxy, duck_slope in want:
+        slope = Fraction(n * sxy - sx * sy, (n * sxx - sx * sx) * 10**6)
+        intercept = (Fraction(sy, 10**6) - slope * sx) / n
         gs, gi = got[et]
-        assert abs(gs - s) < 1e-9 and abs(gi - i) < 1e-9, et
+        assert abs(Fraction(gs) - slope) < 1e-9, et
+        assert abs(Fraction(gi) - intercept) < 1e-9, et
+        assert abs(gs - duck_slope) < 1e-9, et
 
 
 def test_connected_components_transitive_closure(spark):
