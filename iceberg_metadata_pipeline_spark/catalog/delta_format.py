@@ -1787,7 +1787,13 @@ def _live_rows_dataframe(spark: SparkSession, state: DeltaTableState):
     rows) metadata already decoded at replay."""
     from pyspark.sql import functions as F
 
-    norm = lambda c: F.regexp_replace(c, r"^file:/+", "/")  # noqa: E731
+    from iceberg_metadata_pipeline_spark.catalog.metacat import (
+        LINEAGE_FILE,
+        RowDelete,
+        apply_deletes,
+        plain_path,
+    )
+
     pcols = set(state.partition_columns)
     idmode = column_mapping_mode(state) == "id"
     if idmode:
@@ -1856,7 +1862,7 @@ def _live_rows_dataframe(spark: SparkSession, state: DeltaTableState):
     data = (
         spark.read.schema(read_schema)
         .parquet(*abs_of.values())
-        .withColumn("__file", norm(F.col("_metadata.file_path")))
+        .withColumn("__file", F.expr(LINEAGE_FILE))
         .withColumn("__pos", F.col("_metadata.row_index"))
     )
     # single-select projection, not sequential withColumnRenamed: logical
@@ -1882,7 +1888,7 @@ def _live_rows_dataframe(spark: SparkSession, state: DeltaTableState):
     if state.partition_columns:
         pmap = spark.createDataFrame(
             [
-                (abs_of[p],)
+                (plain_path(abs_of[p]),)
                 + tuple(
                     (a.get("partitionValues") or {}).get(phys[c])
                     for c in state.partition_columns
@@ -1898,19 +1904,14 @@ def _live_rows_dataframe(spark: SparkSession, state: DeltaTableState):
             data = data.withColumn(
                 c, F.col(f"__p_{c}").cast(state.schema[c].dataType)
             )
+    # deletion vectors carry no sequence number: they apply to every row
     dv_rows = [
-        (abs_of[p], int(pos))
+        (plain_path(abs_of[p]), int(pos))
         for p, a in state.files.items()
         if a.get("deletionVector")
         for pos in _decode_dv_descriptor(a["deletionVector"], state.location)
     ]
-    if dv_rows:
-        dels = spark.createDataFrame(dv_rows, "__file string, __pos long")
-        data = data.join(
-            F.broadcast(dels),
-            (data["__file"] == dels["__file"]) & (data["__pos"] == dels["__pos"]),
-            "left_anti",
-        )
+    data = apply_deletes(data, [RowDelete("position", None, positions=dv_rows)])
     return data.select(*[f.name for f in state.schema.fields])
 
 

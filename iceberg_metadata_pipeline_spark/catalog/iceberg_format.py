@@ -66,9 +66,14 @@ from pyspark.sql import types as T
 
 from iceberg_metadata_pipeline_spark.catalog import avro_io
 from iceberg_metadata_pipeline_spark.catalog.metacat import (
+    LINEAGE_FILE,
     Catalog,
     DataFileEntry,
+    RowDelete,
     Table,
+    apply_deletes,
+    local_frame,
+    plain_path,
 )
 
 # ---------------------------------------------------------------------------
@@ -475,22 +480,13 @@ def export_iceberg_table(table: Table, dest: str, format_version: int = 2) -> st
             os.makedirs(os.path.join(dest, "data"), exist_ok=True)
             all_files = table.snapshot_files(snap["snapshot_id"])
             for d in predicates:
-                applicable = [
-                    f
-                    for f in all_files
-                    if d.get("seq") is None or f.seq < d["seq"]
-                ]
+                applicable = [f for f in all_files if f.seq < d["seq"]]
                 if not applicable:
                     continue
                 src = table._read_files(applicable, with_lineage=True)
                 positions = src.filter(
                     F.coalesce(F.expr(d["expr"]), F.lit(False))
-                ).select(
-                    F.regexp_replace(
-                        F.col("__file"), r"^file:/+", "/"
-                    ).alias("file_path"),
-                    F.col("__pos").alias("pos"),
-                )
+                ).select(F.col("__file").alias("file_path"), F.col("__pos").alias("pos"))
                 out_dir = os.path.join(
                     dest, "data", "pred-" + uuid.uuid4().hex[:12]
                 )
@@ -2333,7 +2329,7 @@ def read_iceberg_table(
                             dv = [
                                 (r, p)
                                 for r, p in dv
-                                if _normalize_uri(r) == _normalize_uri(str(ref))
+                                if plain_path(r) == plain_path(str(ref))
                             ]
                             if not dv:
                                 raise ValueError(
@@ -2422,34 +2418,28 @@ def read_iceberg_table(
     )
 
 
-def _normalize_uri(p: str) -> str:
-    """file:/a, file:///a, /a → /a (manifest paths and Spark's
-    ``_metadata.file_path`` render the scheme differently)."""
-    return re.sub(r"^file:/+", "/", p)
-
-
 def _live_rows_dataframe(
     spark: SparkSession, info: IcebergTableInfo, lineage: bool = False
 ):
     """Materialize the live rows of a merge-on-read snapshot: data files
     minus position deletes (delete.seq >= data.seq, matched on
     (file, row position)) minus equality deletes (delete.seq > data.seq,
-    matched on the delete file's equality columns).
+    matched null-safely on the delete file's equality columns).
 
     Fully distributed: data files scan with ``_metadata.file_path`` /
     ``row_index`` (exact file-relative positions, no zipWithIndex
-    shuffle); the per-file sequence map is rows = #files and broadcast;
-    each delete set applies as one LEFT ANTI join. Position deletes
-    co-partition on (file, pos) — at 100 TB this is the same shape
-    Iceberg's own MOR scan plans."""
+    shuffle), and metacat's ``apply_deletes`` applies every delete file
+    as one broadcast anti-join per delete shape, with the per-file
+    sequence map (rows = #files) broadcast only when a delete applies
+    to some files but not others."""
     from pyspark.sql import functions as F
 
-    norm = lambda c: F.regexp_replace(c, r"^file:/+", "/")  # noqa: E731
     cols = [f.name for f in info.schema.fields]
+    seqs = {plain_path(f.path): f.seq for f in info.files}
     data = (
         spark.read.schema(info.schema)
         .parquet(*[f.path for f in info.files])
-        .withColumn("__file", norm(F.col("_metadata.file_path")))
+        .withColumn("__file", F.expr(LINEAGE_FILE))
         .withColumn("__pos", F.col("_metadata.row_index"))
     )
     if lineage:
@@ -2459,16 +2449,12 @@ def _live_rows_dataframe(
                 f"row lineage requested but {len(missing)} data files carry "
                 f"no first_row_id (not a v3 lineage table?): {missing[:3]}"
             )
-        seq_map = spark.createDataFrame(
-            [(_normalize_uri(f.path), f.seq, int(f.first_row_id)) for f in info.files],
+        seq_map = local_frame(
+            spark,
+            [(plain_path(f.path), f.seq, int(f.first_row_id)) for f in info.files],
             "__file string, __data_seq long, __frid long",
         )
-    else:
-        seq_map = spark.createDataFrame(
-            [(_normalize_uri(f.path), f.seq) for f in info.files],
-            "__file string, __data_seq long",
-        )
-    data = data.join(F.broadcast(seq_map), "__file")
+        data = data.join(F.broadcast(seq_map), "__file")
 
     if info.defaults:
         # v3 initial-default: rows from files written BEFORE a column
@@ -2483,7 +2469,7 @@ def _live_rows_dataframe(
         dcols = [c for c in info.defaults if c in {f.name for f in info.schema.fields}]
         have = {f.path: set(pq.read_schema(f.path).names) for f in info.files}
         flag_rows = [
-            tuple([_normalize_uri(f.path)] + [c in have[f.path] for c in dcols])
+            tuple([plain_path(f.path)] + [c in have[f.path] for c in dcols])
             for f in info.files
         ]
         flags = spark.createDataFrame(
@@ -2499,66 +2485,27 @@ def _live_rows_dataframe(
                 ),
             )
 
-    pos_dels = [d for d in info.delete_files if d.content == 1]
-    if pos_dels:
-        parts = []
-        for d in pos_dels:
-            if d.dv is not None:
-                # decoded deletion vector: positions are already in hand
-                rows = [
-                    (_normalize_uri(ref), int(pos), d.seq)
-                    for ref, positions in d.dv
-                    for pos in positions
-                ]
-                if rows:
-                    parts.append(
-                        spark.createDataFrame(
-                            rows, "__file string, __pos long, __del_seq long"
-                        )
-                    )
-                continue
-            parts.append(
-                spark.read.parquet(d.path)
-                .select(
-                    norm(F.col("file_path")).alias("__file"),
-                    F.col("pos").cast("long").alias("__pos"),
-                )
-                .withColumn("__del_seq", F.lit(d.seq))
-            )
-        dels = parts[0]
-        for p in parts[1:]:
-            dels = dels.unionByName(p)
-        data = data.join(
-            dels,
-            (data["__file"] == dels["__file"])
-            & (data["__pos"] == dels["__pos"])
-            & (dels["__del_seq"] >= data["__data_seq"]),
-            "left_anti",
-        )
-
-    # group equality-delete files by their column tuple → one anti-join
-    # per distinct equality key shape
-    eq_groups: dict[tuple[str, ...], list[DeleteFileEntry]] = {}
+    deletes = []
     for d in info.delete_files:
-        if d.content == 2:
+        if d.content == 1:
+            # position deletes apply to data of the same sequence too;
+            # a decoded deletion vector has its positions in hand
+            deletes.append(
+                RowDelete("position", d.seq + 1, path=d.path)
+                if d.dv is None
+                else RowDelete(
+                    "position",
+                    d.seq + 1,
+                    positions=[(ref, p) for ref, ps in d.dv for p in ps],
+                )
+            )
+        elif d.content == 2:
             if not d.equality_cols:
                 raise ValueError(f"equality delete {d.path} has no equality_ids")
-            eq_groups.setdefault(tuple(d.equality_cols), []).append(d)
-    for eq_cols, group in eq_groups.items():
-        parts = []
-        for d in group:
-            parts.append(
-                spark.read.parquet(d.path)
-                .select(*[F.col(c).alias(f"__eq_{c}") for c in eq_cols])
-                .withColumn("__del_seq", F.lit(d.seq))
+            deletes.append(
+                RowDelete("equality", d.seq, path=d.path, keys=tuple(d.equality_cols))
             )
-        dels = parts[0]
-        for p in parts[1:]:
-            dels = dels.unionByName(p)
-        cond = dels["__del_seq"] > data["__data_seq"]
-        for c in eq_cols:
-            cond = cond & data[c].eqNullSafe(dels[f"__eq_{c}"])
-        data = data.join(dels, cond, "left_anti")
+    data = apply_deletes(data, deletes, seqs)
 
     if lineage:
         # spec v3 metadata columns: _row_id = the file's first_row_id +

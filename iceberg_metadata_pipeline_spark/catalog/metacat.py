@@ -41,6 +41,7 @@ ImportParquetFolders registers via DataFiles.Builder.withMetrics).
 
 from __future__ import annotations
 
+import dataclasses
 import functools
 import json
 import os
@@ -116,6 +117,162 @@ class DataFileEntry:
             d.get("partition", {}), d.get("spec_id"), d.get("seq", 0),
             d.get("first_row_id"),
         )
+
+
+# ``_metadata.file_path`` is a URI (``file:`` scheme, a space reads
+# ``%20``); manifests and delete files hold plain paths. This renders the
+# plain path, decoding only paths with an escape (url_decode is costly per
+# row); ``+`` is literal in a URI path, so it is shielded from form decoding.
+LINEAGE_FILE = (
+    "CASE WHEN contains(_metadata.file_path, '%') THEN url_decode(replace("
+    "regexp_replace(_metadata.file_path, '^file:/+', '/'), '+', '%2B')) "
+    "ELSE regexp_replace(_metadata.file_path, '^file:/+', '/') END"
+)
+
+
+def plain_path(p: str) -> str:
+    """The manifest-side twin of LINEAGE_FILE: no ``file:`` scheme, and
+    local paths absolute, as Spark qualifies them."""
+    p = re.sub(r"^file:/+", "/", p)
+    return p if "://" in p else os.path.abspath(p)
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """A small driver-side table as SQL ``VALUES`` (a LocalRelation):
+    broadcasting it runs no Spark job, unlike createDataFrame's RDD."""
+    if not rows:
+        return spark.createDataFrame([], schema)
+    cols = [c.split() for c in schema.split(",")]
+
+    def lit(v) -> str:
+        if isinstance(v, str):
+            return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+        return "NULL" if v is None else str(int(v))
+
+    values = ", ".join("(" + ", ".join(map(lit, r)) + ")" for r in rows)
+    casts = ", ".join(f"CAST({n} AS {t}) AS {n}" for n, t in cols)
+    names = ", ".join(n for n, _ in cols)
+    return spark.sql(f"SELECT {casts} FROM VALUES {values} AS t({names})")
+
+
+@dataclass
+class RowDelete:
+    """One merge-on-read delete for ``apply_deletes``: it removes matching
+    rows whose data sequence is below ``seq`` (None: in every file).
+    Predicates match where ``expr`` is TRUE; position deletes match the
+    ``file_path``/``pos`` rows of the parquet at ``path`` or in-memory
+    ``positions`` (deletion vectors); equality deletes match the ``keys``
+    columns of the parquet at ``path``."""
+
+    kind: str  # "predicate" | "position" | "equality"
+    seq: int | None
+    expr: str | None = None
+    path: str | None = None
+    keys: tuple[str, ...] = ()
+    positions: list[tuple[str, int]] = field(default_factory=list)
+
+
+def live_deletes(
+    deletes: list[RowDelete], file_seqs: dict[str, int] | None
+) -> list[RowDelete]:
+    """The deletes that can remove a row of the files ``file_seqs`` maps
+    (plain path → data sequence): one at or below every sequence is
+    dropped, one above all of them loses its condition (``seq=None``)."""
+    seqs = (file_seqs or {}).values()
+    lo, hi = min(seqs, default=0), max(seqs, default=0)
+    return [
+        d if d.seq is None or d.seq <= hi else dataclasses.replace(d, seq=None)
+        for d in deletes
+        if d.seq is None or d.seq > lo
+    ]
+
+
+def apply_deletes(
+    df: DataFrame,
+    deletes: list[RowDelete],
+    file_seqs: dict[str, int] | None = None,
+) -> DataFrame:
+    """Remove what ``deletes`` delete from ``df``, in a plan sized by the
+    delete shapes, not by history (Iceberg's delete-file index,
+    https://iceberg.apache.org/spec/#scan-planning): predicates fold into
+    one Filter; position deletes into one broadcast LEFT ANTI join on
+    ``(__file, __pos)``; equality deletes into one per key-column tuple,
+    keys matched null-safely (``<=>``, per the spec). The delete files of
+    a shape are one parquet scan, each row tagged with its delete's
+    sequence by its file's path. The table side never shuffles.
+
+    ``df`` carries ``__file`` (a plain path, see LINEAGE_FILE) and, for
+    position deletes, ``__pos``. Deletes that keep a sequence after
+    ``live_deletes`` compare it with the row's ``__data_seq``, attached
+    by one broadcast join of ``file_seqs`` unless ``df`` carries it."""
+    spark = df.sparkSession
+    live = live_deletes(deletes, file_seqs)
+    top = max((file_seqs or {}).values(), default=0) + 1  # above every file
+
+    def gated(ds: list[RowDelete]) -> bool:
+        return any(d.seq is not None for d in ds)
+
+    attach = gated(live) and "__data_seq" not in df.columns
+    if attach:
+        seq_map = local_frame(spark, list(file_seqs.items()), "__sf string, __data_seq long")
+        df = df.join(F.broadcast(seq_map), F.col("__file") == F.col("__sf")).drop("__sf")
+    preds = []
+    for d in live:
+        if d.kind == "predicate":
+            hit = F.coalesce(F.expr(d.expr), F.lit(False))
+            preds.append(hit if d.seq is None else hit & (F.col("__data_seq") < d.seq))
+    if preds:
+        df = df.filter(~functools.reduce(lambda a, b: a | b, preds))
+
+    def scan(ds: list[RowDelete], schema, cols: list) -> DataFrame:
+        # an explicit read schema: files written before a type promotion
+        # read widened, where inference would refuse the mix
+        dseq = F.lit(top)
+        if gated(ds):
+            path = F.expr(LINEAGE_FILE)
+            for d in ds:
+                root = plain_path(d.path)
+                hit = (path == root) | path.startswith(root + "/")
+                dseq = F.when(hit, top if d.seq is None else d.seq).otherwise(dseq)
+        return spark.read.schema(schema).parquet(*[d.path for d in ds]).select(
+            *[c.alias(f"__d{i}") for i, c in enumerate(cols)],
+            dseq.cast("long").alias("__dseq"),
+        )
+
+    def anti_join(df: DataFrame, ds, frames, on: list[str], null_safe: bool) -> DataFrame:
+        eq = (lambda a, b: a.eqNullSafe(b)) if null_safe else (lambda a, b: a == b)
+        cond = functools.reduce(
+            lambda a, b: a & b, [eq(F.col(c), F.col(f"__d{i}")) for i, c in enumerate(on)]
+        )
+        if gated(ds):
+            cond = cond & (F.col("__data_seq") < F.col("__dseq"))
+        dels = functools.reduce(DataFrame.unionByName, frames)
+        return df.join(F.broadcast(dels), cond, "left_anti")
+
+    norm = lambda c: F.regexp_replace(F.col(c).cast("string"), r"^file:/+", "/")  # noqa: E731
+    pos = [d for d in live if d.kind == "position"]
+    frames = []
+    if any(d.path for d in pos):
+        cols = [norm("file_path"), F.col("pos")]
+        frames.append(scan([d for d in pos if d.path], "file_path string, pos long", cols))
+    mem = [(f, p, top if d.seq is None else d.seq) for d in pos for f, p in d.positions]
+    if mem:  # deletion vectors can hold millions of positions: an RDD
+        frames.append(
+            spark.createDataFrame(mem, "f string, p long, s long").select(
+                norm("f").alias("__d0"), F.col("p").alias("__d1"), F.col("s").alias("__dseq")
+            )
+        )
+    if frames:
+        df = anti_join(df, pos, frames, ["__file", "__pos"], False)
+    by_keys: dict[tuple[str, ...], list[RowDelete]] = {}
+    for d in live:
+        if d.kind == "equality":
+            by_keys.setdefault(tuple(d.keys), []).append(d)
+    for keys, ds in by_keys.items():
+        schema = T.StructType([T.StructField(k, df.schema[k].dataType) for k in keys])
+        frames = [scan(ds, schema, [F.col(k) for k in keys])]
+        df = anti_join(df, ds, frames, list(keys), True)
+    return df.drop("__data_seq") if attach else df
 
 
 class Table:
@@ -220,6 +377,16 @@ class Table:
     def _manifest_file(self, snap: dict) -> str:
         return os.path.join(self.location, "metadata", snap["manifest_file"])
 
+    def _parent(self, snap: dict) -> dict:
+        """The parent record a delta-chain walk continues from."""
+        pid = snap["parent_snapshot_id"]
+        parent = next((s for s in self.meta["snapshots"] if s["snapshot_id"] == pid), None)
+        if parent is None:
+            raise ValueError(
+                f"snapshot {snap['snapshot_id']} parent {pid} expired without checkpoint"
+            )
+        return parent
+
     def _resolve_manifest(self, snap: dict) -> list[DataFileEntry]:
         """Reconstruct a snapshot's full file list from its delta chain:
         walk parent pointers back to a root or checkpoint (``full`` delta),
@@ -229,24 +396,12 @@ class Table:
         cached = self._manifest_cache.get(sid)
         if cached is not None:
             return cached
-        if "manifest" in snap:  # legacy inline full manifest (pre-sharding)
-            files = [DataFileEntry.from_json(f) for f in snap["manifest"]]
-            self._manifest_cache[sid] = files
-            return files
-        with open(self._manifest_file(snap)) as fh:
-            delta = json.load(fh)
+        delta = self._snapshot_delta(snap)
         parent_id = snap.get("parent_snapshot_id")
         if delta.get("full") or parent_id is None:
             base: list[DataFileEntry] = []
         else:
-            parent = next(
-                (s for s in self.meta["snapshots"] if s["snapshot_id"] == parent_id), None
-            )
-            if parent is None:
-                raise ValueError(
-                    f"snapshot {sid} parent {parent_id} expired without checkpoint"
-                )
-            base = self._resolve_manifest(parent)
+            base = self._resolve_manifest(self._parent(snap))
         removed = set(delta.get("removed_paths", ()))
         files = [f for f in base if f.path not in removed] + [
             DataFileEntry.from_json(f) for f in delta.get("added", ())
@@ -259,67 +414,19 @@ class Table:
         A 'replace' commit that rewrote the whole table through scan()
         clears them (the rows are physically gone); checkpoints carry the
         then-live set forward."""
-        if "manifest" in snap:  # legacy inline manifest: MOR didn't exist
-            return []
         sid = snap["snapshot_id"]
         cached = self._deletes_cache.get(sid)
         if cached is not None:
             return cached
-        with open(self._manifest_file(snap)) as fh:
-            delta = json.load(fh)
+        delta = self._snapshot_delta(snap)
         own = list(delta.get("added_deletes", ()))
         parent_id = snap.get("parent_snapshot_id")
         if delta.get("clears_deletes") or delta.get("full") or parent_id is None:
             result = own
         else:
-            parent = next(
-                (s for s in self.meta["snapshots"] if s["snapshot_id"] == parent_id), None
-            )
-            if parent is None:
-                raise ValueError(
-                    f"snapshot {sid} parent {parent_id} expired without checkpoint"
-                )
-            result = self._resolve_deletes(parent) + own
+            result = self._resolve_deletes(self._parent(snap)) + own
         self._deletes_cache[sid] = result
         return result
-
-    def _apply_deletes(self, df: DataFrame, deletes: list[dict]) -> DataFrame:
-        """Apply MOR delete entries at read time: predicate deletes as
-        keep-where-not-TRUE filters, equality-delete files as anti-joins on
-        the key columns, position-delete files as anti-joins on the
-        (__file, __pos) lineage columns (callers attach those when a
-        positional entry applies). All the joins Iceberg's MOR read path
-        performs; each is idempotent, so re-applying after a partial
-        rewrite is safe. Delete files are broadcast: orders of magnitude
-        smaller than the table — the anti-join must never shuffle the
-        table side (at 100 TB that shuffle IS the query)."""
-        for d in deletes:
-            if d["kind"] == "predicate":
-                df = df.filter(~F.coalesce(F.expr(d["expr"]), F.lit(False)))
-            elif d["kind"] == "position":
-                # canonical plain-path join on BOTH sides: internal
-                # writers and Spark's _metadata.file_path render local
-                # paths as 'file:/...', foreign engines post the
-                # registered '/...' or 'file:///...' form — all three
-                # must hit the same key (round 10)
-                pos = self.spark.read.parquet(d["path"]).select(
-                    F.regexp_replace(
-                        F.col("file_path").cast("string"), r"^file:/+", "/"
-                    ).alias("__file_n"),
-                    F.col("pos").alias("__pos"),
-                )
-                df = (
-                    df.withColumn(
-                        "__file_n",
-                        F.regexp_replace(F.col("__file"), r"^file:/+", "/"),
-                    )
-                    .join(F.broadcast(pos), ["__file_n", "__pos"], "left_anti")
-                    .drop("__file_n")
-                )
-            else:  # equality-delete file
-                keys = self.spark.read.parquet(d["path"]).select(*d["key_cols"])
-                df = df.join(F.broadcast(keys), d["key_cols"], "left_anti")
-        return df
 
     # -- commits -----------------------------------------------------------
     def _commit(
@@ -718,25 +825,6 @@ class Table:
             )
         return self._commit(operation, added, removed_paths=set(removed_paths))
 
-    def _materialize_row_ids(self, df: DataFrame, files: list[DataFileEntry]) -> DataFrame:
-        """Resolve each row's stable ``_row_id`` (Iceberg v3 row lineage)
-        into a physical ``__row_id`` column and drop the lineage columns —
-        the shape a lineage-PRESERVING rewrite writes back out, so ids
-        survive compaction. ``df`` must come from a ``keep_lineage=True``
-        read. Pre-lineage files resolve to NULL (ids were never assigned;
-        inventing them here would collide with the table counter)."""
-        frid = [(f.path, f.first_row_id) for f in files]
-        m = self.spark.createDataFrame(frid or [], "__mrid_path string, __frid long")
-        return (
-            df.withColumn("__p", F.regexp_replace("__file", "^file:/+", "/"))
-            .join(F.broadcast(m), F.col("__p") == F.col("__mrid_path"), "left")
-            .withColumn(
-                "__row_id",
-                F.coalesce(F.col("__row_id"), F.col("__frid") + F.col("__pos")),
-            )
-            .drop("__file", "__pos", "__p", "__mrid_path", "__frid")
-        )
-
     def rewrite_data_files(
         self,
         target_num_files: int = 1,
@@ -769,9 +857,7 @@ class Table:
         # lineage-preserving rewrite: carry each row's _row_id through the
         # compaction as a materialized column (Iceberg v3 requires ids to
         # survive rewrites)
-        df = self._materialize_row_ids(
-            self._read_files_with_deletes(files, deletes, keep_lineage=True), files
-        )
+        df = self._read_with_row_ids(files, deletes)
         data_dir = os.path.join(self.location, "data", "compact-" + uuid.uuid4().hex[:12])
         if sort_by:
             out = df.repartitionByRange(target_num_files, *sort_by).sortWithinPartitions(
@@ -866,9 +952,9 @@ class Table:
             data_dir = os.path.join(
                 self.location, "data", "binpack-" + uuid.uuid4().hex[:12]
             )
-            self._materialize_row_ids(
-                self._read_files_with_deletes(group, deletes, keep_lineage=True), group
-            ).coalesce(1).write.mode("errorifexists").parquet(data_dir)
+            self._read_with_row_ids(group, deletes).coalesce(1).write.mode(
+                "errorifexists"
+            ).parquet(data_dir)
             entries = scan_parquet_footers(data_dir, self.spark)
             for e in entries:
                 e.partition = dict(group[0].partition)
@@ -892,11 +978,7 @@ class Table:
         if not deletes:
             return (0, 0)
         files = self._resolve_manifest(snap)
-        live = [
-            d
-            for d in deletes
-            if any(d.get("seq") is None or f.seq < d["seq"] for f in files)
-        ]
+        live = [d for d in deletes if any(f.seq < d["seq"] for f in files)]
         if len(live) == len(deletes):
             return (0, len(deletes))
         self._commit(
@@ -909,13 +991,11 @@ class Table:
         vector-style entry (Iceberg v3's direction: one consolidated
         delete structure instead of a pile of per-commit delete files).
 
-        Every scan pays one broadcast anti-join PER position entry; after
-        N positional deletes that is N joins of N small files. This
-        maintenance op reads the pending entries once, unions their
-        (file_path, pos) pairs, drops pairs whose target file is no
-        longer live (dead weight), repartitions by file_path (per-target
-        locality, the row-group shape a DV reader wants) and registers the
-        single merged entry — scans drop from N anti-joins to 1.
+        Scans already apply all position entries as one anti-join, but
+        each entry is one more delete directory to list and read. This
+        op unions their (file_path, pos) pairs, drops pairs whose target
+        file is no longer live (dead weight), repartitions by file_path
+        (the row-group shape a DV reader wants) and registers one entry.
 
         Sequence safety: a position pair names an immutable (uuid-pathed)
         file, so pairs can never match rows newer than their entry — the
@@ -953,7 +1033,7 @@ class Table:
                 {
                     "kind": "position",
                     "path": dv_dir,
-                    "seq": max(d.get("seq", 0) for d in pos_entries),
+                    "seq": max(d["seq"] for d in pos_entries),
                 }
             )
         self._commit(
@@ -1018,20 +1098,11 @@ class Table:
                 pos.groupBy("__file").agg(F.collect_list("bit").alias("bits")).collect()
             )
 
-        # file_path in lineage is a URI (file:/... or file:///...);
-        # manifest paths are plain absolute paths
-        def norm(p: str) -> str:
-            if p.startswith("file:"):
-                p = p[5:]
-                while p.startswith("//"):
-                    p = p[1:]
-            return p
-
-        bitmaps = {norm(r["__file"]): sorted(r["bits"]) for r in per_file}
+        bitmaps = {r["__file"]: sorted(r["bits"]) for r in per_file}
         for e in entries:
             # a file with no rows gets the all-zeros bitmap: every probe
             # misses, so empty part files prune away for free
-            bm = bitmaps.get(e.path, [] if e.record_count == 0 else None)
+            bm = bitmaps.get(plain_path(e.path), [] if e.record_count == 0 else None)
             if bm is None:
                 continue
             packed = bytearray(bits // 8)
@@ -1232,10 +1303,7 @@ class Table:
         # lets changelog(compute_updates=True) pair pre/post images. The
         # __row_id column rides through the caller's transform (filters /
         # withColumn assignments touch data columns only).
-        src = self._materialize_row_ids(
-            self._read_files_with_deletes(rewritten, deletes, keep_lineage=True),
-            rewritten,
-        )
+        src = self._read_with_row_ids(rewritten, deletes)
         out = transform(src)
         data_dir = os.path.join(self.location, "data", f"{operation}-" + uuid.uuid4().hex[:12])
         out.write.mode("errorifexists").parquet(data_dir)
@@ -1280,9 +1348,15 @@ class Table:
         """Merge-on-read DELETE by key set (Iceberg equality-delete files):
         the key DataFrame is written as a delete file and scans anti-join
         it. The delete file shuffles O(deleted keys), never the table —
-        at 100 TB deleting a million doc ids writes one small parquet."""
+        at 100 TB deleting a million doc ids writes one small parquet.
+
+        Keys follow SQL ``IN`` semantics: a key with a NULL component
+        deletes nothing, so such rows are dropped here (scans match
+        equality keys null-safely, as the Iceberg spec requires)."""
         delete_dir = os.path.join(self.location, "deletes", uuid.uuid4().hex[:12])
-        keys.write.mode("errorifexists").parquet(delete_dir)
+        keys.select(
+            *[F.col(c).cast(self.schema[c].dataType).alias(c) for c in keys.columns]
+        ).na.drop(how="any").write.mode("errorifexists").parquet(delete_dir)
         return self._commit(
             "delete-mor",
             [],
@@ -1314,12 +1388,10 @@ class Table:
         # subsets applied — already-dead rows aren't re-listed, and rows
         # in files newer than an old delete are still eligible
         src = self._read_files_with_deletes(candidates, deletes, keep_lineage=True)
+        # __file is the plain registered-entry path, so exported delete
+        # files match the exported manifests
         positions = src.filter(F.coalesce(F.expr(condition), F.lit(False))).select(
-            # store the canonical plain path (strip the 'file:' scheme
-            # _metadata.file_path renders) — the registered-entry form,
-            # so exported delete files match the exported manifests
-            F.regexp_replace(F.col("__file"), r"^file:/+", "/").alias("file_path"),
-            F.col("__pos").alias("pos"),
+            F.col("__file").alias("file_path"), F.col("__pos").alias("pos")
         )
         delete_dir = os.path.join(self.location, "deletes", uuid.uuid4().hex[:12])
         positions.write.mode("errorifexists").parquet(delete_dir)
@@ -1483,7 +1555,9 @@ class Table:
                             f"by field id nor by name (missing {absent})"
                         )
                     parts.append(
-                        self.spark.read.parquet(p).select(*key_cols)
+                        self.spark.read.parquet(p).select(
+                            *[F.col(c).cast(self.schema[c].dataType) for c in key_cols]
+                        )
                     )
             eq_src = parts[0]
             for extra in parts[1:]:
@@ -1561,10 +1635,7 @@ class Table:
         head = self._branch_head(branch)
         cur = self._select_snapshot(head, None)
         deletes = self._resolve_deletes(cur) if cur is not None else []
-        removed = {
-            os.path.abspath(re.sub(r"^file:/+", "/", str(p)))
-            for p in removed_paths
-        }
+        removed = {plain_path(str(p)) for p in removed_paths}
         kept, dropped = [], []
         for d in deletes:
             root = d.get("path")
@@ -2273,21 +2344,9 @@ class Table:
                 f"cherrypick supports append snapshots only, "
                 f"{snapshot_id} is {snap['operation']!r}"
             )
-        if "manifest" in snap:  # legacy inline: diff vs parent
-            by_id = {s["snapshot_id"]: s for s in self.meta["snapshots"]}
-            parent = by_id.get(snap.get("parent_snapshot_id"))
-            parent_paths = (
-                {f.path for f in self._resolve_manifest(parent)} if parent else set()
-            )
-            added = [
-                f for f in self._resolve_manifest(snap) if f.path not in parent_paths
-            ]
-        else:
-            with open(self._manifest_file(snap)) as fh:
-                added = [
-                    DataFileEntry.from_json(d)
-                    for d in json.load(fh).get("added", ())
-                ]
+        added = [
+            DataFileEntry.from_json(d) for d in self._snapshot_delta(snap).get("added", ())
+        ]
         current = {f.path for f in self.snapshot_files()}
         added = [f for f in added if f.path not in current]  # idempotent replay
         if not added:  # everything already on the head: no no-op snapshot
@@ -2403,18 +2462,9 @@ class Table:
                     f"incremental scan range contains non-append commit "
                     f"{cur['snapshot_id']} ({cur['operation']})"
                 )
-            if "manifest" in cur:  # legacy inline manifest: diff vs parent
-                parent = by_id.get(cur.get("parent_snapshot_id"))
-                parent_paths = (
-                    {f.path for f in self._resolve_manifest(parent)} if parent else set()
-                )
-                added.extend(
-                    f for f in self._resolve_manifest(cur) if f.path not in parent_paths
-                )
-            else:
-                with open(self._manifest_file(cur)) as fh:
-                    delta = json.load(fh)
-                added.extend(DataFileEntry.from_json(f) for f in delta.get("added", ()))
+            added.extend(
+                DataFileEntry.from_json(f) for f in self._snapshot_delta(cur).get("added", ())
+            )
             parent_id = cur.get("parent_snapshot_id")
             if parent_id is None:
                 raise ValueError(
@@ -2464,9 +2514,7 @@ class Table:
         # the same rows to both sides — skip it; anything else is diffed
         def _applicable(f, deletes):
             return tuple(
-                json.dumps(d, sort_keys=True)
-                for d in deletes
-                if d.get("seq") is None or f.seq < d["seq"]
+                json.dumps(d, sort_keys=True) for d in deletes if f.seq < d["seq"]
             )
 
         common = {
@@ -2490,11 +2538,7 @@ class Table:
 
         data_cols = [f.name for f in self.schema.fields]
         def _with_ids(files_list, dels):
-            df = self._materialize_row_ids(
-                self._read_files_with_deletes(files_list, dels, keep_lineage=True),
-                files_list,
-            )
-            return df.select(*data_cols, "__row_id")
+            return self._read_with_row_ids(files_list, dels).select(*data_cols, "__row_id")
 
         old_r, new_r = _with_ids(changed_old, old_deletes), _with_ids(changed_new, new_deletes)
         # rows the other side also has with the SAME id and data are not
@@ -2609,9 +2653,10 @@ class Table:
 
         ``metadata_columns`` appends Iceberg's hidden metadata columns:
         ``_file``/``_pos`` (Spark's file metadata struct — free) and
-        ``_spec_id``/``_partition`` (a broadcast join of the manifest's
-        per-file entries on ``_file``; O(files) build side, the data
-        never shuffles)."""
+        ``_spec_id``/``_partition``/``_row_id``/
+        ``_last_updated_sequence_number`` (a broadcast join of the
+        manifest's per-file entries; O(files) build side, the data never
+        shuffles)."""
         if ref is not None:
             if snapshot_id is not None:
                 raise ValueError("pass either ref or snapshot_id, not both")
@@ -2642,42 +2687,18 @@ class Table:
         if filter is not None:
             df = df.filter(filter)
         if metadata_columns:
-            # join on the NORMALIZED plain path: lineage's _metadata
-            # file_path is a URI that renders file:/... or file:///...
-            # depending on the filesystem (same variance _attach_blooms'
-            # norm() handles); manifest paths are plain
-            meta_rows = [
-                (
-                    f.path,
-                    f.spec_id if f.spec_id is not None else 0,
-                    json.dumps(f.partition, sort_keys=True, default=str)
-                    if f.partition
-                    else "{}",
-                    f.first_row_id,
-                    f.seq,
-                )
-                for f in files
-            ]
-            meta_df = self.spark.createDataFrame(
-                meta_rows or [],
-                "_file string, _spec_id int, _partition string, "
-                "_first_row_id long, _last_updated_sequence_number long",
-            )
-            df = (
-                df.withColumn(
-                    "_file", F.regexp_replace("__file", "^file:/+", "/")
-                )
-                .drop("__file")
-                .withColumnRenamed("__pos", "_pos")
-                .join(F.broadcast(meta_df), "_file", "left")
-                # row lineage (Iceberg v3): fresh files derive ids from
-                # their manifest block; compacted files carry them
-                # materialized; pre-lineage files expose NULL
-                .withColumn(
-                    "_row_id",
-                    F.coalesce(F.col("__row_id"), F.col("_first_row_id") + F.col("_pos")),
-                )
-                .drop("__row_id", "_first_row_id")
+            # row lineage (Iceberg v3): fresh files derive ids from their
+            # manifest block; compacted files carry them materialized;
+            # pre-lineage files expose NULL
+            df = df.withColumnsRenamed(
+                {
+                    "__file": "_file",
+                    "__pos": "_pos",
+                    "__row_id": "_row_id",
+                    "__data_seq": "_last_updated_sequence_number",
+                    "__spec_id": "_spec_id",
+                    "__partition": "_partition",
+                }
             )
         return df
 
@@ -2687,44 +2708,63 @@ class Table:
         deletes: list[dict],
         keep_lineage: bool = False,
     ) -> DataFrame:
-        """Read files with MOR deletes applied under Iceberg v2 sequence
-        semantics: a delete entry applies only to files whose data sequence
-        is strictly LOWER than the delete's commit sequence. Files are
-        grouped by which delete subset applies (the group count is bounded
-        by commits since the last compaction, not by file count) — each
-        group is one vectorized scan with its deletes, unioned by name, so
-        pushdown and pruning still reach every branch. Legacy delete
-        entries without a sequence apply to every file (old behavior).
-        ``keep_lineage`` returns the ``__file``/``__pos`` columns on every
-        row (position-delete generation needs them)."""
-        if not files or not deletes:
-            return self._read_files(files, with_lineage=keep_lineage)
-
-        def applicable(f: DataFileEntry) -> tuple[int, ...]:
-            return tuple(
-                i
-                for i, d in enumerate(deletes)
-                if d.get("seq") is None or f.seq < d["seq"]
+        """Read files with MOR delete entries applied by ``apply_deletes``.
+        ``keep_lineage`` adds each row's ``__file``/``__pos``, its stable
+        ``__row_id`` (Iceberg v3: the materialized id, else first_row_id +
+        pos; NULL for pre-lineage files) and its file's ``__data_seq``/
+        ``__spec_id``/``__partition``, from one broadcast frame of the
+        manifest entries whose ``__data_seq`` also serves the deletes."""
+        if not deletes and not keep_lineage:
+            return self._read_files(files)
+        seqs = {plain_path(f.path): f.seq for f in files}
+        entries = [
+            RowDelete(
+                d["kind"], d["seq"], d.get("expr"), d.get("path"), tuple(d.get("key_cols", ()))
             )
+            for d in deletes
+        ]
+        dels = live_deletes(entries, seqs)
+        if not keep_lineage:
+            lineage = any(d.kind == "position" or d.seq is not None for d in dels)
+            df = apply_deletes(self._read_files(files, with_lineage=lineage), dels, seqs)
+            return df.drop("__file", "__pos", "__row_id") if lineage else df
+        meta = local_frame(
+            self.spark,
+            [
+                (
+                    plain_path(f.path),
+                    f.seq,
+                    f.first_row_id,
+                    f.spec_id if f.spec_id is not None else 0,
+                    json.dumps(f.partition, sort_keys=True, default=str)
+                    if f.partition
+                    else "{}",
+                )
+                for f in files
+            ],
+            "__mfile string, __data_seq long, __frid long, __spec_id int, "
+            "__partition string",
+        )
+        df = (
+            self._read_files(files, with_lineage=True)
+            .join(F.broadcast(meta), F.col("__file") == F.col("__mfile"))
+            .withColumn(
+                "__row_id",
+                F.coalesce(F.col("__row_id"), F.col("__frid") + F.col("__pos")),
+            )
+            .drop("__mfile", "__frid")
+        )
+        return apply_deletes(df, dels, seqs)
 
-        groups: dict[tuple[int, ...], list[DataFileEntry]] = {}
-        for f in files:
-            groups.setdefault(applicable(f), []).append(f)
-        parts = []
-        for idxs, fl in sorted(groups.items()):
-            ds = [deletes[i] for i in idxs]
-            # positional entries anti-join on (file, row-ordinal) lineage;
-            # attach it only when needed and strip it after (unless the
-            # caller asked to keep it)
-            lineage = keep_lineage or any(d["kind"] == "position" for d in ds)
-            part = self._apply_deletes(self._read_files(fl, with_lineage=lineage), ds)
-            if lineage and not keep_lineage:
-                part = part.drop("__file", "__pos", "__row_id")
-            parts.append(part)
-        out = parts[0]
-        for part in parts[1:]:
-            out = out.unionByName(part)
-        return out
+    def _read_with_row_ids(
+        self, files: list[DataFileEntry], deletes: list[dict]
+    ) -> DataFrame:
+        """Live rows plus ``__row_id``: the shape a lineage-PRESERVING
+        rewrite writes back out, so ids survive compaction (pre-lineage
+        rows keep NULL; inventing ids would collide with the counter)."""
+        return self._read_files_with_deletes(files, deletes, keep_lineage=True).drop(
+            "__file", "__pos", "__data_seq", "__spec_id", "__partition"
+        )
 
     def _read_files(
         self, files: list[DataFileEntry], with_lineage: bool = False
@@ -2743,9 +2783,10 @@ class Table:
         per distinct signature (normally 1, or 2 spanning a promotion),
         unioned by name. Pushdown/pruning apply per group as usual.
 
-        ``with_lineage`` appends ``__file``/``__pos`` columns (Spark's
-        ``_metadata.file_path``/``row_index``) — the row identity that
-        positional delete files reference."""
+        ``with_lineage`` appends ``__file``/``__pos`` columns (the plain
+        path of ``_metadata.file_path``, and ``row_index``) — the row
+        identity that positional delete files reference — and the
+        materialized ``__row_id`` (NULL where the file has none)."""
         if not files:
             schema = self.schema
             if with_lineage:
@@ -2830,7 +2871,7 @@ class Table:
                     cols.append(f"CAST(`{disk}` AS {target}) AS `{f.name}`")
             if with_lineage:
                 cols += [
-                    "_metadata.file_path AS `__file`",
+                    f"{LINEAGE_FILE} AS `__file`",
                     "_metadata.row_index AS `__pos`",
                     "`__row_id`" if has_rowid else "CAST(NULL AS BIGINT) AS `__row_id`",
                 ]
@@ -2842,19 +2883,14 @@ class Table:
 
     # -- metadata tables ---------------------------------------------------
     def snapshots_df(self) -> DataFrame:
-        def _counts(s: dict) -> tuple[int, int]:
-            if "n_files" in s:  # delta-commit records carry their summary
-                return s["n_files"], s["n_records"]
-            files = self._resolve_manifest(s)  # legacy inline manifests
-            return len(files), int(sum(f.record_count for f in files))
-
         rows = [
             (
                 s["snapshot_id"],
                 s["parent_snapshot_id"],
                 s["timestamp_ms"],
                 s["operation"],
-                *_counts(s),
+                s["n_files"],
+                s["n_records"],
             )
             for s in self.meta["snapshots"]
         ]
@@ -2884,8 +2920,6 @@ class Table:
         commits stay O(delta)). Driver-side over O(snapshots) records."""
         rows = []
         for s in self.meta["snapshots"]:
-            if "manifest_file" not in s:
-                continue  # legacy inline manifest
             path = self._manifest_file(s)
             try:
                 size = os.path.getsize(path)
@@ -2936,10 +2970,7 @@ class Table:
 
     def _snapshot_delta(self, snap: dict) -> dict:
         """The raw per-commit delta record (added / removed_paths /
-        added_deletes), normalizing legacy inline manifests to a full
-        delta. Metadata-sized: one small JSON per commit."""
-        if "manifest" in snap:  # legacy inline full manifest (pre-sharding)
-            return {"added": snap["manifest"], "removed_paths": [], "full": True}
+        added_deletes). Metadata-sized: one small JSON per commit."""
         with open(self._manifest_file(snap)) as fh:
             return json.load(fh)
 

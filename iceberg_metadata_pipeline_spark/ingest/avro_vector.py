@@ -31,7 +31,9 @@ remains the semantic oracle.
 Timestamps: the row-oriented reference path renders TimestampType as
 naive *session-local* datetimes before encoding. To stay byte-identical,
 tz-aware Arrow timestamps are converted with ``local_timestamp`` on
-encode and re-attached with ``assume_timezone`` on decode.
+encode. Decode yields tz-naive ``timestamp('us')`` columns and attaches
+no zone: Spark reads them in the session time zone, which ``session.py``
+pins to UTC.
 """
 
 from __future__ import annotations

@@ -342,17 +342,8 @@ class PyAvroStreamReader(DataSourceStreamReader):
 
     def __init__(self, schema: StructType, options):
         self.path = _local(options["path"])
+        self.schema = schema
         self.names = [f.name for f in schema.fields]
-        # logical types recovered from the declared Spark schema (files
-        # may not exist yet when the stream starts)
-        self.logical = {
-            f.name: {
-                "date": "date",
-                "timestamp": "timestamp-micros",
-                "timestamp_ntz": "timestamp-micros",
-            }.get(f.dataType.simpleString())
-            for f in schema.fields
-        }
 
     def _files(self) -> list[str]:
         return _list_avro(self.path)
@@ -370,17 +361,28 @@ class PyAvroStreamReader(DataSourceStreamReader):
     def read(self, partition: AvroFilePartition):
         from iceberg_metadata_pipeline_spark.ingest import avro_vector
 
+        # the batch reader's check_schema_match, against the DECLARED
+        # schema (a stream has no first file): same names in the same
+        # order with the same types, else refuse rather than project
+        header, _, _ = avro_io.read_container(partition.path, header_only=True)
+        actual = [(f.name, f.dataType) for f in avro_schema_to_spark(header).fields]
+        declared = [(f.name, f.dataType) for f in self.schema.fields]
+        if actual != declared:
+            raise ValueError(
+                f"avro schema mismatch in {partition.path}: file schema "
+                f"{actual} != declared stream schema {declared}; refusing "
+                "to project silently"
+            )
         try:
             _, _, batch = avro_vector.read_ocf_arrow(partition.path)
-            # column order per the DECLARED schema (the batch reader gets
-            # this from check_schema_match; a stream has no first-file)
-            yield batch.select(self.names)
+            yield batch
             return
-        except (ValueError, KeyError):
+        except ValueError:
             pass
+        logical = {f["name"]: _branch(f["type"])[1] for f in header["fields"]}
         _, _, records = avro_io.read_container(partition.path)
         for rec in records:
-            yield _decode_record(rec, self.names, self.logical)
+            yield _decode_record(rec, self.names, logical)
 
     def commit(self, end: dict) -> None:
         pass  # offsets live in the query checkpoint; nothing to retire

@@ -122,57 +122,3 @@ def xxh64(
     h = h ^ (h >> _U64(32))
     return h
 
-
-def xxh64_scalar(data: bytes, seed: int = 42) -> int:
-    """Per-spec scalar reference (test oracle for the vector form)."""
-    P1, P2, P3 = 0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9
-    P4, P5 = 0x85EBCA77C2B2AE63, 0x27D4EB2F165667C5
-    M = (1 << 64) - 1
-
-    def rotl(x, r):
-        return ((x << r) | (x >> (64 - r))) & M
-
-    ln = len(data)
-    p = 0
-    if ln >= 32:
-        a1 = (seed + P1 + P2) & M
-        a2 = (seed + P2) & M
-        a3 = seed & M
-        a4 = (seed - P1) & M
-        while p + 32 <= ln:
-            for i, a in enumerate((a1, a2, a3, a4)):
-                k = int.from_bytes(data[p + 8 * i : p + 8 * i + 8], "little")
-                a = rotl((a + k * P2) & M, 31) * P1 & M
-                if i == 0:
-                    a1 = a
-                elif i == 1:
-                    a2 = a
-                elif i == 2:
-                    a3 = a
-                else:
-                    a4 = a
-            p += 32
-        h = (rotl(a1, 1) + rotl(a2, 7) + rotl(a3, 12) + rotl(a4, 18)) & M
-        for a in (a1, a2, a3, a4):
-            h = ((h ^ (rotl((a * P2) & M, 31) * P1 & M)) * P1 + P4) & M
-    else:
-        h = (seed + P5) & M
-    h = (h + ln) & M
-    while p + 8 <= ln:
-        k = int.from_bytes(data[p : p + 8], "little")
-        k = (rotl((k * P2) & M, 31) * P1) & M
-        h = (rotl(h ^ k, 27) * P1 + P4) & M
-        p += 8
-    if p + 4 <= ln:
-        k = int.from_bytes(data[p : p + 4], "little")
-        h = (rotl(h ^ ((k * P1) & M), 23) * P2 + P3) & M
-        p += 4
-    while p < ln:
-        h = (rotl(h ^ ((data[p] * P5) & M), 11) * P1) & M
-        p += 1
-    h ^= h >> 33
-    h = (h * P2) & M
-    h ^= h >> 29
-    h = (h * P3) & M
-    h ^= h >> 32
-    return h

@@ -85,13 +85,8 @@ def _added_files_between(
                 f"streaming read hit non-append commit {snap['snapshot_id']} "
                 f"({snap['operation']}); set skip-non-append-snapshots=true to skip"
             )
-        if "manifest" in snap:  # legacy inline manifest: diff vs parent
-            parent = by_id.get(snap.get("parent_snapshot_id"))
-            parent_paths = {f["path"] for f in parent["manifest"]} if parent else set()
-            added.extend(f for f in snap["manifest"] if f["path"] not in parent_paths)
-        else:
-            with open(os.path.join(location, "metadata", snap["manifest_file"])) as fh:
-                added.extend(json.load(fh).get("added", ()))
+        with open(os.path.join(location, "metadata", snap["manifest_file"])) as fh:
+            added.extend(json.load(fh).get("added", ()))
     return added
 
 

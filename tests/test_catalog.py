@@ -1847,3 +1847,135 @@ def test_branch_write_preserves_created_ms(spark, catalog):
     assert t.meta["refs"]["b"]["created_ms"] == born
     row = {r["name"]: r["created_ms"] for r in t.refs_df().collect()}
     assert row["b"] == born
+
+
+def _plan_node_counts(df) -> tuple[int, int]:
+    """(parquet scans, LEFT ANTI joins) in ``df``'s physical plan, taken
+    before execution (an executed adaptive plan also prints its initial
+    plan)."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.count("FileScan parquet"), plan.count("LeftAnti")
+
+
+def test_mor_read_plan_size_independent_of_history(spark, catalog):
+    """Six MOR rounds mixing predicate, equality and position deletes:
+    the read plan holds one parquet scan for the data (one schema
+    signature), one scan per delete-file shape, one Filter for every
+    predicate delete and one anti-join per delete shape — however many
+    delete commits there were. Rows match a Python model of the same
+    history, including the sequence rule (new copies and inserted rows
+    are exempt from older deletes)."""
+    df = spark.createDataFrame(
+        [(i, i, "a" if i % 2 == 0 else "b") for i in range(200)],
+        "id long, v long, tag string",
+    )
+    t = catalog.create_table("nyc", "morshape", df.schema)
+    t.append_dataframe(df.repartition(3))
+    model = {i: (i, "a" if i % 2 == 0 else "b") for i in range(200)}
+
+    t.update_set_mor("id % 7 = 1", {"v": "v + 100"})
+    model.update({i: (v + 100, g) for i, (v, g) in model.items() if i % 7 == 1})
+    t.delete_keys_mor(spark.createDataFrame([(3,), (4,)], "id long"))
+    for i in (3, 4):
+        model.pop(i)
+    t.delete_where_positional("id % 11 = 5")
+    model = {i: r for i, r in model.items() if i % 11 != 5}
+    t.merge_into_mor(
+        spark.createDataFrame([(8, 999, "c"), (500, 5, "c")], "id long, v long, tag string"),
+        on=["id"],
+        when_matched_set={"v": "src_v"},
+    )
+    model[8] = (999, "a")
+    model[500] = (5, "c")
+    t.delete_where_mor("tag = 'b' AND id > 150")
+    model = {i: r for i, r in model.items() if not (r[1] == "b" and i > 150)}
+    t.delete_keys_mor(spark.createDataFrame([(20,), (500,)], "id long"))
+    t.delete_where_positional("id = 30")
+    for i in (20, 500, 30):
+        model.pop(i)
+
+    kinds = sorted(d["kind"] for d in t._resolve_deletes(t.current_snapshot))
+    assert kinds == ["equality"] * 3 + ["position"] * 2 + ["predicate"] * 2
+    scan = t.scan()
+    # data files, position-delete files, equality-delete files; one join
+    # per delete shape. (The optimizer may split the one predicate Filter
+    # across the plan, so that is counted as built.)
+    assert _plan_node_counts(scan) == (3, 2)
+    assert scan._jdf.queryExecution().analyzed().toString().count("Filter") == 1
+    assert {r["id"]: (r["v"], r["tag"]) for r in scan.collect()} == model
+
+
+def test_mor_null_equality_keys(spark, catalog, tmp_path):
+    """SQL ``DELETE … WHERE k IN (SELECT …)`` with a NULL in the subquery
+    and NULL-key rows in the table keeps the NULL-key rows, as DuckDB
+    does (a NULL key deletes nothing under IN semantics). A foreign
+    equality delete carrying a NULL key removes the NULL-key rows: the
+    Iceberg spec matches equality deletes null-safely."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from iceberg_metadata_pipeline_spark.catalog.sqlfront import catalog_sql
+
+    rows = [(1, "a"), (2, "b"), (None, "n1"), (3, "c"), (None, "n2")]
+    keys = [(2,), (None,)]
+    t = catalog.create_table(
+        "nyc", "nullk", spark.createDataFrame(rows, "k long, s string").schema
+    )
+    t.append_dataframe(spark.createDataFrame(rows, "k long, s string"))
+    kt = catalog.create_table("nyc", "nullkeys", spark.createDataFrame(keys, "k long").schema)
+    kt.append_dataframe(spark.createDataFrame(keys, "k long"))
+    stmt = "DELETE FROM nyc.nullk WHERE k IN (SELECT k FROM nyc.nullkeys)"
+    catalog_sql(catalog, stmt)
+    got = sorted(
+        (r["k"] is None, r["k"], r["s"])
+        for r in catalog_sql(catalog, "SELECT k, s FROM nyc.nullk").collect()
+    )
+
+    con = duckdb.connect()
+    con.execute("CREATE SCHEMA nyc")
+    con.execute("CREATE TABLE nyc.nullk (k BIGINT, s VARCHAR)")
+    con.executemany("INSERT INTO nyc.nullk VALUES (?, ?)", rows)
+    con.execute("CREATE TABLE nyc.nullkeys (k BIGINT)")
+    con.executemany("INSERT INTO nyc.nullkeys VALUES (?)", keys)
+    con.execute(stmt)
+    want = sorted(
+        (k is None, k, s) for k, s in con.execute("SELECT k, s FROM nyc.nullk").fetchall()
+    )
+    assert got == want
+    assert [s for null, _, s in got if null] == ["n1", "n2"]
+
+    path = str(tmp_path / "eq-null.parquet")
+    pq.write_table(pa.table({"k": pa.array([None, 3], pa.int64())}), path)
+    t.refresh().add_foreign_delete_files([], [(["k"], [path])])
+    assert sorted(r["s"] for r in t.refresh().scan().collect()) == ["a"]
+
+
+def test_cow_update_after_mor_delete_respects_sequences(spark, catalog):
+    """A copy-on-write UPDATE after a merge-on-read delete rewrites only
+    the files it touches. The rewritten files get a higher sequence, so
+    the pending delete no longer applies to them, even where the update
+    makes rows match it; carried-over files keep their sequence and stay
+    subject to it."""
+    schema = "id long, v long"
+    t = catalog.create_table("nyc", "cowmor", spark.createDataFrame([], schema).schema)
+    t.append_dataframe(spark.createDataFrame([(i, i % 3) for i in range(10)], schema))
+    t.append_dataframe(
+        spark.createDataFrame([(i, i % 3) for i in range(100, 110)], schema).coalesce(1)
+    )
+    t.delete_where_mor("v = 0")
+    (dseq,) = [d["seq"] for d in t._resolve_deletes(t.current_snapshot)]
+    old = {f.path: f.seq for f in t.snapshot_files()}
+
+    t.update_set("id < 50", {"v": "0"})
+    files = t.snapshot_files()
+    carried = [f for f in files if f.path in old]
+    rewritten = [f for f in files if f.path not in old]
+    assert carried and rewritten
+    assert all(f.seq < dseq for f in carried)
+    assert all(f.seq > dseq for f in rewritten)
+    assert [d["seq"] for d in t._resolve_deletes(t.current_snapshot)] == [dseq]
+    got = sorted((r["id"], r["v"]) for r in t.scan().collect())
+    assert got == [(i, 0) for i in range(10) if i % 3] + [
+        (i, i % 3) for i in range(100, 110) if i % 3
+    ]

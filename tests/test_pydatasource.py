@@ -151,6 +151,34 @@ def test_stream_read_write_and_resume(registered, tmp_path):
     assert glob.glob(out + "/_tmp*") == []
 
 
+def test_stream_refuses_drifted_file_type(registered, tmp_path):
+    """The stream reader checks every file against the declared schema,
+    as the batch reader checks against the first file: a second file
+    with the same column names but a drifted type fails the query
+    instead of yielding the file's own types."""
+    spark = registered
+    src = str(tmp_path / "src")
+    spark.range(3).selectExpr("id", "CONCAT('a', id) AS s").repartition(
+        1
+    ).write.format("pyavro").mode("append").save(src)
+    spark.range(3, 6).selectExpr(
+        "CAST(id AS INT) AS id", "CONCAT('b', id) AS s"
+    ).repartition(1).write.format("pyavro").mode("append").save(src)
+    assert len(glob.glob(src + "/part-*.avro")) == 2
+    q = (
+        spark.readStream.format("pyavro")
+        .schema("id BIGINT, s STRING")
+        .load(src)
+        .writeStream.format("pyavro")
+        .option("path", str(tmp_path / "out"))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    with pytest.raises(Exception, match="schema mismatch"):
+        q.awaitTermination(120)
+
+
 def test_sql_using_pyavro(registered, tmp_path):
     """The format name also works from SQL (CREATE TABLE ... USING)."""
     spark = registered
