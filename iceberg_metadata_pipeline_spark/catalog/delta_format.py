@@ -1791,6 +1791,7 @@ def _live_rows_dataframe(spark: SparkSession, state: DeltaTableState):
         LINEAGE_FILE,
         RowDelete,
         apply_deletes,
+        local_frame,
         plain_path,
     )
 
@@ -1886,7 +1887,8 @@ def _live_rows_dataframe(spark: SparkSession, state: DeltaTableState):
             F.col("__pos"),
         )
     if state.partition_columns:
-        pmap = spark.createDataFrame(
+        pmap = local_frame(
+            spark,
             [
                 (plain_path(abs_of[p]),)
                 + tuple(

@@ -2472,7 +2472,8 @@ def _live_rows_dataframe(
             tuple([plain_path(f.path)] + [c in have[f.path] for c in dcols])
             for f in info.files
         ]
-        flags = spark.createDataFrame(
+        flags = local_frame(
+            spark,
             flag_rows,
             ", ".join(["__file string"] + [f"__has_{i} boolean" for i in range(len(dcols))]),
         )

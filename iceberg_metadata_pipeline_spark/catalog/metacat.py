@@ -1352,17 +1352,22 @@ class Table:
 
         Keys follow SQL ``IN`` semantics: a key with a NULL component
         deletes nothing, so such rows are dropped here (scans match
-        equality keys null-safely, as the Iceberg spec requires)."""
+        equality keys null-safely, as the Iceberg spec requires). When no
+        key survives, no delete entry is committed: every later scan would
+        list and read an empty delete file until compaction."""
         delete_dir = os.path.join(self.location, "deletes", uuid.uuid4().hex[:12])
         keys.select(
             *[F.col(c).cast(self.schema[c].dataType).alias(c) for c in keys.columns]
         ).na.drop(how="any").write.mode("errorifexists").parquet(delete_dir)
+        has_rows = _has_rows(delete_dir)
         return self._commit(
             "delete-mor",
             [],
-            added_deletes=[
-                {"kind": "equality", "path": delete_dir, "key_cols": list(keys.columns)}
-            ],
+            added_deletes=(
+                [{"kind": "equality", "path": delete_dir, "key_cols": list(keys.columns)}]
+                if has_rows
+                else []
+            ),
             branch=branch,
         )
 
@@ -1395,7 +1400,7 @@ class Table:
         )
         delete_dir = os.path.join(self.location, "deletes", uuid.uuid4().hex[:12])
         positions.write.mode("errorifexists").parquet(delete_dir)
-        has_rows = bool(scan_parquet_footers(delete_dir))
+        has_rows = _has_rows(delete_dir)
         return self._commit(
             "delete-mor",
             [],
@@ -1463,7 +1468,7 @@ class Table:
                 self.location, "deletes", uuid.uuid4().hex[:12]
             )
             src.write.mode("errorifexists").parquet(delete_dir)
-            if scan_parquet_footers(delete_dir):
+            if _has_rows(delete_dir):
                 entries.append(dict(template, path=delete_dir))
         return self._commit(
             "delete-mor", [], added_deletes=entries, branch=branch
@@ -1491,9 +1496,7 @@ class Table:
                 ).alias("file_path"),
                 F.col("pos").cast("long").alias("pos"),
             )
-            live_df = self.spark.createDataFrame(
-                [(p,) for p in live], "file_path string"
-            )
+            live_df = local_frame(self.spark, [(p,) for p in live], "file_path string")
             bad = (
                 src.join(F.broadcast(live_df), "file_path", "left_anti")
                 .select("file_path")
@@ -1678,7 +1681,7 @@ class Table:
                 self.location, "deletes", uuid.uuid4().hex[:12]
             )
             src.write.mode("errorifexists").parquet(delete_dir)
-            if scan_parquet_footers(delete_dir):
+            if _has_rows(delete_dir):
                 entries.append(dict(template, path=delete_dir))
         return self._commit(
             "delete-maintenance",
@@ -1794,9 +1797,8 @@ class Table:
         new_rows.write.mode("errorifexists").parquet(data_dir)
         delete_dir = os.path.join(self.location, "deletes", uuid.uuid4().hex[:12])
         del_keys.write.mode("errorifexists").parquet(delete_dir)
-        # a match-less merge writes an empty delete dir (no part files);
-        # registering it would make every scan fail schema inference
-        has_delete_rows = bool(scan_parquet_footers(delete_dir))
+        # a match-less merge deletes nothing: no entry for its 0-row file
+        has_delete_rows = _has_rows(delete_dir)
         return self._commit(
             "merge-mor",
             scan_parquet_footers(data_dir, self.spark),
@@ -3696,6 +3698,12 @@ def scan_parquet_footers(
     if spark is not None and len(paths) > cutoff:
         return _scan_footers_distributed(spark, paths)
     return [_footer_entry(p) for p in paths]
+
+
+def _has_rows(root: str) -> bool:
+    """Whether the parquet Spark wrote under ``root`` holds a row (an
+    empty result still writes one 0-row part file)."""
+    return any(e.record_count for e in scan_parquet_footers(root))
 
 
 def _scan_footers_distributed(spark: SparkSession, paths: list[str]) -> list[DataFileEntry]:

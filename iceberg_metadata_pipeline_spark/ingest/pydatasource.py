@@ -21,7 +21,7 @@ format*: after ``register(spark)``,
   the ``DataSourceStreamReader`` plan-partitions variant, not the
   driver-side Simple reader),
 - ``df.writeStream.format("pyavro")`` — streaming sink, one avro file
-  per epoch+task, published only in ``commit``.
+  per epoch and non-empty task, published only in ``commit``.
 
 Scale notes.  Split planning is per-file because an OCF file is the
 self-describing decode unit (header carries the schema; avro is a row
@@ -41,17 +41,11 @@ from __future__ import annotations
 import datetime
 import glob as _glob
 import os
-import uuid
 from dataclasses import dataclass
 
 from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceArrowWriter,
     DataSourceReader,
     DataSourceStreamArrowWriter,
-    DataSourceStreamReader,
-    DataSourceStreamWriter,  # noqa: F401 — kept for API parity/reference
-    DataSourceWriter,  # noqa: F401
     EqualTo,
     GreaterThan,
     GreaterThanOrEqual,
@@ -61,7 +55,6 @@ from pyspark.sql.datasource import (
     IsNull,
     LessThan,
     LessThanOrEqual,
-    WriterCommitMessage,
 )
 from pyspark.sql.types import StructType
 
@@ -72,6 +65,12 @@ from iceberg_metadata_pipeline_spark.ingest.avro_source import (
     _branch,
     avro_schema_to_spark,
     spark_schema_to_avro,
+)
+from iceberg_metadata_pipeline_spark.ingest.datasource_base import (
+    FormatDataSource,
+    StagedArrowWriter,
+    TailingStreamReader,
+    source_path,
 )
 
 _PART_GLOB = "part-*.avro"
@@ -90,10 +89,6 @@ def _list_avro(path: str) -> list[str]:
         for p in _glob.glob(os.path.join(path, "*.avro"))
         if not os.path.basename(p).startswith(("_", "."))
     )
-
-
-def _local(path: str) -> str:
-    return path[len("file:") :] if path.startswith("file:") else path
 
 
 def _decode_record(rec: dict, names: list[str], logical: dict[str, str | None]):
@@ -210,7 +205,7 @@ class PyAvroBatchReader(DataSourceReader):
     reference decoder with the equivalent row predicates."""
 
     def __init__(self, options):
-        self.path = _local(options["path"])
+        self.path = source_path(options)
         files = _list_avro(self.path)
         if not files:
             raise FileNotFoundError(f"no .avro files under {self.path}")
@@ -267,13 +262,7 @@ class PyAvroBatchReader(DataSourceReader):
         return [AvroFilePartition(p) for p in self.files]
 
 
-@dataclass
-class AvroCommit(WriterCommitMessage):
-    tmp_path: str
-    rows: int
-
-
-class PyAvroBatchWriter(DataSourceArrowWriter):
+class PyAvroBatchWriter(StagedArrowWriter):
     """Two-phase commit: tasks write ``_tmp-<uuid>.avro``; only the
     driver-side ``commit`` publishes them as ``part-NNNNN.avro`` (and,
     for overwrite mode, removes prior part files) — a failed or
@@ -283,53 +272,45 @@ class PyAvroBatchWriter(DataSourceArrowWriter):
     and encode them column-wise (ingest/avro_vector.py) — byte-identical
     container output to the previous per-Row ``write_datum`` loop."""
 
+    WRITER = "pyavro writer"
+    SUFFIX = ".avro"
+
     def __init__(self, schema: StructType, options, overwrite: bool):
-        self.dest = _local(options["path"])
-        self.overwrite = overwrite
+        super().__init__(schema, overwrite)
+        self.dest = self.stage_dir = source_path(options)
         self.avro_schema = spark_schema_to_avro(schema)
         os.makedirs(self.dest, exist_ok=True)
 
-    def write(self, iterator):
+    def _write_file(self, table, tmp: str) -> None:
         from iceberg_metadata_pipeline_spark.ingest import avro_vector
 
         plan = avro_vector.compile_plan(self.avro_schema)
         if plan is None:  # spark_schema_to_avro only emits the flat subset
-            raise ValueError(
-                f"pyavro writer: unsupported schema {self.avro_schema}"
+            raise ValueError(f"{self.WRITER}: unsupported schema {self.avro_schema}")
+        bodies = [avro_vector.encode_batch(plan, b)[0] for b in table.to_batches()]
+        avro_vector.write_ocf(tmp, self.avro_schema, bodies, table.num_rows)
+
+    def _commit(self, staged, epoch) -> None:
+        if epoch is None:
+            if self.overwrite:
+                for old in _glob.glob(os.path.join(self.dest, _PART_GLOB)):
+                    os.remove(old)
+            # append mode continues numbering after the existing max part —
+            # renaming onto part-00000 would silently clobber a prior write
+            existing = _glob.glob(os.path.join(self.dest, _PART_GLOB))
+            base = (
+                max(int(os.path.basename(p)[5:10]) for p in existing) + 1
+                if existing
+                else 0
             )
-        bodies, count = [], 0
-        for batch in iterator:
-            body, _ = avro_vector.encode_batch(plan, batch)
-            bodies.append(body)
-            count += batch.num_rows
-        tmp = os.path.join(self.dest, f"_tmp-{uuid.uuid4().hex}.avro")
-        avro_vector.write_ocf(tmp, self.avro_schema, bodies, count)
-        return AvroCommit(tmp_path=tmp, rows=count)
-
-    def commit(self, messages):
-        if self.overwrite:
-            for old in _glob.glob(os.path.join(self.dest, _PART_GLOB)):
-                os.remove(old)
-        # append mode continues numbering after the existing max part —
-        # renaming onto part-00000 would silently clobber a prior write
-        existing = _glob.glob(os.path.join(self.dest, _PART_GLOB))
-        base = (
-            max(int(os.path.basename(p)[5:10]) for p in existing) + 1
-            if existing
-            else 0
-        )
-        for i, m in enumerate(sorted(messages, key=lambda m: m.tmp_path)):
-            os.rename(
-                m.tmp_path, os.path.join(self.dest, f"part-{base + i:05d}.avro")
-            )
-
-    def abort(self, messages):
-        for m in messages:
-            if m is not None and os.path.exists(m.tmp_path):
-                os.remove(m.tmp_path)
+            names = [f"part-{base + i:05d}.avro" for i in range(len(staged))]
+        else:
+            names = [f"part-{epoch:08d}-{i:05d}.avro" for i in range(len(staged))]
+        for (tmp, *_rest), name in zip(staged, names):
+            os.rename(tmp, os.path.join(self.dest, name))
 
 
-class PyAvroStreamReader(DataSourceStreamReader):
+class PyAvroStreamReader(TailingStreamReader):
     """Micro-batch source over an append-only directory.
 
     Offset = ``{"n": <file count>}`` over the name-sorted ``*.avro``
@@ -340,23 +321,19 @@ class PyAvroStreamReader(DataSourceStreamReader):
     executor task (this is the partition-planning reader; the Simple
     variant would funnel every byte through the driver)."""
 
+    OFFSET, INITIAL = "n", 0
+
     def __init__(self, schema: StructType, options):
-        self.path = _local(options["path"])
+        super().__init__(options)
+        self.path = source_path(options)
         self.schema = schema
         self.names = [f.name for f in schema.fields]
 
-    def _files(self) -> list[str]:
-        return _list_avro(self.path)
+    def _backlog(self, pos) -> list:
+        return list(range((pos or 0) + 1, len(_list_avro(self.path)) + 1))
 
-    def initialOffset(self) -> dict:
-        return {"n": 0}
-
-    def latestOffset(self) -> dict:
-        return {"n": len(self._files())}
-
-    def partitions(self, start: dict, end: dict):
-        files = self._files()[start["n"] : end["n"]]
-        return [AvroFilePartition(p) for p in files]
+    def _added(self, lo, hi) -> list:
+        return [AvroFilePartition(p) for p in _list_avro(self.path)[lo:hi]]
 
     def read(self, partition: AvroFilePartition):
         from iceberg_metadata_pipeline_spark.ingest import avro_vector
@@ -384,62 +361,26 @@ class PyAvroStreamReader(DataSourceStreamReader):
         for rec in records:
             yield _decode_record(rec, self.names, logical)
 
-    def commit(self, end: dict) -> None:
-        pass  # offsets live in the query checkpoint; nothing to retire
 
-
-class PyAvroStreamWriter(DataSourceStreamArrowWriter):
+class PyAvroStreamWriter(PyAvroBatchWriter, DataSourceStreamArrowWriter):
     """Streaming sink: per-epoch two-phase commit. Tasks write
     ``_tmp-*``; ``commit(batchId)`` publishes ``part-<epoch>-NNNNN.avro``
     — names stay sort-monotone, so a pyavro stream reader can tail the
-    output of a pyavro stream writer. Arrow-native like the batch
-    writer (optimization r13)."""
-
-    def __init__(self, schema: StructType, options, overwrite: bool):
-        self.dest = _local(options["path"])
-        self.avro_schema = spark_schema_to_avro(schema)
-        os.makedirs(self.dest, exist_ok=True)
-
-    def write(self, iterator):
-        from iceberg_metadata_pipeline_spark.ingest import avro_vector
-
-        plan = avro_vector.compile_plan(self.avro_schema)
-        if plan is None:
-            raise ValueError(
-                f"pyavro stream writer: unsupported schema {self.avro_schema}"
-            )
-        bodies, count = [], 0
-        for batch in iterator:
-            body, _ = avro_vector.encode_batch(plan, batch)
-            bodies.append(body)
-            count += batch.num_rows
-        tmp = os.path.join(self.dest, f"_tmp-{uuid.uuid4().hex}.avro")
-        avro_vector.write_ocf(tmp, self.avro_schema, bodies, count)
-        return AvroCommit(tmp_path=tmp, rows=count)
-
-    def commit(self, messages, batchId: int) -> None:
-        for i, m in enumerate(sorted(messages, key=lambda m: m.tmp_path)):
-            os.rename(
-                m.tmp_path,
-                os.path.join(self.dest, f"part-{batchId:08d}-{i:05d}.avro"),
-            )
-
-    def abort(self, messages, batchId: int) -> None:
-        for m in messages:
-            if m is not None and os.path.exists(m.tmp_path):
-                os.remove(m.tmp_path)
+    output of a pyavro stream writer."""
 
 
-class PyAvroDataSource(DataSource):
+class PyAvroDataSource(FormatDataSource):
     """``spark.dataSource.register(PyAvroDataSource)`` → the "pyavro"
     format name works in batch read/write and readStream/writeStream."""
 
-    @classmethod
-    def name(cls) -> str:
-        return "pyavro"
+    FORMAT = "pyavro"
+    READER = PyAvroBatchReader
+    WRITER = PyAvroBatchWriter
+    STREAM_READER = PyAvroStreamReader
+    STREAM_WRITER = PyAvroStreamWriter
 
     def schema(self):
-        path = _local(self.options["path"])
+        path = source_path(self.options)
         files = _list_avro(path)
         if not files:
             raise FileNotFoundError(
@@ -449,22 +390,8 @@ class PyAvroDataSource(DataSource):
         schema, _, _ = avro_io.read_container(files[0])
         return avro_schema_to_spark(schema)
 
-    def reader(self, schema: StructType) -> DataSourceReader:
-        return PyAvroBatchReader(self.options)
 
-    def writer(self, schema: StructType, overwrite: bool) -> DataSourceWriter:
-        return PyAvroBatchWriter(schema, self.options, overwrite)
-
-    def streamReader(self, schema: StructType) -> DataSourceStreamReader:
-        return PyAvroStreamReader(schema, self.options)
-
-    def streamWriter(self, schema: StructType, overwrite: bool):
-        return PyAvroStreamWriter(schema, self.options, overwrite)
-
-
-def register(spark) -> None:
-    """Idempotent format registration (latest registration wins)."""
-    spark.dataSource.register(PyAvroDataSource)
+register = PyAvroDataSource.register
 
 
 def _declare_queries() -> None:

@@ -41,14 +41,9 @@ import os
 from dataclasses import dataclass
 
 from pyspark.sql.datasource import (
-    DataSource,
     DataSourceReader,
-    DataSourceStreamReader,
-    DataSourceArrowWriter,
     DataSourceStreamArrowWriter,
-    DataSourceWriter,
     InputPartition,
-    WriterCommitMessage,
 )
 from pyspark.sql import types as T
 
@@ -57,13 +52,12 @@ from iceberg_metadata_pipeline_spark.catalog.delta_format import (
     latest_version,
     read_delta_table,
 )
-
-_EPOCH_DATE = datetime.date(1970, 1, 1)
-
-
-def _local(path: str) -> str:
-    return path[len("file:") :] if path.startswith("file:") else path
-
+from iceberg_metadata_pipeline_spark.ingest.datasource_base import (
+    FormatDataSource,
+    StagedArrowWriter,
+    TailingStreamReader,
+    source_path,
+)
 
 def _coerce_partition(value: str | None, dt: T.DataType):
     """Spec: partitionValues are strings (null = JSON null) — cast back
@@ -242,7 +236,7 @@ class _DeltaReadMixin:
 
 class PyDeltaBatchReader(DataSourceReader, _DeltaReadMixin):
     def __init__(self, options):
-        self.path = _local(options["path"])
+        self.path = source_path(options)
         version = options.get("versionAsOf")
         state = read_delta_table(
             self.path, None if version is None else int(version)
@@ -302,18 +296,17 @@ class PyDeltaBatchReader(DataSourceReader, _DeltaReadMixin):
         yield from self._rows(partition)
 
 
-class PyDeltaStreamReader(DataSourceStreamReader, _DeltaReadMixin):
+class PyDeltaStreamReader(TailingStreamReader, _DeltaReadMixin):
+    """Offset = the last consumed log version; each batch reads the
+    ``add`` actions of commits (start, end]. ``maxFilesPerTrigger``
+    weighs a commit by its add count (commits are never split)."""
+
+    OFFSET, INITIAL = "v", -1
+    LIMIT_OPTION = "maxFilesPerTrigger"
+
     def __init__(self, schema: T.StructType, options):
-        self.path = _local(options["path"])
-        self.ignore_deletes = str(options.get("ignoreDeletes", "false")).lower() == "true"
-        lim = int(options.get("maxFilesPerTrigger", 0) or 0)
-        self._limit = lim if lim > 0 else None
-        # engine-confirmed position (same contract as pyhudi_source):
-        # throttling starts at the SECOND micro-batch of a reader
-        # instance — the Python DataSource API has no ReadLimit
-        # handshake, and bounding before the engine reveals its
-        # checkpointed start could regress the offset log
-        self._pos: int | None = None
+        super().__init__(options)
+        self.path = source_path(options)
         # version → add-count memo: with maxFilesPerTrigger a long
         # backlog would otherwise re-parse every commit JSON from the
         # checkpoint position on EVERY trigger (O(backlog) per batch);
@@ -325,47 +318,29 @@ class PyDeltaStreamReader(DataSourceStreamReader, _DeltaReadMixin):
         self.partition_columns = state.partition_columns
         self._resolve_mapping(state)
 
-    def initialOffset(self) -> dict:
-        return {"v": -1}
+    def _backlog(self, pos) -> list:
+        return list(range((-1 if pos is None else pos) + 1, latest_version(self.path) + 1))
 
-    def latestOffset(self) -> dict:
-        last = latest_version(self.path)
-        if self._limit is None or self._pos is None:
-            return {"v": last}
-        n = 0
-        end = self._pos
-        for v in range(self._pos + 1, last + 1):
-            adds = self._add_counts.get(v)
-            if adds is None:
-                adds = 0
-                with open(_commit_path(self.path, v)) as fh:
-                    for line in fh:
-                        line = line.strip()
-                        if line and "add" in json.loads(line):
-                            adds += 1
-                self._add_counts[v] = adds
-            n += adds
-            end = v  # commits are atomic: never split one
-            if n >= self._limit:
-                break
-        return {"v": end}
+    def _weight(self, v: int) -> int:
+        if v not in self._add_counts:
+            with open(_commit_path(self.path, v)) as fh:
+                self._add_counts[v] = sum(
+                    1 for line in fh if line.strip() and "add" in json.loads(line)
+                )
+        return self._add_counts[v]
 
-    def partitions(self, start: dict, end: dict):
-        self._pos = max(self._pos if self._pos is not None else -1, start["v"])
+    def _added(self, lo: int, hi: int) -> list:
         parts = []
-        for v in range(start["v"] + 1, end["v"] + 1):
+        for v in range(lo + 1, hi + 1):
             with open(_commit_path(self.path, v)) as fh:
                 for line in fh:
                     line = line.strip()
                     if not line:
                         continue
                     a = json.loads(line)
-                    if "remove" in a and not self.ignore_deletes:
-                        raise ValueError(
-                            f"delta commit {v} contains a remove action; this "
-                            "source tails APPENDS — pass .option('ignoreDeletes',"
-                            "'true') to skip removes (Delta's own semantics), or "
-                            "re-process the table as a batch"
+                    if "remove" in a:
+                        self._refuse_deletes(
+                            f"delta commit {v} contains a remove action"
                         )
                     if "add" in a:
                         add = a["add"]
@@ -374,15 +349,10 @@ class PyDeltaStreamReader(DataSourceStreamReader, _DeltaReadMixin):
                             # file (delete commit) — emitting it would
                             # double-read its live rows; same posture as
                             # Delta's source (skipChangeCommits)
-                            if not self.ignore_deletes:
-                                raise ValueError(
-                                    f"delta commit {v} re-adds a file with "
-                                    "a deletion vector (row-level delete); "
-                                    "this source tails APPENDS — pass "
-                                    ".option('ignoreDeletes','true') to "
-                                    "skip delete commits, or re-process "
-                                    "as a batch"
-                                )
+                            self._refuse_deletes(
+                                f"delta commit {v} re-adds a file with a "
+                                "deletion vector (row-level delete)"
+                            )
                             continue  # ignoreDeletes: skip the re-add
                         p = add["path"]
                         parts.append(
@@ -404,20 +374,17 @@ class PyDeltaStreamReader(DataSourceStreamReader, _DeltaReadMixin):
     def read(self, partition: DeltaFilePartition):
         yield from self._rows(partition)
 
-    def commit(self, end: dict) -> None:
-        # offsets live in the query checkpoint; track locally for the
-        # maxFilesPerTrigger bound
-        self._pos = max(self._pos if self._pos is not None else -1, end["v"])
+
+def _pv(v) -> str | None:
+    """A partition value as Delta's partitionValues string."""
+    if v is None:
+        return None
+    if isinstance(v, bool):
+        return "true" if v else "false"
+    return str(v)
 
 
-@dataclass
-class DeltaWriteCommit(WriterCommitMessage):
-    # [(tmp_path, rows, size, partition_values_json)] — one entry per
-    # (task, partition value); '{}' when unpartitioned
-    files: tuple = ()
-
-
-class PyDeltaBatchWriter(DataSourceArrowWriter):
+class PyDeltaBatchWriter(StagedArrowWriter):
     """``df.write.format("pydelta")`` — the Delta commit protocol IS the
     two-phase commit: tasks write ``_tmp-<uuid>.parquet`` (invisible —
     Delta readers only see files the log names), the driver-side
@@ -436,20 +403,16 @@ class PyDeltaBatchWriter(DataSourceArrowWriter):
     writer silently appended empty partitionValues to a partitioned
     table, nulling those rows' partition columns on read)."""
 
+    WRITER = "pydelta writer"
+
     def __init__(self, schema: T.StructType, options, overwrite: bool):
-        self.dest = _local(options["path"])
-        self.overwrite = overwrite
-        self.schema = schema
+        super().__init__(schema, overwrite)
+        self.dest = self.stage_dir = source_path(options)
+        self.physical = {f.name: f.name for f in schema.fields}
+        self.field_ids = None
         if latest_version(self.dest) >= 0:
             state = read_delta_table(self.dest)
-            if [(f.name, f.dataType) for f in state.schema.fields] != [
-                (f.name, f.dataType) for f in schema.fields
-            ]:
-                raise ValueError(
-                    "pydelta writer: dataframe schema does not match the "
-                    f"table ({state.schema.simpleString()}) — evolve the "
-                    "table first or align the dataframe"
-                )
+            self._check_schema(state.schema)
             self.part_cols = state.partition_columns
             # COLUMN-MAPPED tables are served (round 9): data files
             # write under PHYSICAL names and partitionValues key by
@@ -469,55 +432,30 @@ class PyDeltaBatchWriter(DataSourceArrowWriter):
 
             self.physical = physical_names_meta(state)
             mode = column_mapping_mode(state)
-            self.field_ids = (
-                column_mapping_ids(state) if mode != "none" else None
-            )
-            if mode != "none" and any(
-                _has_nested_mapping(f.dataType) for f in state.schema.fields
-            ):
-                raise NotImplementedError(
-                    "pydelta writer: NESTED column mapping needs physical "
-                    "nested parquet writes; top-level mapped tables are "
-                    "served, nested ones take the export path"
-                )
+            if mode != "none":
+                self.field_ids = column_mapping_ids(state)
+                if any(_has_nested_mapping(f.dataType) for f in state.schema.fields):
+                    raise NotImplementedError(
+                        "pydelta writer: NESTED column mapping needs physical "
+                        "nested parquet writes; top-level mapped tables are "
+                        "served, nested ones take the export path"
+                    )
         else:
-            raw = options.get("partitionBy", "") or ""
-            self.part_cols = [c.strip() for c in raw.split(",") if c.strip()]
-            missing = [
-                c for c in self.part_cols if c not in schema.fieldNames()
-            ]
-            if missing:
-                raise ValueError(
-                    f"pydelta writer: partitionBy columns {missing} not in "
-                    "schema"
-                )
-            self.physical = {f.name: f.name for f in schema.fields}
-            self.field_ids = None
+            self.part_cols = self._partition_by(options)
         os.makedirs(self.dest, exist_ok=True)
 
-    def write(self, iterator):
-        import uuid as _uuid
-
+    def _write_file(self, table, tmp: str) -> None:
+        """Spec: partition columns live in partitionValues, NOT the file;
+        physical (column-mapped) names + field ids go on the written
+        schema."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        # explicit arrow schema: inference would type an all-null task
-        # partition's column as null and break the table schema
-        from iceberg_metadata_pipeline_spark.ingest.arrow_types import (
-            arrow_fields,
-        )
-
-        fields = arrow_fields(self.schema, writer="pydelta writer")
-        names = [f.name for f in self.schema.fields]
-        part_idx = {c: names.index(c) for c in self.part_cols}
-        # spec: partition columns live in partitionValues, NOT the file;
-        # column-mapped tables store PHYSICAL names in both the files
-        # and the partitionValues keys
-        phys = getattr(self, "physical", None) or {n: n for n in names}
-        fid = getattr(self, "field_ids", None) or {}
-        data_fields = [
+        fid = self.field_ids or {}
+        data = [f for f in table.schema if f.name not in self.part_cols]
+        schema = pa.schema(
             pa.field(
-                phys.get(f.name, f.name),
+                self.physical.get(f.name, f.name),
                 f.type,
                 metadata=(
                     {b"PARQUET:field_id": str(fid[f.name]).encode()}
@@ -525,46 +463,20 @@ class PyDeltaBatchWriter(DataSourceArrowWriter):
                     else None
                 ),
             )
-            for f in fields
-            if f.name not in part_idx
-        ]
-        data_names = [n for n in names if n not in part_idx]
-
-        def _pv(v):
-            if v is None:
-                return None
-            if isinstance(v, bool):
-                return "true" if v else "false"
-            return str(v)
-
-        # Arrow-native (round-12 continuation): RecordBatches split by
-        # partition tuple columnar-side; empty tasks return no files
-        # (writing a 0-row file per task would bloat the table's file
-        # count — 32 files for a 1-row commit on local[32])
-        from iceberg_metadata_pipeline_spark.ingest.arrow_write import (
-            grouped_arrow_tables,
+            for f in data
+        )
+        pq.write_table(
+            pa.table([table.column(f.name) for f in data], schema=schema), tmp
         )
 
-        out = []
-        for pv, table in grouped_arrow_tables(
-            iterator, self.schema, self.part_cols, writer="pydelta writer"
-        ):
-            # spec: partition columns live in partitionValues, NOT the
-            # file; physical (column-mapped) names + field ids go on
-            # the written schema
-            data_tbl = pa.table(
-                [table.column(n) for n in data_names],
-                schema=pa.schema(data_fields),
-            )
-            tmp = os.path.join(self.dest, f"_tmp-{_uuid.uuid4().hex}.parquet")
-            pq.write_table(data_tbl, tmp)
-            pvals = json.dumps(
-                {phys.get(c, c): _pv(v) for c, v in zip(self.part_cols, pv)}
-            )
-            out.append((tmp, table.num_rows, os.path.getsize(tmp), pvals))
-        return DeltaWriteCommit(files=tuple(out))
+    def _file_key(self, values: tuple) -> str:
+        return json.dumps(
+            {self.physical.get(c, c): _pv(v) for c, v in zip(self.part_cols, values)}
+        )
 
-    def commit(self, messages):
+    def _commit(self, staged, epoch) -> None:
+        """ONE log commit: protocol+metaData first, then the overwrite's
+        removes (batch only), the stream's ``txn`` watermark, the adds."""
         import time as _time
         import uuid as _uuid
 
@@ -574,8 +486,7 @@ class PyDeltaBatchWriter(DataSourceArrowWriter):
 
         now = int(_time.time() * 1000)
         actions: list[dict] = []
-        prev = latest_version(self.dest)
-        if prev < 0:
+        if latest_version(self.dest) < 0:
             actions.append(
                 {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}}
             )
@@ -591,28 +502,21 @@ class PyDeltaBatchWriter(DataSourceArrowWriter):
                     }
                 }
             )
-        elif self.overwrite:
+        elif self.overwrite and epoch is None:
             actions.extend(
                 {"remove": {"path": p, "deletionTimestamp": now, "dataChange": True}}
                 for p in read_delta_table(self.dest).files
             )
-        actions.extend(self._adds(messages, now, lambda: f"part-{_uuid.uuid4().hex}.parquet"))
-        actions.append({"commitInfo": {"timestamp": now, "operation": "WRITE"}})
-        write_commit(self.dest, actions)
-
-    def _adds(self, messages, now: int, name_fn) -> list[dict]:
-        """Rename every task's tmp files into place and return the add
-        actions — partitionValues from each file's routed tuple."""
-        out = []
-        flat = []
-        for m in messages:
-            if m is None:
-                continue
-            flat.extend(getattr(m, "files", ()) or ())
-        for tmp, rows, size, pvals in sorted(flat):
-            name = name_fn()
+        if epoch is not None:
+            actions.append({"txn": {"appId": self.app_id, "version": epoch}})
+        for tmp, rows, size, pvals in staged:
+            name = (
+                f"part-{_uuid.uuid4().hex}.parquet"
+                if epoch is None
+                else f"part-{epoch:08d}-{_uuid.uuid4().hex[:8]}.parquet"
+            )
             os.rename(tmp, os.path.join(self.dest, name))
-            out.append(
+            actions.append(
                 {
                     "add": {
                         "path": name,  # relative, per spec's normal layout
@@ -624,13 +528,9 @@ class PyDeltaBatchWriter(DataSourceArrowWriter):
                     }
                 }
             )
-        return out
-
-    def abort(self, messages):
-        for m in messages:
-            for tmp, *_rest in getattr(m, "files", ()) or ():
-                if os.path.exists(tmp):
-                    os.remove(tmp)
+        operation = "WRITE" if epoch is None else "STREAMING UPDATE"
+        actions.append({"commitInfo": {"timestamp": now, "operation": operation}})
+        write_commit(self.dest, actions)
 
 
 class PyDeltaStreamWriter(PyDeltaBatchWriter, DataSourceStreamArrowWriter):
@@ -648,85 +548,28 @@ class PyDeltaStreamWriter(PyDeltaBatchWriter, DataSourceStreamArrowWriter):
         super().__init__(schema, options, overwrite)
         self.app_id = options.get("txnAppId", "pydelta-sink")
 
-    def commit(self, messages, batchId: int) -> None:  # noqa: N803
-        import time as _time
-        import uuid as _uuid
-
-        from iceberg_metadata_pipeline_spark.catalog.delta_format import (
-            write_commit,
-        )
-
-        prev = latest_version(self.dest)
-        if prev >= 0:
-            state = read_delta_table(self.dest)
-            last = state.txns.get(self.app_id)
-            if last is not None and int(batchId) <= last:
-                # epoch already committed — drop the replayed files
-                self.abort(messages, batchId)
-                return
-        now = int(_time.time() * 1000)
-        actions: list[dict] = []
-        if prev < 0:
-            actions.append(
-                {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}}
-            )
-            actions.append(
-                {
-                    "metaData": {
-                        "id": str(_uuid.uuid4()),
-                        "format": {"provider": "parquet", "options": {}},
-                        "schemaString": json.dumps(self.schema.jsonValue()),
-                        "partitionColumns": list(self.part_cols),
-                        "configuration": {},
-                        "createdTime": now,
-                    }
-                }
-            )
-        actions.append({"txn": {"appId": self.app_id, "version": int(batchId)}})
-        actions.extend(
-            self._adds(
-                messages,
-                now,
-                lambda: f"part-{int(batchId):08d}-{_uuid.uuid4().hex[:8]}.parquet",
-            )
-        )
-        actions.append(
-            {"commitInfo": {"timestamp": now, "operation": "STREAMING UPDATE"}}
-        )
-        write_commit(self.dest, actions)
-
-    def abort(self, messages, batchId: int) -> None:  # noqa: N803
-        PyDeltaBatchWriter.abort(self, messages)
+    def _last_epoch(self) -> int:
+        if latest_version(self.dest) < 0:
+            return -1
+        last = read_delta_table(self.dest).txns.get(self.app_id)
+        return -1 if last is None else int(last)
 
 
-class PyDeltaDataSource(DataSource):
+class PyDeltaDataSource(FormatDataSource):
     """``spark.dataSource.register(PyDeltaDataSource)`` → format name
     "pydelta" for batch read/write, readStream, and writeStream."""
 
-    @classmethod
-    def name(cls) -> str:
-        return "pydelta"
+    FORMAT = "pydelta"
+    READER = PyDeltaBatchReader
+    WRITER = PyDeltaBatchWriter
+    STREAM_READER = PyDeltaStreamReader
+    STREAM_WRITER = PyDeltaStreamWriter
 
     def schema(self):
-        state = read_delta_table(_local(self.options["path"]))
-        return state.schema
-
-    def reader(self, schema: T.StructType) -> DataSourceReader:
-        return PyDeltaBatchReader(self.options)
-
-    def writer(self, schema: T.StructType, overwrite: bool) -> DataSourceWriter:
-        return PyDeltaBatchWriter(schema, self.options, overwrite)
-
-    def streamReader(self, schema: T.StructType) -> DataSourceStreamReader:
-        return PyDeltaStreamReader(schema, self.options)
-
-    def streamWriter(self, schema: T.StructType, overwrite: bool):
-        return PyDeltaStreamWriter(schema, self.options, overwrite)
+        return read_delta_table(source_path(self.options)).schema
 
 
-def register(spark) -> None:
-    """Idempotent format registration (latest registration wins)."""
-    spark.dataSource.register(PyDeltaDataSource)
+register = PyDeltaDataSource.register
 
 
 def _declare_queries() -> None:

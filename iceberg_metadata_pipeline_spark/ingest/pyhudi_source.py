@@ -30,24 +30,25 @@ from dataclasses import dataclass
 
 from pyspark.sql import types as T
 from pyspark.sql.datasource import (
-    DataSource,
     DataSourceReader,
-    DataSourceStreamReader,
-    DataSourceArrowWriter,
     DataSourceStreamArrowWriter,
-    DataSourceWriter,
     InputPartition,
-    WriterCommitMessage,
 )
 
 from iceberg_metadata_pipeline_spark.catalog.hudi_format import (
     completed_instants,
+    incremental_slices,
     read_hudi_table,
+    read_instant_metadata,
+    read_properties,
 )
-
-
-def _local(path: str) -> str:
-    return path[len("file:") :] if path.startswith("file:") else path
+from iceberg_metadata_pipeline_spark.ingest.datasource_base import (
+    FormatDataSource,
+    StagedArrowWriter,
+    TailingStreamReader,
+    append_only_error,
+    source_path,
+)
 
 
 _ARROW_TO_SPARK = {
@@ -99,9 +100,9 @@ class HudiFilePartition(InputPartition):
     # MOR incremental stream: emit the data-block records of ONE log
     # file for the instants of this micro-batch. DELETE blocks refuse
     # loudly unless the caller opted in with .option('ignoreDeletes',
-    # 'true') — the same appends-only contract as pydelta/pyice:
-    # silently dropping row-level deletes would make the tailing
-    # consumer diverge from the table with no signal.
+    # 'true') — datasource_base.TailingStreamReader's append-only
+    # contract, checked here in the task because only the task reads
+    # the log blocks.
     stream_log: str = ""
     stream_instants: tuple = ()
     stream_ignore_deletes: bool = False
@@ -170,13 +171,9 @@ class _HudiReadMixin:
                 if h.get(HEADER_INSTANT_TIME) not in live:
                     continue
                 if bt == BLOCK_DELETE and not part.stream_ignore_deletes:
-                    raise ValueError(
+                    raise append_only_error(
                         f"pyhudi stream: {part.stream_log} carries a DELETE "
-                        f"log block at instant {h.get(HEADER_INSTANT_TIME)} — "
-                        "this source tails APPENDS/UPSERTS; pass "
-                        ".option('ignoreDeletes','true') to skip row-level "
-                        "deletes, or consume the table with batch snapshot "
-                        "reads"
+                        f"log block at instant {h.get(HEADER_INSTANT_TIME)}"
                     )
                 if bt == BLOCK_AVRO_DATA:
                     decoded = _decode_data_block_arrow(content, h)
@@ -271,7 +268,7 @@ def _resolve_schema(state) -> tuple[T.StructType, list[str], list[str]]:
 
 class PyHudiBatchReader(DataSourceReader, _HudiReadMixin):
     def __init__(self, options):
-        self.path = _local(options["path"])
+        self.path = source_path(options)
         state = read_hudi_table(self.path, options.get("asOfInstant"))
         self.schema, self.file_cols, self.part_cols = _resolve_schema(state)
         self._parts = []
@@ -298,66 +295,33 @@ class PyHudiBatchReader(DataSourceReader, _HudiReadMixin):
         yield from self._rows(partition)
 
 
-class PyHudiStreamReader(DataSourceStreamReader, _HudiReadMixin):
+class PyHudiStreamReader(TailingStreamReader, _HudiReadMixin):
     """Offset = the last consumed completed instant time (lexicographic —
     Hudi instants are yyyyMMddHHmmssSSS, so string order IS time order).
     Each batch emits the base files written by instants in
-    (start, end] — the incremental-pull contract."""
+    (start, end] — the incremental-pull contract. ``maxFilesPerTrigger``
+    weighs an instant by its write stats (instants are never split)."""
+
+    OFFSET, INITIAL = "t", ""
+    LIMIT_OPTION = "maxFilesPerTrigger"
 
     def __init__(self, schema: T.StructType, options):
-        self.path = _local(options["path"])
+        super().__init__(options)
+        self.path = source_path(options)
         state = read_hudi_table(self.path)
         self.schema, self.file_cols, self.part_cols = _resolve_schema(state)
-        lim = int(options.get("maxFilesPerTrigger", 0) or 0)
-        self._limit = lim if lim > 0 else None
-        self.ignore_deletes = (
-            str(options.get("ignoreDeletes", "false")).lower() == "true"
-        )
-        # engine-confirmed position: set by partitions()/commit(). The
-        # Python DataSource API has no ReadLimit handshake, so throttling
-        # starts at the SECOND micro-batch of a reader instance — bounding
-        # before the engine reveals its checkpointed start could return an
-        # offset BEHIND it and regress the offset log (duplicates on a
-        # later restart). First batch unthrottled is safe, never wrong.
-        self._pos: str | None = None
+        self._timeline: dict = {}
 
-    def initialOffset(self) -> dict:
-        return {"t": ""}
-
-    def latestOffset(self) -> dict:
+    def _backlog(self, pos) -> list:
         done = completed_instants(self.path)
-        if not done:
-            return {"t": ""}
-        if self._limit is None or self._pos is None:
-            return {"t": done[-1].time}
-        from iceberg_metadata_pipeline_spark.catalog.hudi_format import (
-            read_instant_metadata,
-        )
+        self._timeline = {ins.time: ins for ins in done}
+        return [ins.time for ins in done if pos is None or ins.time > pos]
 
-        n = 0
-        end = self._pos
-        for ins in done:
-            if ins.time <= self._pos:
-                continue
-            md = read_instant_metadata(self.path, ins)
-            n += sum(
-                len(stats)
-                for stats in (md.get("partitionToWriteStats") or {}).values()
-            )
-            end = ins.time  # instants are atomic: never split one
-            if n >= self._limit:
-                break
-        return {"t": end}
+    def _weight(self, t: str) -> int:
+        return len(_write_stats(read_instant_metadata(self.path, self._timeline[t])))
 
-    def partitions(self, start: dict, end: dict):
-        self._pos = max(self._pos or "", start["t"])
-        from iceberg_metadata_pipeline_spark.catalog.hudi_format import (
-            incremental_slices,
-        )
-
-        bases, logs = incremental_slices(
-            self.path, begin=start["t"], end=end["t"] or None
-        )
+    def _added(self, lo: str, hi: str) -> list:
+        bases, logs = incremental_slices(self.path, begin=lo, end=hi or None)
         parts = [
             HudiFilePartition(
                 bf.path,
@@ -376,27 +340,15 @@ class PyHudiStreamReader(DataSourceStreamReader, _HudiReadMixin):
         # keeps an authoritative guard for foreign-written logs whose
         # stats omit numDeletes.
         if logs and not self.ignore_deletes:
-            from iceberg_metadata_pipeline_spark.catalog.hudi_format import (
-                read_instant_metadata,
-            )
-
             batch_times = {lg.instant_time for lg in logs}
             for ins in completed_instants(self.path):
                 if ins.time not in batch_times:
                     continue
-                md = read_instant_metadata(self.path, ins) or {}
-                n_del = sum(
-                    int(st.get("numDeletes") or 0)
-                    for stats in (md.get("partitionToWriteStats") or {}).values()
-                    for st in stats
-                )
+                stats = _write_stats(read_instant_metadata(self.path, ins) or {})
+                n_del = sum(int(st.get("numDeletes") or 0) for st in stats)
                 if n_del:
-                    raise ValueError(
-                        f"pyhudi stream: instant {ins.time} deletes {n_del} "
-                        "row(s) — this source tails APPENDS/UPSERTS; pass "
-                        ".option('ignoreDeletes','true') to skip row-level "
-                        "deletes, or consume the table with batch snapshot "
-                        "reads"
+                    self._refuse_deletes(
+                        f"pyhudi stream: instant {ins.time} deletes {n_del} row(s)"
                     )
         parts.extend(
             HudiFilePartition(
@@ -416,20 +368,21 @@ class PyHudiStreamReader(DataSourceStreamReader, _HudiReadMixin):
     def read(self, partition: HudiFilePartition):
         yield from self._rows(partition)
 
-    def commit(self, end: dict) -> None:
-        # offsets live in the query checkpoint; track locally for the
-        # maxFilesPerTrigger bound
-        self._pos = max(self._pos or "", end["t"])
+
+def _write_stats(md: dict) -> list[dict]:
+    """Every write stat of an instant's commit metadata."""
+    return [st for stats in (md.get("partitionToWriteStats") or {}).values() for st in stats]
 
 
-@dataclass
-class HudiWriteCommit(WriterCommitMessage):
-    # [(tmp_path, rows, size, partition_path)] — one entry per
-    # (task, partition value); partition_path is "" when unpartitioned
-    files: tuple = ()
+def _table_exists(dest: str) -> bool:
+    try:
+        read_properties(dest)
+        return True
+    except (FileNotFoundError, KeyError):
+        return False
 
 
-class PyHudiBatchWriter(DataSourceArrowWriter):
+class PyHudiBatchWriter(StagedArrowWriter):
     """``df.write.format("pyhudi")`` over a COPY_ON_WRITE table — the
     same two-phase commit as the pydelta writer, expressed in Hudi's
     protocol: tasks write invisible ``_tmp-*.parquet`` files; the
@@ -452,26 +405,20 @@ class PyHudiBatchWriter(DataSourceArrowWriter):
     Bounds (refusals, not silent corruption): COW only — MOR tables
     take upsert_mor/delete_mor (the log-append protocol)."""
 
-    def __init__(self, schema: T.StructType, options, overwrite: bool):
-        self.dest = _local(options["path"])
-        self.overwrite = overwrite
-        self.schema = schema
-        from iceberg_metadata_pipeline_spark.catalog.hudi_format import (
-            read_properties,
-        )
+    WRITER = "pyhudi writer"
 
-        try:
+    def __init__(self, schema: T.StructType, options, overwrite: bool):
+        super().__init__(schema, overwrite)
+        self.dest = self.stage_dir = source_path(options)
+        if _table_exists(self.dest):
             props = read_properties(self.dest)
-        except (FileNotFoundError, KeyError):
-            props = None
-        if props is not None:
             if props.get("hoodie.table.type") != "COPY_ON_WRITE":
                 raise NotImplementedError(
                     "pyhudi writer: MERGE_ON_READ tables take "
                     "upsert_mor/delete_mor (log appends), not the COW "
                     "file writer"
                 )
-            self.part_fields = [
+            self.part_cols = [
                 c
                 for c in props.get("hoodie.table.partition.fields", "").split(",")
                 if c
@@ -480,26 +427,16 @@ class PyHudiBatchWriter(DataSourceArrowWriter):
             # writer stamps it in every commit's extraMetadata; exported
             # tables carry it too) — mixed-schema appends refuse early
             committed = self._committed_schema()
-            if committed is not None and [
-                (f.name, f.dataType) for f in committed.fields
-            ] != [(f.name, f.dataType) for f in schema.fields]:
-                raise ValueError(
-                    "pyhudi writer: dataframe schema does not match the "
-                    f"table ({committed.simpleString()}) — evolve the "
-                    "table first or align the dataframe"
-                )
+            if committed is not None:
+                self._check_schema(committed)
         else:
-            raw = options.get("partitionBy", "") or ""
-            self.part_fields = [c.strip() for c in raw.split(",") if c.strip()]
-            missing = [
-                c for c in self.part_fields if c not in schema.fieldNames()
-            ]
-            if missing:
-                raise ValueError(
-                    f"pyhudi writer: partitionBy columns {missing} not in schema"
-                )
-        self._exists = props is not None
+            self.part_cols = self._partition_by(options)
         os.makedirs(self.dest, exist_ok=True)
+
+    def _extra_metadata(self):
+        """The completed instants' extraMetadata, newest first."""
+        for ins in reversed(completed_instants(self.dest)):
+            yield (read_instant_metadata(self.dest, ins) or {}).get("extraMetadata") or {}
 
     def _committed_schema(self) -> T.StructType | None:
         """The newest committed schema: the last completed instant whose
@@ -507,62 +444,19 @@ class PyHudiBatchWriter(DataSourceArrowWriter):
         it). None when no instant declares a schema (e.g. bootstrap
         exports) — then the footer-derived read schema is authoritative
         and the check is skipped."""
-        from iceberg_metadata_pipeline_spark.catalog.hudi_format import (
-            read_instant_metadata,
-        )
-
-        for ins in reversed(completed_instants(self.dest)):
-            raw = (
-                (read_instant_metadata(self.dest, ins) or {})
-                .get("extraMetadata") or {}
-            ).get("schema")
-            if raw:
-                return T.StructType.fromJson(json.loads(raw))
+        for em in self._extra_metadata():
+            if em.get("schema"):
+                return T.StructType.fromJson(json.loads(em["schema"]))
         return None
 
-    def write(self, iterator):
-        """Arrow-native (round-12 continuation): RecordBatches split by
-        hive partition path columnar-side — value columns never
-        round-trip through per-row Python."""
-        import uuid as _uuid
-
-        import pyarrow.parquet as pq
-
+    def _file_key(self, values: tuple) -> str:
         from iceberg_metadata_pipeline_spark.catalog.hudi_format import (
             _hive_partition_path,
         )
-        from iceberg_metadata_pipeline_spark.ingest.arrow_write import (
-            grouped_arrow_tables,
-        )
 
-        out = []
-        for key, table in grouped_arrow_tables(
-            iterator, self.schema, self.part_fields, writer="pyhudi writer"
-        ):
-            ppath = _hive_partition_path(
-                dict(zip(self.part_fields, key)), self.part_fields
-            )
-            tmp = os.path.join(self.dest, f"_tmp-{_uuid.uuid4().hex}.parquet")
-            pq.write_table(table, tmp)
-            out.append((tmp, table.num_rows, os.path.getsize(tmp), ppath))
-        return HudiWriteCommit(files=tuple(out))
+        return _hive_partition_path(dict(zip(self.part_cols, values)), self.part_cols)
 
-    # extra commit metadata hook (the stream writer stamps its
-    # exactly-once epoch marker through this)
-    _extra_metadata: dict[str, str] = {}
-
-    def _table_exists(self) -> bool:
-        from iceberg_metadata_pipeline_spark.catalog.hudi_format import (
-            read_properties,
-        )
-
-        try:
-            read_properties(self.dest)
-            return True
-        except (FileNotFoundError, KeyError):
-            return False
-
-    def commit(self, messages):
+    def _commit(self, staged, epoch) -> None:
         from iceberg_metadata_pipeline_spark.catalog.hudi_format import (
             _base_file_name,
             _ensure_partition_metadata,
@@ -570,17 +464,16 @@ class PyHudiBatchWriter(DataSourceArrowWriter):
             begin_instant,
             complete_instant,
             create_hudi_table,
-            read_hudi_table,
         )
 
         # re-check at commit time: a stream writer instance spans epochs,
         # and epoch 0 creates the table __init__ did not see
-        exists = self._table_exists()
+        exists = _table_exists(self.dest)
         if not exists:
             create_hudi_table(
                 self.dest,
                 os.path.basename(self.dest.rstrip("/")),
-                self.part_fields,
+                self.part_cols,
             )
         prev_by_part: dict[str, list[str]] = {}
         if exists and self.overwrite:
@@ -590,23 +483,12 @@ class PyHudiBatchWriter(DataSourceArrowWriter):
                 v.sort()
         action = "replacecommit" if prev_by_part else "commit"
         t = begin_instant(self.dest, action)
-        flat = []
-        for m in messages:
-            if m is None:
-                continue
-            flat.extend(getattr(m, "files", ()) or ())
         stats_by_part: dict[str, list[dict]] = {}
-        seen_parts: set[str] = set()
-        for i, (tmp, rows, size, ppath) in enumerate(sorted(flat)):
-            if ppath not in seen_parts:
+        for i, (tmp, rows, size, ppath) in enumerate(staged):
+            if ppath not in stats_by_part:
                 _ensure_partition_metadata(self.dest, ppath, t)
-                seen_parts.add(ppath)
             fid = _group_file_id(f"writer#{t}#{ppath}", i)
-            rel = (
-                os.path.join(ppath, _base_file_name(fid, t))
-                if ppath
-                else _base_file_name(fid, t)
-            )
+            rel = os.path.join(ppath, _base_file_name(fid, t))
             os.makedirs(
                 os.path.dirname(os.path.join(self.dest, rel)), exist_ok=True
             )
@@ -625,29 +507,23 @@ class PyHudiBatchWriter(DataSourceArrowWriter):
                     "partitionPath": ppath,
                 }
             )
-        if not stats_by_part and not self.part_fields:
+        if not stats_by_part and not self.part_cols:
             _ensure_partition_metadata(self.dest, "", t)
             stats_by_part = {"": []}
+        extra = {"schema": json.dumps(self.schema.jsonValue())}
+        if epoch is not None:
+            extra.update(streamAppId=self.app_id, streamBatchId=str(epoch))
         md: dict = {
             "partitionToWriteStats": stats_by_part,
             "compacted": False,
             "operationType": (
                 "INSERT_OVERWRITE_TABLE" if prev_by_part else "INSERT"
             ),
-            "extraMetadata": {
-                "schema": json.dumps(self.schema.jsonValue()),
-                **self._extra_metadata,
-            },
+            "extraMetadata": extra,
         }
         if prev_by_part:
             md["partitionToReplaceFileIds"] = prev_by_part
         complete_instant(self.dest, t, action, md)
-
-    def abort(self, messages):
-        for m in messages:
-            for tmp, *_rest in getattr(m, "files", ()) or ():
-                if os.path.exists(tmp):
-                    os.remove(tmp)
 
 
 class PyHudiStreamWriter(PyHudiBatchWriter, DataSourceStreamArrowWriter):
@@ -666,63 +542,37 @@ class PyHudiStreamWriter(PyHudiBatchWriter, DataSourceStreamArrowWriter):
         self.app_id = options.get("checkpointAppId", "pyhudi-sink")
 
     def _last_epoch(self) -> int:
-        from iceberg_metadata_pipeline_spark.catalog.hudi_format import (
-            read_instant_metadata,
+        if not _table_exists(self.dest):
+            return -1
+        return max(
+            (
+                int(em.get("streamBatchId", -1))
+                for em in self._extra_metadata()
+                if em.get("streamAppId") == self.app_id
+            ),
+            default=-1,
         )
 
-        last = -1
-        for ins in completed_instants(self.dest):
-            em = (read_instant_metadata(self.dest, ins) or {}).get(
-                "extraMetadata"
-            ) or {}
-            if em.get("streamAppId") == self.app_id:
-                last = max(last, int(em.get("streamBatchId", -1)))
-        return last
 
-    def commit(self, messages, batchId: int) -> None:  # noqa: N803
-        if self._table_exists() and int(batchId) <= self._last_epoch():
-            # epoch already committed — drop the replayed files
-            self.abort(messages, batchId)
-            return
-        self._extra_metadata = {
-            "streamAppId": self.app_id,
-            "streamBatchId": str(int(batchId)),
-        }
-        PyHudiBatchWriter.commit(self, messages)
-
-    def abort(self, messages, batchId: int) -> None:  # noqa: N803
-        PyHudiBatchWriter.abort(self, messages)
-
-
-class PyHudiDataSource(DataSource):
+class PyHudiDataSource(FormatDataSource):
     """``spark.dataSource.register(PyHudiDataSource)`` → format name
-    "pyhudi" for batch read and readStream over Hudi COW tables."""
+    "pyhudi" for batch read/write, readStream and writeStream over Hudi
+    tables (writes: COW)."""
 
-    @classmethod
-    def name(cls) -> str:
-        return "pyhudi"
+    FORMAT = "pyhudi"
+    READER = PyHudiBatchReader
+    WRITER = PyHudiBatchWriter
+    STREAM_READER = PyHudiStreamReader
+    STREAM_WRITER = PyHudiStreamWriter
 
     def schema(self):
-        state = read_hudi_table(_local(self.options["path"]))
-        schema, _fc, _pc = _resolve_schema(state)
+        schema, _fc, _pc = _resolve_schema(
+            read_hudi_table(source_path(self.options))
+        )
         return schema
 
-    def reader(self, schema: T.StructType) -> DataSourceReader:
-        return PyHudiBatchReader(self.options)
 
-    def writer(self, schema: T.StructType, overwrite: bool) -> DataSourceWriter:
-        return PyHudiBatchWriter(schema, self.options, overwrite)
-
-    def streamWriter(self, schema: T.StructType, overwrite: bool):
-        return PyHudiStreamWriter(schema, self.options, overwrite)
-
-    def streamReader(self, schema: T.StructType) -> DataSourceStreamReader:
-        return PyHudiStreamReader(schema, self.options)
-
-
-def register(spark) -> None:
-    """Idempotent format registration (latest registration wins)."""
-    spark.dataSource.register(PyHudiDataSource)
+register = PyHudiDataSource.register
 
 
 def _declare_queries() -> None:

@@ -33,34 +33,28 @@ reading a foreign warehouse in place.
 
 from __future__ import annotations
 
+import json
+import os
 from dataclasses import dataclass
 
 from pyspark.sql import types as T
 from pyspark.sql.datasource import (
-    DataSource,
     DataSourceReader,
-    DataSourceStreamReader,
-    DataSourceArrowWriter,
     DataSourceStreamArrowWriter,
-    DataSourceWriter,
     InputPartition,
-    WriterCommitMessage,
 )
 
 from iceberg_metadata_pipeline_spark.catalog.iceberg_format import (
     list_metadata_versions,
     read_iceberg_table,
 )
-
-
-def _local(path: str) -> str:
-    return path[len("file:") :] if path.startswith("file:") else path
-
-
-def _norm(p: str) -> str:
-    import re
-
-    return re.sub(r"^file:/+", "/", p)
+from iceberg_metadata_pipeline_spark.catalog.metacat import plain_path
+from iceberg_metadata_pipeline_spark.ingest.datasource_base import (
+    FormatDataSource,
+    StagedArrowWriter,
+    TailingStreamReader,
+    source_path,
+)
 
 
 @dataclass
@@ -103,12 +97,10 @@ def _py_default(value, dtype: T.DataType):
     return str(value)
 
 
-class PyIceBatchReader(DataSourceReader):
-    def __init__(self, options):
-        self.path = _local(options["path"])
-        # descriptors only: plan-time state stays O(#delete files), never
-        # O(deleted rows) — the r6 'weak' finding was driver-side decode
-        info = read_iceberg_table(self.path, decode_dvs=False)
+class _IceFileReader:
+    """Shared per-file scan of the batch and stream readers."""
+
+    def _read_schema(self, info) -> None:
         self.schema = info.schema
         self.names = [f.name for f in info.schema.fields]
         # v3 initial-defaults (and plain schema evolution): a column
@@ -119,105 +111,6 @@ class PyIceBatchReader(DataSourceReader):
             f.name: _py_default(info.defaults.get(f.name), f.dataType)
             for f in info.schema.fields
         }
-        threshold = int(options.get("deleteDecodeThreshold", 10_000))
-        total_deleted = sum(d.record_count for d in info.delete_files)
-
-        if info.delete_files and total_deleted <= threshold:
-            self._plan_small(info)
-        else:
-            self._plan_descriptors(info)
-
-    def _plan_small(self, info) -> None:
-        """Fast path: decode once on the driver, ship positions. Only for
-        delete sets whose TOTAL record count is under the threshold —
-        saves every task a delete-file re-read on tiny MOR tables."""
-        import pyarrow.parquet as pq
-
-        from iceberg_metadata_pipeline_spark.catalog.puffin import (
-            read_deletion_vectors,
-        )
-
-        pos_by_file: dict[str, list[tuple[int, int]]] = {}  # file -> [(pos, seq)]
-        eq_sets: list[tuple[tuple[str, ...], tuple, int]] = []  # (cols, rows, seq)
-        for d in info.delete_files:
-            if d.content == 1:
-                if d.is_dv:
-                    for ref, positions in read_deletion_vectors(
-                        d.path, d.content_offset
-                    ):
-                        if d.referenced_data_file is not None and _norm(
-                            ref
-                        ) != _norm(d.referenced_data_file):
-                            continue
-                        pos_by_file.setdefault(_norm(ref), []).extend(
-                            (int(p), d.seq) for p in positions
-                        )
-                else:
-                    t = pq.read_table(d.path, columns=["file_path", "pos"])
-                    for fp, pos in zip(
-                        t.column("file_path").to_pylist(),
-                        t.column("pos").to_pylist(),
-                    ):
-                        pos_by_file.setdefault(_norm(fp), []).append(
-                            (int(pos), d.seq)
-                        )
-            elif d.content == 2:
-                t = pq.read_table(d.path, columns=list(d.equality_cols))
-                rows = tuple(
-                    tuple(t.column(c)[i].as_py() for c in d.equality_cols)
-                    for i in range(t.num_rows)
-                )
-                eq_sets.append((tuple(d.equality_cols), rows, d.seq))
-
-        self._parts = []
-        for f in info.files:
-            fnorm = _norm(f.path)
-            dead = tuple(
-                sorted(
-                    p
-                    for p, dseq in pos_by_file.get(fnorm, [])
-                    if dseq >= f.seq
-                )
-            )
-            eqs = tuple(
-                (cols, rows) for cols, rows, dseq in eq_sets if dseq > f.seq
-            )
-            self._parts.append(IceFilePartition(f.path, f.seq, dead, eqs))
-
-    def _plan_descriptors(self, info) -> None:
-        """Scale path: each InputPartition carries only the descriptors
-        of delete files applicable under the sequence rules; the task
-        decodes them itself. A DV descriptor with a referenced_data_file
-        routes only to that file; position-delete parquets (which may
-        reference any data file) route to every file with data_seq ≤
-        delete seq and the task filters rows to its own path."""
-        self._parts = []
-        for f in info.files:
-            fnorm = _norm(f.path)
-            pos_desc = tuple(
-                (d.path, d.is_dv, d.content_offset)
-                for d in info.delete_files
-                if d.content == 1
-                and d.seq >= f.seq
-                and (
-                    d.referenced_data_file is None
-                    or _norm(d.referenced_data_file) == fnorm
-                )
-            )
-            eq_desc = tuple(
-                (d.path, tuple(d.equality_cols))
-                for d in info.delete_files
-                if d.content == 2 and d.seq > f.seq
-            )
-            self._parts.append(
-                IceFilePartition(
-                    f.path, f.seq,
-                    pos_descriptors=pos_desc, eq_descriptors=eq_desc,
-                )
-            )
-
-    def partitions(self):
-        return self._parts
 
     def read(self, partition: IceFilePartition):
         """Vectorized (round 12): yields ``pa.RecordBatch`` — position
@@ -235,7 +128,7 @@ class PyIceBatchReader(DataSourceReader):
             (cols, set(rows)) for cols, rows in partition.eq_deletes
         ]
         # scale path: decode this task's delete state from descriptors
-        me = _norm(partition.path)
+        me = plain_path(partition.path)
         for dpath, is_dv, offset in partition.pos_descriptors:
             if is_dv:
                 from iceberg_metadata_pipeline_spark.catalog.puffin import (
@@ -243,7 +136,7 @@ class PyIceBatchReader(DataSourceReader):
                 )
 
                 for ref, positions in read_deletion_vectors(dpath, offset):
-                    if _norm(ref) == me:
+                    if plain_path(ref) == me:
                         dead_parts.append(positions)
             else:
                 # two-column columnar read; rows for other data files are
@@ -254,7 +147,7 @@ class PyIceBatchReader(DataSourceReader):
                 # Python work, not O(deleted rows)
                 t = pq.read_table(dpath, columns=["file_path", "pos"])
                 dead_parts.append(
-                    arrow_scan.positions_for_file(t, me, _norm)
+                    arrow_scan.positions_for_file(t, me, plain_path)
                 )
         for dpath, cols in partition.eq_descriptors:
             t = pq.read_table(dpath, columns=list(cols))
@@ -302,30 +195,130 @@ class PyIceBatchReader(DataSourceReader):
                 yield out
 
 
-class PyIceStreamReader(DataSourceStreamReader):
+class PyIceBatchReader(_IceFileReader, DataSourceReader):
+    def __init__(self, options):
+        self.path = source_path(options)
+        # descriptors only: plan-time state stays O(#delete files), never
+        # O(deleted rows) — the r6 'weak' finding was driver-side decode
+        info = read_iceberg_table(self.path, decode_dvs=False)
+        self._read_schema(info)
+        threshold = int(options.get("deleteDecodeThreshold", 10_000))
+        total_deleted = sum(d.record_count for d in info.delete_files)
+
+        if info.delete_files and total_deleted <= threshold:
+            self._plan_small(info)
+        else:
+            self._plan_descriptors(info)
+
+    def _plan_small(self, info) -> None:
+        """Fast path: decode once on the driver, ship positions. Only for
+        delete sets whose TOTAL record count is under the threshold —
+        saves every task a delete-file re-read on tiny MOR tables."""
+        import pyarrow.parquet as pq
+
+        from iceberg_metadata_pipeline_spark.catalog.puffin import (
+            read_deletion_vectors,
+        )
+
+        pos_by_file: dict[str, list[tuple[int, int]]] = {}  # file -> [(pos, seq)]
+        eq_sets: list[tuple[tuple[str, ...], tuple, int]] = []  # (cols, rows, seq)
+        for d in info.delete_files:
+            if d.content == 1:
+                if d.is_dv:
+                    for ref, positions in read_deletion_vectors(
+                        d.path, d.content_offset
+                    ):
+                        if d.referenced_data_file is not None and plain_path(
+                            ref
+                        ) != plain_path(d.referenced_data_file):
+                            continue
+                        pos_by_file.setdefault(plain_path(ref), []).extend(
+                            (int(p), d.seq) for p in positions
+                        )
+                else:
+                    t = pq.read_table(d.path, columns=["file_path", "pos"])
+                    for fp, pos in zip(
+                        t.column("file_path").to_pylist(),
+                        t.column("pos").to_pylist(),
+                    ):
+                        pos_by_file.setdefault(plain_path(fp), []).append(
+                            (int(pos), d.seq)
+                        )
+            elif d.content == 2:
+                t = pq.read_table(d.path, columns=list(d.equality_cols))
+                rows = tuple(
+                    tuple(t.column(c)[i].as_py() for c in d.equality_cols)
+                    for i in range(t.num_rows)
+                )
+                eq_sets.append((tuple(d.equality_cols), rows, d.seq))
+
+        self._parts = []
+        for f in info.files:
+            fnorm = plain_path(f.path)
+            dead = tuple(
+                sorted(
+                    p
+                    for p, dseq in pos_by_file.get(fnorm, [])
+                    if dseq >= f.seq
+                )
+            )
+            eqs = tuple(
+                (cols, rows) for cols, rows, dseq in eq_sets if dseq > f.seq
+            )
+            self._parts.append(IceFilePartition(f.path, f.seq, dead, eqs))
+
+    def _plan_descriptors(self, info) -> None:
+        """Scale path: each InputPartition carries only the descriptors
+        of delete files applicable under the sequence rules; the task
+        decodes them itself. A DV descriptor with a referenced_data_file
+        routes only to that file; position-delete parquets (which may
+        reference any data file) route to every file with data_seq ≤
+        delete seq and the task filters rows to its own path."""
+        self._parts = []
+        for f in info.files:
+            fnorm = plain_path(f.path)
+            pos_desc = tuple(
+                (d.path, d.is_dv, d.content_offset)
+                for d in info.delete_files
+                if d.content == 1
+                and d.seq >= f.seq
+                and (
+                    d.referenced_data_file is None
+                    or plain_path(d.referenced_data_file) == fnorm
+                )
+            )
+            eq_desc = tuple(
+                (d.path, tuple(d.equality_cols))
+                for d in info.delete_files
+                if d.content == 2 and d.seq > f.seq
+            )
+            self._parts.append(
+                IceFilePartition(
+                    f.path, f.seq,
+                    pos_descriptors=pos_desc, eq_descriptors=eq_desc,
+                )
+            )
+
+    def partitions(self):
+        return self._parts
+
+
+class PyIceStreamReader(_IceFileReader, TailingStreamReader):
     """Tail an Iceberg table directory (HadoopTableOperations layout):
     the offset is the METADATA VERSION number, and each micro-batch
-    emits the data files that version range ADDED — the append-tailing
-    contract of the pydelta/pyhudi stream twins. A version whose diff
+    emits the data files that version range ADDED. A version whose diff
     REMOVES files (overwrite/compaction) or that carries merge-on-read
-    delete files refuses loudly unless ``ignoreDeletes`` is set (same
-    semantics as pydelta's source: this tails appends; re-process as a
-    batch for row-level change feeds)."""
+    delete files refuses unless ``ignoreDeletes`` is set (the
+    :class:`TailingStreamReader` append-only contract), so appended
+    files have no applicable deletes."""
+
+    OFFSET, INITIAL = "v", 0  # before the first metadata version
+    LIMIT_OPTION = "maxVersionsPerTrigger"
 
     def __init__(self, options):
-        self.path = _local(options["path"])
-        self.ignore_deletes = (
-            str(options.get("ignoreDeletes", "false")).lower() == "true"
-        )
-        info = read_iceberg_table(self.path, decode_dvs=False)
-        self.schema = info.schema
-        self.names = [f.name for f in info.schema.fields]
-        self.fill = {
-            f.name: _py_default(info.defaults.get(f.name), f.dataType)
-            for f in info.schema.fields
-        }
-        lim = int(options.get("maxVersionsPerTrigger", 0) or 0)
-        self._limit = lim if lim > 0 else None
+        super().__init__(options)
+        self.path = source_path(options)
+        self._read_schema(read_iceberg_table(self.path, decode_dvs=False))
         # Kafka-source naming: when a checkpointed offset points below the
         # expire_iceberg_metadata horizon, failOnDataLoss=false resumes
         # from the oldest retained version (accepting the gap) instead of
@@ -333,22 +326,9 @@ class PyIceStreamReader(DataSourceStreamReader):
         self._fail_on_data_loss = (
             str(options.get("failOnDataLoss", "true")).lower() != "false"
         )
-        # engine-confirmed position (pyhudi/pydelta contract: first
-        # batch unthrottled, never bound behind the checkpointed start)
-        self._pos: int | None = None
 
-    def initialOffset(self) -> dict:
-        return {"v": 0}  # before the first metadata version
-
-    def latestOffset(self) -> dict:
-        versions = list_metadata_versions(self.path)
-        if not versions:
-            return {"v": self._pos or 0}
-        if self._limit is None or self._pos is None:
-            return {"v": versions[-1]}
-        fresh = [v for v in versions if v > self._pos]
-        take = fresh[: self._limit]
-        return {"v": take[-1] if take else self._pos}
+    def _backlog(self, pos) -> list:
+        return [v for v in list_metadata_versions(self.path) if pos is None or v > pos]
 
     def _files_at(self, v: int) -> dict[str, object]:
         if v <= 0:
@@ -370,70 +350,26 @@ class PyIceStreamReader(DataSourceStreamReader):
                 )
             v = retained[0]
         info = read_iceberg_table(self.path, decode_dvs=False, version=v)
-        if info.delete_files and not self.ignore_deletes:
-            raise ValueError(
-                f"metadata v{v} carries merge-on-read delete files; this "
-                "source tails APPENDS — pass .option('ignoreDeletes',"
-                "'true') to skip them, or re-process the table as a batch"
-            )
-        return {_norm(f.path): f for f in info.files}
+        if info.delete_files:
+            self._refuse_deletes(f"metadata v{v} carries merge-on-read delete files")
+        return {plain_path(f.path): f for f in info.files}
 
-    def partitions(self, start: dict, end: dict):
-        self._pos = max(self._pos or 0, int(start["v"]))
-        lo, hi = int(start["v"]), int(end["v"])
-        before = self._files_at(lo)
-        after = self._files_at(hi)
+    def _added(self, lo: int, hi: int) -> list:
+        before = self._files_at(int(lo))
+        after = self._files_at(int(hi))
         vanished = sorted(set(before) - set(after))
-        if vanished and not self.ignore_deletes:
-            raise ValueError(
+        if vanished:
+            self._refuse_deletes(
                 f"metadata v{lo}→v{hi} removes {len(vanished)} file(s) "
-                "(overwrite/compaction); this source tails APPENDS — pass "
-                ".option('ignoreDeletes','true') to skip removals, or "
-                "re-process the table as a batch"
+                "(overwrite/compaction)"
             )
         return [
             IceFilePartition(after[p].path, after[p].seq)
             for p in sorted(set(after) - set(before))
         ]
 
-    def read(self, partition: IceFilePartition):
-        # appended files have no applicable deletes by construction
-        # (delete-carrying versions refuse above); plain columnar pass,
-        # vectorized (round 12): RecordBatch yields, O(1) default fills
-        import pyarrow.parquet as pq
 
-        from iceberg_metadata_pipeline_spark.ingest import arrow_scan
-
-        pa_schema = arrow_scan.spark_to_arrow_schema(self.schema)
-        pf = pq.ParquetFile(partition.path)
-        file_cols = set(pf.schema_arrow.names)
-        want = [n for n in self.names if n in file_cols]
-        for batch in pf.iter_batches(columns=want):
-            got = dict(zip(batch.schema.names, batch.columns))
-            arrays = [
-                got[name]
-                if name in got
-                else arrow_scan.fill_array(
-                    self.fill[name], batch.num_rows, pa_schema.field(i).type
-                )
-                for i, name in enumerate(self.names)
-            ]
-            out = arrow_scan.finish_batch(arrays, pa_schema)
-            if out is not None:
-                yield out
-
-    def commit(self, end: dict) -> None:
-        self._pos = max(self._pos or 0, int(end["v"]))
-
-
-@dataclass
-class IceWriteCommit(WriterCommitMessage):
-    # files: [(tmp_path, rows, size, partition_json)] — one entry per
-    # (task, partition value); partition_json is '{}' when unpartitioned
-    files: tuple = ()
-
-
-class PyIceBatchWriter(DataSourceArrowWriter):
+class PyIceBatchWriter(StagedArrowWriter):
     """``df.write.format("pyice")`` — write symmetry across all four
     DataSources, now a DIRECT Iceberg commit (round 9; drops the r8
     ``_writer_catalog`` sidecar): tasks write invisible
@@ -457,91 +393,50 @@ class PyIceBatchWriter(DataSourceArrowWriter):
     Reference parity: the commit protocol the reference delegates to
     iceberg-spark-runtime (entrypoint-spark.sh:74), jar-free."""
 
-    def __init__(self, schema: T.StructType, options, overwrite: bool):
-        import os
+    WRITER = "pyice writer"
 
-        self.dest = _local(options["path"])
-        self.overwrite = overwrite
-        self.schema = schema
-        self.data_dir = os.path.join(self.dest, "data")
+    def __init__(self, schema: T.StructType, options, overwrite: bool):
+        super().__init__(schema, overwrite)
+        self.dest = source_path(options)
+        self.stage_dir = os.path.join(self.dest, "data")
         self.exists = os.path.isdir(os.path.join(self.dest, "metadata"))
         if self.exists:
             info = read_iceberg_table(self.dest, decode_dvs=False)
-            if [(f.name, f.dataType) for f in info.schema.fields] != [
-                (f.name, f.dataType) for f in schema.fields
-            ]:
-                raise ValueError(
-                    "pyice writer: dataframe schema does not match the "
-                    f"table ({info.schema.simpleString()}) — evolve the "
-                    "table first or align the dataframe"
-                )
+            self._check_schema(info.schema)
             # identity partition fields of the default spec, in order
             self.part_cols = [src for _name, src in info.identity_partition]
             self.part_names = [name for name, _src in info.identity_partition]
         else:
-            raw = options.get("partitionBy", "") or ""
-            self.part_cols = [c.strip() for c in raw.split(",") if c.strip()]
+            self.part_cols = self._partition_by(options)
             self.part_names = list(self.part_cols)
-            missing = [c for c in self.part_cols if c not in schema.fieldNames()]
-            if missing:
-                raise ValueError(
-                    f"pyice writer: partitionBy columns {missing} not in schema"
-                )
-        os.makedirs(self.data_dir, exist_ok=True)
 
-    def write(self, iterator):
-        """Arrow-native (round-12 continuation): the task receives
-        ``pa.RecordBatch``es and splits them by identity partition
-        tuple columnar-side — value columns never round-trip through
-        per-row Python (the reader vectorization's write symmetry)."""
-        import json as _json
-        import os
-        import uuid as _uuid
-
-        import pyarrow.parquet as pq
-
-        from iceberg_metadata_pipeline_spark.ingest.arrow_write import (
-            grouped_arrow_tables,
+    def _file_key(self, values: tuple) -> str:
+        return json.dumps(
+            {pn: None if v is None else str(v) for pn, v in zip(self.part_names, values)}
         )
 
-        out = []
-        for pv, table in grouped_arrow_tables(
-            iterator, self.schema, self.part_cols, writer="pyice writer"
-        ):
-            tmp = os.path.join(
-                self.data_dir, f"_tmp-{_uuid.uuid4().hex}.parquet"
-            )
-            pq.write_table(table, tmp)
-            part = {
-                pn: (None if v is None else str(v))
-                for pn, v in zip(self.part_names, pv)
-            }
-            out.append(
-                (tmp, table.num_rows, os.path.getsize(tmp), _json.dumps(part))
-            )
-        return IceWriteCommit(files=tuple(out))
-
-    def _gather(self, messages):
-        """Rename every task's tmp files into place and return the
-        DataFileEntry list for the commit (deterministic order)."""
-        import json as _json
-        import os
+    def _commit(self, staged, epoch) -> None:
+        """Rename every staged file into place and commit them as ONE
+        snapshot; a stream epoch's watermark rides the same metadata
+        write (a crash between the two could double-apply the epoch)."""
         import uuid as _uuid
 
+        from iceberg_metadata_pipeline_spark.catalog.iceberg_format import (
+            commit_iceberg_append,
+            create_iceberg_table_dir,
+        )
         from iceberg_metadata_pipeline_spark.catalog.metacat import (
             DataFileEntry,
         )
 
-        entries = []
-        flat = []
-        for m in messages:
-            if m is None:
-                continue
-            flat.extend(getattr(m, "files", ()) or ())
-        for tmp, rows, size, part_json in sorted(flat):
-            final = os.path.join(
-                self.data_dir, f"part-{_uuid.uuid4().hex}.parquet"
+        if not self.exists:
+            create_iceberg_table_dir(
+                self.dest, self.schema, partition_by=self.part_cols
             )
+            self.exists = True
+        entries = []
+        for tmp, rows, size, part_json in staged:
+            final = os.path.join(self.stage_dir, f"part-{_uuid.uuid4().hex}.parquet")
             os.rename(tmp, final)
             entries.append(
                 DataFileEntry(
@@ -550,44 +445,16 @@ class PyIceBatchWriter(DataSourceArrowWriter):
                     file_size_bytes=size,
                     format="PARQUET",
                     partition={
-                        k: v
-                        for k, v in _json.loads(part_json).items()
-                        if v is not None
+                        k: v for k, v in json.loads(part_json).items() if v is not None
                     },
                 )
             )
-        return entries
-
-    def _ensure_table(self):
-        from iceberg_metadata_pipeline_spark.catalog.iceberg_format import (
-            create_iceberg_table_dir,
-        )
-
-        if not self.exists:
-            create_iceberg_table_dir(
-                self.dest, self.schema, partition_by=self.part_cols
-            )
-            self.exists = True
-
-    def commit(self, messages):
-        from iceberg_metadata_pipeline_spark.catalog.iceberg_format import (
-            commit_iceberg_append,
-        )
-
-        self._ensure_table()
-        entries = self._gather(messages)
-        if entries or self.overwrite:
+        if epoch is not None:
             commit_iceberg_append(
-                self.dest, entries, overwrite=self.overwrite
+                self.dest, entries, extra_properties={self._watermark: str(epoch)}
             )
-
-    def abort(self, messages):
-        import os
-
-        for m in messages:
-            for tmp, *_rest in getattr(m, "files", ()) or ():
-                if os.path.exists(tmp):
-                    os.remove(tmp)
+        elif entries or self.overwrite:
+            commit_iceberg_append(self.dest, entries, overwrite=self.overwrite)
 
 
 class PyIceStreamWriter(PyIceBatchWriter, DataSourceStreamArrowWriter):
@@ -602,66 +469,42 @@ class PyIceStreamWriter(PyIceBatchWriter, DataSourceStreamArrowWriter):
 
     def __init__(self, schema: T.StructType, options, overwrite: bool):
         super().__init__(schema, options, overwrite)
-        self.app_id = options.get("checkpointAppId", "pyice-sink")
+        self._watermark = "stream-watermark-" + options.get(
+            "checkpointAppId", "pyice-sink"
+        )
 
-    def commit(self, messages, batchId: int) -> None:  # noqa: N803
-        import json as _json
-        import os
-
+    def _last_epoch(self) -> int:
         from iceberg_metadata_pipeline_spark.catalog.iceberg_format import (
             _latest_metadata_path,
-            commit_iceberg_append,
         )
 
-        key = f"stream-watermark-{self.app_id}"
-        if self.exists or os.path.isdir(os.path.join(self.dest, "metadata")):
-            with open(_latest_metadata_path(self.dest)) as fh:
-                last = _json.load(fh).get("properties", {}).get(key)
-            if last is not None and int(batchId) <= int(last):
-                self.abort(messages, batchId)  # re-delivered epoch
-                return
-        self._ensure_table()
-        entries = self._gather(messages)
-        # watermark travels IN the same commit as the files — crash
-        # between the two could otherwise double-apply the epoch
-        commit_iceberg_append(
-            self.dest, entries, extra_properties={key: str(int(batchId))}
-        )
-
-    def abort(self, messages, batchId: int) -> None:  # noqa: N803
-        PyIceBatchWriter.abort(self, messages)
+        if not os.path.isdir(os.path.join(self.dest, "metadata")):
+            return -1
+        with open(_latest_metadata_path(self.dest)) as fh:
+            last = json.load(fh).get("properties", {}).get(self._watermark)
+        return -1 if last is None else int(last)
 
 
-class PyIceDataSource(DataSource):
+class PyIceDataSource(FormatDataSource):
     """``spark.dataSource.register(PyIceDataSource)`` → format name
-    "pyice" for batch reads and readStream tailing of Iceberg table
-    directories."""
+    "pyice" for batch reads/writes, readStream tailing and writeStream
+    of Iceberg table directories."""
 
-    @classmethod
-    def name(cls) -> str:
-        return "pyice"
+    FORMAT = "pyice"
+    READER = PyIceBatchReader
+    WRITER = PyIceBatchWriter
+    STREAM_WRITER = PyIceStreamWriter
 
     def schema(self):
         return read_iceberg_table(
-            _local(self.options["path"]), decode_dvs=False
+            source_path(self.options), decode_dvs=False
         ).schema
 
-    def reader(self, schema: T.StructType) -> DataSourceReader:
-        return PyIceBatchReader(self.options)
-
-    def writer(self, schema: T.StructType, overwrite: bool) -> DataSourceWriter:
-        return PyIceBatchWriter(schema, self.options, overwrite)
-
-    def streamWriter(self, schema: T.StructType, overwrite: bool):
-        return PyIceStreamWriter(schema, self.options, overwrite)
-
-    def streamReader(self, schema: T.StructType) -> DataSourceStreamReader:
+    def streamReader(self, schema: T.StructType):
         return PyIceStreamReader(self.options)
 
 
-def register(spark) -> None:
-    """Idempotent format registration (latest registration wins)."""
-    spark.dataSource.register(PyIceDataSource)
+register = PyIceDataSource.register
 
 
 def _declare_queries() -> None:

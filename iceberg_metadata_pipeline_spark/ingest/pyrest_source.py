@@ -45,24 +45,18 @@ plan-verb interop path.
 from __future__ import annotations
 
 import json
-from dataclasses import dataclass, field
+import os
+from dataclasses import dataclass
 
 from pyspark.sql import types as T
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    DataSourceArrowWriter,
-    DataSourceStreamReader,
-    DataSourceWriter,
-    InputPartition,
-    WriterCommitMessage,
+from pyspark.sql.datasource import DataSourceReader, InputPartition
+
+from iceberg_metadata_pipeline_spark.catalog.metacat import plain_path
+from iceberg_metadata_pipeline_spark.ingest.datasource_base import (
+    FormatDataSource,
+    StagedArrowWriter,
+    TailingStreamReader,
 )
-
-
-def _norm(p: str) -> str:
-    import re
-
-    return re.sub(r"^file:/+", "/", p)
 
 
 def _req(url: str, method: str = "GET", body: dict | None = None) -> dict:
@@ -93,6 +87,32 @@ def _plan_req(url: str, ns: str, table: str, body: dict) -> dict:
         tries += 1
         plan = _req(f"{url}/v1/namespaces/{ns}/tables/{table}/plan/{pid}")
     return plan
+
+
+def _table_ref(options) -> tuple[str, str, str]:
+    """(catalog url, namespace, table) from ``url`` and ``load``/``save``
+    ("namespace.table") or ``option("table")``."""
+    ident = options.get("table") or options.get("path")
+    if not ident or "." not in ident:
+        raise ValueError(
+            "pyrest needs load('namespace.table') / save('namespace.table') "
+            "or option('table')"
+        )
+    ns, table = ident.split(".", 1)
+    return options["url"].rstrip("/"), ns, table
+
+
+def _load_table(url: str, ns: str, table: str) -> dict:
+    """loadTable → the served table metadata."""
+    return _req(f"{url}/v1/namespaces/{ns}/tables/{table}")["metadata"]
+
+
+def _current_schema(md: dict) -> dict:
+    return next(
+        s
+        for s in md["schemas"]
+        if s.get("schema-id", 0) == md.get("current-schema-id", 0)
+    )
 
 
 @dataclass
@@ -175,11 +195,11 @@ class _RestTaskReadMixin:
 
         from iceberg_metadata_pipeline_spark.ingest import arrow_scan
 
-        me = _norm(partition.path)
+        me = plain_path(partition.path)
         dead_parts = []
         for dpath in partition.pos_deletes:
             t = pq.read_table(dpath, columns=["file_path", "pos"])
-            dead_parts.append(arrow_scan.positions_for_file(t, me, _norm))
+            dead_parts.append(arrow_scan.positions_for_file(t, me, plain_path))
         eq_probe = []
         for cols, dpath in partition.eq_deletes:
             t = pq.read_table(dpath, columns=list(cols))
@@ -235,19 +255,13 @@ class _RestTaskReadMixin:
 
 
 class PyRestReader(_RestTaskReadMixin, DataSourceReader):
-    def __init__(self, options: dict, schema: T.StructType):
-        self.url = options["url"].rstrip("/")
-        ident = options.get("table") or options.get("path")
-        if not ident or "." not in ident:
-            raise ValueError(
-                "pyrest needs load('namespace.table') or option('table')"
-            )
-        self.ns, self.table = ident.split(".", 1)
-        self.snapshot_id = options.get("snapshotid")
+    def __init__(self, options, schema: T.StructType):
+        self.url, self.ns, self.table = _table_ref(options)
+        self.snapshot_id = options.get("snapshotId")
         self.filter_json = options.get("filter")
         # pageSize: ask the server for a PAGED plan (plan-tasks tokens
         # walked transparently below) — bounds every response to a page
-        self.page_size = int(options.get("pagesize", 0) or 0)
+        self.page_size = int(options.get("pageSize", 0) or 0)
         self.names = [f.name for f in schema.fields]
         self.spark_schema = schema
 
@@ -319,21 +333,13 @@ class PyRestReader(_RestTaskReadMixin, DataSourceReader):
                 f"equality-delete file {d.get('file-path')} without ids"
             )
         if not hasattr(self, "_id_to_name"):
-            out = _req(
-                f"{self.url}/v1/namespaces/{self.ns}/tables/{self.table}"
-            )
-            md = out["metadata"]
-            schema = next(
-                s
-                for s in md["schemas"]
-                if s.get("schema-id", 0) == md.get("current-schema-id", 0)
-            )
+            schema = _current_schema(_load_table(self.url, self.ns, self.table))
             self._id_to_name = {f["id"]: f["name"] for f in schema["fields"]}
         return [self._id_to_name[i] for i in ids]
 
 
 
-class PyRestStreamReader(_RestTaskReadMixin, DataSourceStreamReader):
+class PyRestStreamReader(_RestTaskReadMixin, TailingStreamReader):
     """Tail APPENDS through the REST catalog (round 12 — the thin
     engine's streaming leg): the OFFSET is the served current snapshot
     id from loadTable (monotone along the mirror's snapshot-log; the
@@ -341,31 +347,21 @@ class PyRestStreamReader(_RestTaskReadMixin, DataSourceStreamReader):
     metacat-snapshot-id summary mapping), and each micro-batch plans
     BOTH offsets server-side and emits the data files the range ADDED.
     A range that REMOVES files (overwrite/compaction) or whose new
-    tasks reference delete files refuses loudly unless
-    ``ignoreDeletes`` — the same appends-only contract as the
-    pyice/pydelta/pyhudi stream twins. No metadata JSON, no manifests
-    client-side; planning stays on the catalog."""
+    tasks reference delete files refuses unless ``ignoreDeletes`` (the
+    :class:`TailingStreamReader` append-only contract). No metadata
+    JSON, no manifests client-side; planning stays on the catalog."""
 
-    def __init__(self, options: dict, schema: T.StructType):
-        self.url = options["url"].rstrip("/")
-        ident = options.get("table") or options.get("path")
-        if not ident or "." not in ident:
-            raise ValueError(
-                "pyrest needs load('namespace.table') or option('table')"
-            )
-        self.ns, self.table = ident.split(".", 1)
-        self.ignore_deletes = (
-            str(options.get("ignoredeletes", "false")).lower() == "true"
-        )
+    OFFSET = "sid"
+
+    def __init__(self, schema: T.StructType, options):
+        super().__init__(options)
+        self.url, self.ns, self.table = _table_ref(options)
         self.names = [f.name for f in schema.fields]
         self.spark_schema = schema
 
-    def _current_sid(self):
-        md = _req(f"{self.url}/v1/namespaces/{self.ns}/tables/{self.table}")[
-            "metadata"
-        ]
-        sid = md.get("current-snapshot-id")
-        return None if sid in (None, -1) else int(sid)
+    def _backlog(self, pos) -> list:
+        sid = _load_table(self.url, self.ns, self.table).get("current-snapshot-id")
+        return [] if sid in (None, -1, pos) else [int(sid)]
 
     def _plan_paths(self, sid: int) -> dict:
         plan = _plan_req(
@@ -373,45 +369,30 @@ class PyRestStreamReader(_RestTaskReadMixin, DataSourceStreamReader):
         )
         out = {}
         for task in plan.get("file-scan-tasks") or []:
-            out[_norm(task["data-file"]["file-path"])] = task
+            out[plain_path(task["data-file"]["file-path"])] = task
         return out
 
-    def initialOffset(self) -> dict:
-        return {"sid": None}
-
-    def latestOffset(self) -> dict:
-        return {"sid": self._current_sid()}
-
-    def partitions(self, start: dict, end: dict):
-        s_sid, e_sid = start.get("sid"), end.get("sid")
+    def _added(self, s_sid, e_sid) -> list:
         if e_sid is None or s_sid == e_sid:
             return []
         after = self._plan_paths(e_sid)
         before = self._plan_paths(s_sid) if s_sid is not None else {}
         vanished = sorted(set(before) - set(after))
-        if vanished and not self.ignore_deletes:
-            raise ValueError(
+        if vanished:
+            self._refuse_deletes(
                 f"pyrest stream: snapshot range removes {len(vanished)} "
-                "file(s) (overwrite/compaction); this source tails "
-                "APPENDS — pass .option('ignoreDeletes','true') to skip "
-                "removals, or re-process the table as a batch"
+                "file(s) (overwrite/compaction)"
             )
         parts = []
         for p in sorted(set(after) - set(before)):
             task = after[p]
-            if task.get("delete-file-references") and not self.ignore_deletes:
-                raise ValueError(
+            if task.get("delete-file-references"):
+                self._refuse_deletes(
                     f"pyrest stream: newly added file {p} carries "
-                    "merge-on-read delete references; this source tails "
-                    "APPENDS — pass .option('ignoreDeletes','true') to "
-                    "read it ignoring row-level deletes, or re-process "
-                    "as a batch"
+                    "merge-on-read delete references"
                 )
             parts.append(RestScanTask(path=task["data-file"]["file-path"]))
         return parts
-
-    def commit(self, end: dict) -> None:
-        pass  # offsets live in the streaming checkpoint
 
 
 def _manifest_part_value(v, source_type: str):
@@ -440,15 +421,7 @@ def _manifest_part_value(v, source_type: str):
     raise ValueError(f"unsupported partition source type {source_type!r}")
 
 
-@dataclass
-class RestWriteCommit(WriterCommitMessage):
-    # [(tmp_path, rows, size, partition_dict)] — parquet task files
-    # staged under the table's data/ dir (one per identity partition
-    # value), invisible until the REST commit names them
-    files: tuple = ()
-
-
-class PyRestBatchWriter(DataSourceArrowWriter):
+class PyRestBatchWriter(StagedArrowWriter):
     """``df.write.format("pyrest").option("url", base).mode("append")
     .save("ns.table")`` — the WRITE symmetry of the thin-engine story
     (round 12; r11 left pyrest read-only): tasks stage invisible
@@ -474,6 +447,7 @@ class PyRestBatchWriter(DataSourceArrowWriter):
     Reference parity: the commit protocol the reference delegates to
     iceberg-spark-runtime's REST catalog integration, jar-free."""
 
+    WRITER = "pyrest writer"
     MAX_RETRIES = 5
 
     def __init__(self, schema: T.StructType, options, overwrite: bool):
@@ -482,35 +456,17 @@ class PyRestBatchWriter(DataSourceArrowWriter):
                 "pyrest writer: append only — overwrite/replace commits "
                 "go through the warehouse's own commit path"
             )
-        self.url = options["url"].rstrip("/")
-        ident = options.get("table") or options.get("path")
-        if not ident or "." not in ident:
-            raise ValueError(
-                "pyrest needs save('namespace.table') or option('table')"
-            )
-        self.ns, self.table = ident.split(".", 1)
-        self.schema = schema
-        out = _req(f"{self.url}/v1/namespaces/{self.ns}/tables/{self.table}")
-        md = out["metadata"]
-        self.location = md["location"]
-        served = next(
-            s
-            for s in md["schemas"]
-            if s.get("schema-id", 0) == md.get("current-schema-id", 0)
-        )
+        super().__init__(schema, overwrite)
+        self.url, self.ns, self.table = _table_ref(options)
+        md = _load_table(self.url, self.ns, self.table)
+        self.location = plain_path(md["location"])
+        self.stage_dir = os.path.join(self.location, "data")
+        served = _current_schema(md)
         from iceberg_metadata_pipeline_spark.catalog.iceberg_format import (
             iceberg_schema_to_spark,
         )
 
-        spark_served = iceberg_schema_to_spark(served)
-        if [(f.name, f.dataType) for f in spark_served.fields] != [
-            (f.name, f.dataType) for f in schema.fields
-        ]:
-            raise ValueError(
-                "pyrest writer: dataframe schema does not match the table "
-                f"({spark_served.simpleString()}) — evolve the table first "
-                "or align the dataframe"
-            )
+        self._check_schema(iceberg_schema_to_spark(served))
         spec = next(
             (
                 s
@@ -568,41 +524,17 @@ class PyRestBatchWriter(DataSourceArrowWriter):
                     "source_type": _ice2src[str(src["type"])],
                 }
             )
+        self.part_cols = [pf["column"] for pf in self.part_fields]
 
-    def write(self, iterator):
-        import os
-        import uuid as _uuid
+    def _file_key(self, values: tuple) -> dict:
+        # the spec-typed tuple rides the commit message into the manifest
+        return {
+            pf["name"]: _manifest_part_value(v, pf["source_type"])
+            for pf, v in zip(self.part_fields, values)
+        }
 
-        import pyarrow.parquet as pq
-
-        from iceberg_metadata_pipeline_spark.ingest.arrow_write import (
-            grouped_arrow_tables,
-        )
-
-        data_dir = os.path.join(_norm(self.location), "data")
-        os.makedirs(data_dir, exist_ok=True)
-        # Arrow-native (round-12 continuation): identity partitioning
-        # splits the task's RecordBatches columnar-side — one staged
-        # file per partition value, its spec-typed tuple riding the
-        # commit message into the manifest
-        out = []
-        for key, table in grouped_arrow_tables(
-            iterator,
-            self.schema,
-            [pf["column"] for pf in self.part_fields],
-            writer="pyrest writer",
-        ):
-            tmp = os.path.join(data_dir, f"_tmp-{_uuid.uuid4().hex}.parquet")
-            pq.write_table(table, tmp)
-            part = {
-                pf["name"]: _manifest_part_value(v, pf["source_type"])
-                for pf, v in zip(self.part_fields, key)
-            }
-            out.append((tmp, table.num_rows, os.path.getsize(tmp), part))
-        return RestWriteCommit(files=tuple(out))
-
-    def commit(self, messages):
-        import os
+    def _commit(self, staged, epoch) -> None:
+        import urllib.error
         import uuid as _uuid
 
         from iceberg_metadata_pipeline_spark.catalog import avro_io
@@ -611,20 +543,13 @@ class PyRestBatchWriter(DataSourceArrowWriter):
             manifest_list_schema,
         )
 
-        staged = []
-        for m in messages:
-            if m is None:
-                continue
-            staged.extend(getattr(m, "files", ()) or ())
         if not staged:
             return
-        loc = _norm(self.location)
-        data_dir = os.path.join(loc, "data")
-        meta_dir = os.path.join(loc, "metadata")
+        meta_dir = os.path.join(self.location, "metadata")
         os.makedirs(meta_dir, exist_ok=True)
         finals = []
-        for tmp, rows, size, part in sorted(staged, key=lambda t: t[0]):
-            final = os.path.join(data_dir, f"part-{_uuid.uuid4().hex}.parquet")
+        for tmp, rows, size, part in staged:
+            final = os.path.join(self.stage_dir, f"part-{_uuid.uuid4().hex}.parquet")
             os.rename(tmp, final)
             finals.append((final, rows, size, part))
         sid = int(_uuid.uuid4().int % (1 << 62))
@@ -677,8 +602,6 @@ class PyRestBatchWriter(DataSourceArrowWriter):
             ],
         )
         url = f"{self.url}/v1/namespaces/{self.ns}/tables/{self.table}"
-        import urllib.error
-
         for attempt in range(self.MAX_RETRIES):
             cur = _req(url)["metadata"].get("current-snapshot-id")
             body = {
@@ -717,53 +640,25 @@ class PyRestBatchWriter(DataSourceArrowWriter):
                 # and the post — appends are parent-agnostic, so the
                 # staged manifest re-posts against the fresh ref
 
-    def abort(self, messages):
-        import os
-
-        for m in messages:
-            for tmp, *_rest in getattr(m, "files", ()) or ():
-                if os.path.exists(tmp):
-                    os.remove(tmp)
-
-
-class PyRestDataSource(DataSource):
-    @classmethod
-    def name(cls) -> str:
-        return "pyrest"
+class PyRestDataSource(FormatDataSource):
+    FORMAT = "pyrest"
+    WRITER = PyRestBatchWriter
+    STREAM_READER = PyRestStreamReader
 
     def schema(self):
         from iceberg_metadata_pipeline_spark.catalog.iceberg_format import (
             iceberg_schema_to_spark,
         )
 
-        url = self.options["url"].rstrip("/")
-        ident = self.options.get("table") or self.options.get("path")
-        if not ident or "." not in ident:
-            raise ValueError(
-                "pyrest needs load('namespace.table') or option('table')"
-            )
-        ns, table = ident.split(".", 1)
-        out = _req(f"{url}/v1/namespaces/{ns}/tables/{table}")
-        md = out["metadata"]
-        schema = next(
-            s
-            for s in md["schemas"]
-            if s.get("schema-id", 0) == md.get("current-schema-id", 0)
+        return iceberg_schema_to_spark(
+            _current_schema(_load_table(*_table_ref(self.options)))
         )
-        return iceberg_schema_to_spark(schema)
 
     def reader(self, schema: T.StructType) -> DataSourceReader:
-        return PyRestReader(dict(self.options), schema)
-
-    def writer(self, schema: T.StructType, overwrite: bool) -> DataSourceWriter:
-        return PyRestBatchWriter(schema, dict(self.options), overwrite)
-
-    def streamReader(self, schema: T.StructType):
-        return PyRestStreamReader(dict(self.options), schema)
+        return PyRestReader(self.options, schema)
 
 
-def register(spark) -> None:
-    spark.dataSource.register(PyRestDataSource)
+register = PyRestDataSource.register
 
 
 def _declare_queries() -> None:

@@ -35,11 +35,12 @@ import os
 from dataclasses import dataclass
 
 from pyspark.sql import types as T
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    DataSourceStreamReader,
-    InputPartition,
+from pyspark.sql.datasource import DataSourceReader, InputPartition
+
+from iceberg_metadata_pipeline_spark.ingest.datasource_base import (
+    FormatDataSource,
+    TailingStreamReader,
+    source_path,
 )
 
 _SCHEMA = T.StructType(
@@ -50,10 +51,6 @@ _SCHEMA = T.StructType(
         T.StructField("data", T.BinaryType(), True),
     ]
 )
-
-
-def _local(path: str) -> str:
-    return path[len("file:") :] if path.startswith("file:") else path
 
 
 def _tar_member_batches(path: str):
@@ -116,7 +113,7 @@ class TarShardPartition(InputPartition):
 
 class PyWdsReader(DataSourceReader):
     def __init__(self, options):
-        root = _local(options["path"])
+        root = source_path(options)
         if os.path.isfile(root):
             self._shards = [root]
         else:
@@ -131,24 +128,21 @@ class PyWdsReader(DataSourceReader):
         yield from _tar_member_batches(partition.path)
 
 
-class PyWdsStreamReader(DataSourceStreamReader):
-    """Tail a GROWING shard directory: the offset is the sorted list
-    position of the last consumed shard name, so each micro-batch emits
-    exactly the shards that appeared since — the arrival pattern of a
-    corpus being produced shard-by-shard upstream. Shards are assumed
-    immutable once present (the WebDataset contract: writers create
-    under a temp name and rename). Lexicographic shard order IS the
-    offset order, matching write_webdataset_shards' zero-padded names."""
+class PyWdsStreamReader(TailingStreamReader):
+    """Tail a GROWING shard directory: the offset is the name of the
+    last consumed shard, so each micro-batch emits exactly the shards
+    that appeared since — the arrival pattern of a corpus being produced
+    shard-by-shard upstream. Shards are assumed immutable once present
+    (the WebDataset contract: writers create under a temp name and
+    rename). Lexicographic shard order IS the offset order, matching
+    write_webdataset_shards' zero-padded names."""
 
-    def __init__(self, options):
-        self.root = _local(options["path"])
-        lim = int(options.get("maxShardsPerTrigger", 0) or 0)
-        self._limit = lim if lim > 0 else None
-        # engine-confirmed position (same contract as pyhudi/pydelta):
-        # throttling starts at the SECOND micro-batch of a reader
-        # instance — bounding before the engine reveals its checkpointed
-        # start could regress the offset log
-        self._pos: str | None = None
+    OFFSET, INITIAL = "last", ""
+    LIMIT_OPTION = "maxShardsPerTrigger"
+
+    def __init__(self, schema: T.StructType, options):
+        super().__init__(options)
+        self.root = source_path(options)
 
     def _shards(self) -> list[str]:
         return sorted(
@@ -156,58 +150,34 @@ class PyWdsStreamReader(DataSourceStreamReader):
             for p in glob.glob(os.path.join(self.root, "*.tar"))
         )
 
-    def initialOffset(self) -> dict:
-        return {"last": ""}
+    def _backlog(self, pos) -> list:
+        return [n for n in self._shards() if pos is None or n > pos]
 
-    def latestOffset(self) -> dict:
-        names = self._shards()
-        if not names:
-            return {"last": self._pos or ""}
-        if self._limit is None or self._pos is None:
-            return {"last": names[-1]}
-        fresh = [n for n in names if n > self._pos]
-        take = fresh[: self._limit]
-        return {"last": take[-1] if take else self._pos}
-
-    def partitions(self, start: dict, end: dict):
-        self._pos = max(self._pos or "", start["last"])
-        lo, hi = start["last"], end["last"]
-        fresh = [n for n in self._shards() if lo < n <= hi]
+    def _added(self, lo: str, hi: str) -> list:
         return [
-            TarShardPartition(os.path.join(self.root, n)) for n in fresh
+            TarShardPartition(os.path.join(self.root, n))
+            for n in self._shards()
+            if lo < n <= hi
         ]
 
     def read(self, partition: TarShardPartition):
         yield from _tar_member_batches(partition.path)
 
-    def commit(self, end: dict) -> None:
-        # offsets live in the query checkpoint; track locally for the
-        # maxShardsPerTrigger bound
-        self._pos = max(self._pos or "", end["last"])
 
-
-class PyWdsDataSource(DataSource):
+class PyWdsDataSource(FormatDataSource):
     """``spark.dataSource.register(PyWdsDataSource)`` → format name
     "pywds" for batch reads and readStream tailing of WebDataset
     tar-shard directories."""
 
-    @classmethod
-    def name(cls) -> str:
-        return "pywds"
+    FORMAT = "pywds"
+    READER = PyWdsReader
+    STREAM_READER = PyWdsStreamReader
 
     def schema(self):
         return _SCHEMA
 
-    def reader(self, schema: T.StructType) -> DataSourceReader:
-        return PyWdsReader(self.options)
 
-    def streamReader(self, schema: T.StructType) -> DataSourceStreamReader:
-        return PyWdsStreamReader(self.options)
-
-
-def register(spark) -> None:
-    """Idempotent format registration (latest registration wins)."""
-    spark.dataSource.register(PyWdsDataSource)
+register = PyWdsDataSource.register
 
 
 def write_webdataset_shards(df, dest: str, key_col: str = "key"):

@@ -10,10 +10,11 @@ Iceberg's `writeStream.format("iceberg")` append sink.
 
 Semantics (Iceberg streaming-append parity):
 
-- **executor-parallel file writes**: each partition's rows stream to one
-  parquet file under ``<location>/data/`` via pyarrow (no SparkSession,
-  no row collection on the driver); the driver receives only
-  (path, rowcount, bytes) commit messages.
+- **executor-parallel file writes**: each task stages its Arrow batches
+  as one parquet file under ``<location>/data/`` via pyarrow (no
+  SparkSession, no row collection on the driver, no file for an empty
+  task); the driver receives only (path, rowcount, bytes) commit
+  messages (ingest/datasource_base.py's staged writer).
 - **one atomic commit per micro-batch**: ``commit(messages, batchId)``
   registers all of the batch's files in a single append commit through
   the catalog's optimistic CAS protocol — readers see the whole batch
@@ -35,86 +36,51 @@ every hop.
 from __future__ import annotations
 
 import os
-import uuid
-from dataclasses import dataclass
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceStreamWriter,
-    DataSourceWriter,
-    WriterCommitMessage,
+from pyspark.sql.datasource import DataSourceStreamArrowWriter
+
+from iceberg_metadata_pipeline_spark.ingest.datasource_base import (
+    FormatDataSource,
+    StagedArrowWriter,
+    StagedFiles,
 )
-
-
-@dataclass
-class _FileCommit(WriterCommitMessage):
-    path: str
-    rows: int
-    size: int
-
 
 _EPOCH_PROP = "stream-sink-last-epoch"
 
 
-class CatalogTableStreamWriter(DataSourceStreamWriter):
+class _FileCommit(StagedFiles):
+    """A parquet file already under the table's data dir as a one-file
+    staged message — how a file written outside a write task reaches
+    ``commit``."""
+
+    def __init__(self, path: str, rows: int, size: int):
+        super().__init__(files=((path, rows, size, None),))
+        self.path = path
+
+
+class CatalogTableBatchWriter(StagedArrowWriter):
+    """Batch append through the executor-parallel file path:
+    ``df.write.format("metacat_table_sink").mode("append")`` — one
+    atomic commit for the whole write (no epoch bookkeeping; batch
+    writes are not replayed by the engine)."""
+
+    WRITER = "metacat_table_sink"
+
     def __init__(self, schema, options):
+        super().__init__(schema)
         loc = options.get("location") or ""
         if not loc:
             raise ValueError("metacat_table_sink requires option 'location'")
         self.location = loc.rstrip("/")
-        self.schema = schema
-        # epoch replay-protection is scoped per STREAM, not per table:
-        # batchIds restart at 0 for a fresh checkpoint and run
-        # independently for a second query into the same table — a single
-        # table-wide high-water mark would silently discard their batches
-        import hashlib
+        self.stage_dir = os.path.join(self.location, "data")
 
-        ckpt = options.get("checkpointlocation") or options.get(
-            "checkpointLocation"
-        )
-        scope = (
-            hashlib.sha1(ckpt.encode()).hexdigest()[:12] if ckpt else "default"
-        )
-        self.epoch_prop = f"{_EPOCH_PROP}.{scope}"
-
-    # -- executor side -----------------------------------------------------
-    def write(self, iterator) -> _FileCommit:
-        import itertools
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
+    def _arrow_schema(self):
+        # the table's own Arrow mapping (nested types included), not the
+        # flat file-format writers' subset
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        data_dir = os.path.join(self.location, "data")
-        os.makedirs(data_dir, exist_ok=True)
-        path = os.path.join(data_dir, f"stream-{uuid.uuid4().hex[:16]}.parquet")
-        names = [f.name for f in self.schema.fields]
-        # the declared arrow schema drives every chunk — an all-NULL
-        # chunk must not infer a null type that mismatches the writer
-        arrow_schema = to_arrow_schema(self.schema)
-        # stream the partition in bounded row-group chunks — the executor
-        # never holds more than one chunk in Python memory
-        CHUNK = 65536
-        total = 0
-        with pq.ParquetWriter(path, arrow_schema) as writer:
-            while True:
-                chunk = list(itertools.islice(iterator, CHUNK))
-                if not chunk:
-                    break
-                rows = [r.asDict() for r in chunk]
-                writer.write_table(
-                    pa.Table.from_pydict(
-                        {n: [r.get(n) for r in rows] for n in names},
-                        schema=arrow_schema,
-                    )
-                )
-                total += len(rows)
-                if len(chunk) < CHUNK:
-                    break
-        return _FileCommit(path=path, rows=total, size=os.path.getsize(path))
+        return to_arrow_schema(self.schema)
 
-    # -- driver side -------------------------------------------------------
     def _table(self):
         from pyspark.sql import SparkSession
 
@@ -125,99 +91,57 @@ class CatalogTableStreamWriter(DataSourceStreamWriter):
         ns, name = self.location.rstrip("/").split("/")[-2:]
         return Catalog(spark, warehouse).load_table(ns, name)
 
-    def commit(self, messages, batchId: int) -> None:
+    def _commit(self, staged, epoch) -> None:
+        import uuid
+
         from iceberg_metadata_pipeline_spark.catalog.metacat import DataFileEntry
 
-        table = self._table()
-        # replay check from DISK state (not in-process memory): a batch
-        # whose epoch is already recorded committed before the failure —
-        # drop its rewritten files instead of double-appending
-        last = table.properties.get(self.epoch_prop)
-        if last is not None and batchId <= int(last):
-            for m in messages:
-                if m is not None:
-                    try:
-                        os.remove(m.path)
-                    except OSError:
-                        pass
+        entries = []
+        for tmp, rows, size, _key in staged:
+            final = os.path.join(self.stage_dir, f"stream-{uuid.uuid4().hex[:16]}.parquet")
+            os.rename(tmp, final)
+            entries.append(
+                DataFileEntry(path=final, record_count=rows, file_size_bytes=size)
+            )
+        if not entries:
             return
-        entries = [
-            DataFileEntry(
-                path=m.path, record_count=m.rows, file_size_bytes=m.size
-            )
-            for m in messages
-            if m is not None and m.rows > 0
-        ]
-        if entries:
-            # the epoch marker rides the SAME commit as the data: either
-            # both become visible or neither — passed as an atomic
-            # property rider so append_files' conflict-retry loop
-            # re-applies it after every refresh()
-            table.append_files(
-                entries,
-                dedupe=False,
-                extra_properties={self.epoch_prop: str(batchId)},
-            )
-        for m in messages:
-            if m is not None and m.rows == 0:
-                try:
-                    os.remove(m.path)
-                except OSError:
-                    pass
-
-    def abort(self, messages, batchId: int) -> None:
-        for m in messages:
-            if m is not None:
-                try:
-                    os.remove(m.path)
-                except OSError:
-                    pass
+        # a stream's epoch marker rides the SAME commit as the data:
+        # either both become visible or neither — passed as an atomic
+        # property rider so append_files' conflict-retry loop re-applies
+        # it after every refresh()
+        extra = None if epoch is None else {self.epoch_prop: str(epoch)}
+        self._table().append_files(entries, dedupe=False, extra_properties=extra)
 
 
-class CatalogTableBatchWriter(DataSourceWriter):
-    """Batch append through the same executor-parallel file path:
-    ``df.write.format("metacat_table_sink").mode("append")`` — one
-    atomic commit for the whole write (no epoch bookkeeping; batch
-    writes are not replayed by the engine)."""
+class CatalogTableStreamWriter(CatalogTableBatchWriter, DataSourceStreamArrowWriter):
+    """One atomic append commit per micro-batch, exactly-once: the
+    committed epoch is recorded in table properties IN the same metadata
+    version as the append, and a replayed batch is detected from DISK
+    state (not in-process memory) and its files dropped."""
 
     def __init__(self, schema, options):
-        self._w = CatalogTableStreamWriter(schema, options)
+        super().__init__(schema, options)
+        # epoch replay-protection is scoped per STREAM, not per table:
+        # batchIds restart at 0 for a fresh checkpoint and run
+        # independently for a second query into the same table — a single
+        # table-wide high-water mark would silently discard their batches
+        import hashlib
 
-    def write(self, iterator):
-        return self._w.write(iterator)
+        ckpt = options.get("checkpointLocation")
+        scope = (
+            hashlib.sha1(ckpt.encode()).hexdigest()[:12] if ckpt else "default"
+        )
+        self.epoch_prop = f"{_EPOCH_PROP}.{scope}"
 
-    def commit(self, messages):
-        from iceberg_metadata_pipeline_spark.catalog.metacat import DataFileEntry
-
-        table = self._w._table()
-        entries = [
-            DataFileEntry(path=m.path, record_count=m.rows, file_size_bytes=m.size)
-            for m in messages
-            if m is not None and m.rows > 0
-        ]
-        if entries:
-            table.append_files(entries, dedupe=False)
-        # mirror the streaming commit: zero-row task files were filtered
-        # out of the commit, so delete them — otherwise they sit as
-        # unregistered orphans under <location>/data/ until
-        # remove_orphan_files
-        for m in messages:
-            if m is not None and m.rows == 0:
-                try:
-                    os.remove(m.path)
-                except OSError:
-                    pass
-
-    def abort(self, messages):
-        self._w.abort(messages, -1)
+    def _last_epoch(self) -> int:
+        last = self._table().properties.get(self.epoch_prop)
+        return -1 if last is None else int(last)
 
 
-class CatalogTableSinkDataSource(DataSource):
+class CatalogTableSinkDataSource(FormatDataSource):
     """`writeStream.format("metacat_table_sink")` (and batch `df.write`)."""
 
-    @classmethod
-    def name(cls) -> str:
-        return "metacat_table_sink"
+    FORMAT = "metacat_table_sink"
 
     def writer(self, schema, overwrite):
         if overwrite:
@@ -232,7 +156,7 @@ class CatalogTableSinkDataSource(DataSource):
 
 def write_table_stream(df, table, checkpoint: str, **opts):
     """Convenience: start an append stream into ``table``."""
-    df.sparkSession.dataSource.register(CatalogTableSinkDataSource)
+    CatalogTableSinkDataSource.register(df.sparkSession)
     return (
         df.writeStream.format("metacat_table_sink")
         .option("location", table.location)

@@ -36,10 +36,11 @@ import json
 import os
 from dataclasses import dataclass
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceStreamReader,
-    InputPartition,
+from pyspark.sql.datasource import InputPartition
+
+from iceberg_metadata_pipeline_spark.ingest.datasource_base import (
+    FormatDataSource,
+    TailingStreamReader,
 )
 
 
@@ -52,42 +53,6 @@ def _load_meta(location: str) -> dict:
         version = int(fh.read().strip())
     with open(os.path.join(meta_dir, f"v{version}.metadata.json")) as fh:
         return json.load(fh)
-
-
-def _added_files_between(
-    location: str, meta: dict, start_id: int, end_id: int, skip_non_append: bool
-) -> list[dict]:
-    """Data files added by commits AFTER ``start_id`` up to and including
-    ``end_id``, oldest-first — the same parent-chain walk as
-    Table.scan_incremental (metacat.py), against raw snapshot-log JSON."""
-    by_id = {s["snapshot_id"]: s for s in meta["snapshots"]}
-    added: list[dict] = []
-    cur = by_id.get(end_id)
-    chain: list[dict] = []
-    while cur is not None and cur["snapshot_id"] != start_id:
-        chain.append(cur)
-        parent = cur.get("parent_snapshot_id")
-        if parent is None:
-            if start_id != 0:
-                raise ValueError(
-                    f"offset snapshot {start_id} is not an ancestor of {end_id}"
-                )
-            cur = None
-        else:
-            cur = by_id.get(parent)
-            if cur is None and start_id != 0:
-                raise ValueError(f"ancestor {parent} expired — stream range unreadable")
-    for snap in reversed(chain):  # oldest commit first: arrival order
-        if snap["operation"] != "append":
-            if skip_non_append:
-                continue
-            raise ValueError(
-                f"streaming read hit non-append commit {snap['snapshot_id']} "
-                f"({snap['operation']}); set skip-non-append-snapshots=true to skip"
-            )
-        with open(os.path.join(location, "metadata", snap["manifest_file"])) as fh:
-            added.extend(json.load(fh).get("added", ()))
-    return added
 
 
 @dataclass
@@ -109,62 +74,69 @@ def _main_chain(meta: dict) -> list[int]:
     return out
 
 
-class CatalogTableStreamReader(DataSourceStreamReader):
+class CatalogTableStreamReader(TailingStreamReader):
+    """Offset = the last consumed snapshot id. Unlike the file-format
+    tailers, ``_pos`` is seeded from ``from-snapshot-id`` (0: the table's
+    start), so ``max-commits-per-microbatch`` caps the first batch too —
+    a cold-start consumer must not take a whole backlog into one batch.
+    Snapshot ids are random, so position on the main chain (not value)
+    orders offsets."""
+
+    OFFSET = "snapshot_id"
+    LIMIT_OPTION = "max-commits-per-microbatch"
+    DELETES_OPTION = "skip-non-append-snapshots"
+
     def __init__(self, schema, options):
+        super().__init__(options)
         self.location = options.get("location")
         if not self.location:
             raise ValueError("metacat_table source requires option 'location'")
-        self.skip_non_append = (
-            str(options.get("skip-non-append-snapshots", "false")).lower() == "true"
-        )
         start = options.get("from-snapshot-id")
-        self._start_id = int(start) if start is not None else 0
-        max_commits = options.get("max-commits-per-microbatch")
-        self._max_commits = int(max_commits) if max_commits is not None else None
-        # backpressure cursor: the last offset THIS reader handed to the
-        # engine. After a restart it lags the checkpointed offset until
-        # partitions() resynchronizes it (see the recovery path there).
-        self._cursor_id = self._start_id
+        self._initial = self._pos = int(start) if start is not None else 0
         self._columns = tuple(schema.fieldNames())
 
-    def initialOffset(self) -> dict:
-        return {"snapshot_id": self._start_id}
+    def _backlog(self, pos) -> list:
+        chain = _main_chain(_load_meta(self.location))
+        return chain[chain.index(pos) + 1 :] if pos in chain else chain
 
-    def latestOffset(self) -> dict:
+    def _added(self, lo: int, hi: int) -> list:
+        """Data files added by the append commits in (lo, hi], oldest
+        first — the same parent-chain walk as Table.scan_incremental
+        (metacat.py), against raw snapshot-log JSON."""
         meta = _load_meta(self.location)
-        chain = _main_chain(meta)
-        if not chain:
-            return {"snapshot_id": self._start_id}
-        head = chain[-1]
-        if self._max_commits is None:
-            self._cursor_id = head
-            return {"snapshot_id": head}
-        # cap the batch at N commits past the cursor (maxFilesPerTrigger
-        # analogue — snapshot ids are random so position, not value, caps)
-        pos = chain.index(self._cursor_id) + 1 if self._cursor_id in chain else 0
-        target = chain[min(pos + self._max_commits, len(chain)) - 1]
-        self._cursor_id = target
-        return {"snapshot_id": target}
-
-    def partitions(self, start: dict, end: dict):
-        start_id, end_id = start["snapshot_id"], end["snapshot_id"]
-        meta = _load_meta(self.location)
-        chain = _main_chain(meta)
-        pos = {sid: i for i, sid in enumerate(chain)}
-        self._cursor_id = max(
-            (self._cursor_id, start_id, end_id), key=lambda sid: pos.get(sid, -1)
-        )
-        if start_id == end_id:
+        at = {sid: i for i, sid in enumerate(_main_chain(meta))}
+        if lo == hi or at.get(hi, -1) < at.get(lo, -1):
+            # an end behind the start (a capped offset answered before
+            # the engine revealed its position) reads nothing
             return []
-        if pos.get(end_id, -1) < pos.get(start_id, -1):
-            # restart with a rate cap: the fresh reader's cursor lagged the
-            # checkpointed offset, so the capped latestOffset landed BEFORE
-            # start. Empty batch; the cursor is resynced above, so the next
-            # latestOffset advances from the true checkpoint position.
-            return []
-        files = _added_files_between(
-            self.location, meta, start_id, end_id, self.skip_non_append
-        )
+        by_id = {s["snapshot_id"]: s for s in meta["snapshots"]}
+        chain: list[dict] = []
+        cur = by_id.get(hi)
+        while cur is not None and cur["snapshot_id"] != lo:
+            chain.append(cur)
+            parent = cur.get("parent_snapshot_id")
+            if parent is None:
+                if lo != 0:
+                    raise ValueError(
+                        f"offset snapshot {lo} is not an ancestor of {hi}"
+                    )
+                cur = None
+            else:
+                cur = by_id.get(parent)
+                if cur is None and lo != 0:
+                    raise ValueError(
+                        f"ancestor {parent} expired — stream range unreadable"
+                    )
+        files: list[dict] = []
+        for snap in reversed(chain):  # oldest commit first: arrival order
+            if snap["operation"] != "append":
+                self._refuse_deletes(
+                    f"streaming read hit non-append commit "
+                    f"{snap['snapshot_id']} ({snap['operation']})"
+                )
+                continue
+            with open(os.path.join(self.location, "metadata", snap["manifest_file"])) as fh:
+                files.extend(json.load(fh).get("added", ()))
         return [_FilePartition(f["path"], self._columns) for f in files]
 
     def read(self, partition: _FilePartition):
@@ -174,29 +146,19 @@ class CatalogTableStreamReader(DataSourceStreamReader):
         table = pq.read_table(partition.path, columns=list(partition.columns))
         yield from table.to_batches()
 
-    def commit(self, end: dict) -> None:
-        pass  # offsets live in the streaming checkpoint, nothing to ack
 
-    def stop(self) -> None:
-        pass
-
-
-class CatalogTableDataSource(DataSource):
+class CatalogTableDataSource(FormatDataSource):
     """spark.readStream.format("metacat_table") — register with
     ``spark.dataSource.register(CatalogTableDataSource)`` once per session."""
 
-    @classmethod
-    def name(cls) -> str:
-        return "metacat_table"
+    FORMAT = "metacat_table"
+    STREAM_READER = CatalogTableStreamReader
 
     def schema(self):
         from pyspark.sql import types as T
 
         meta = _load_meta(self.options["location"])
         return T.StructType.fromJson(meta["schema"])
-
-    def streamReader(self, schema):
-        return CatalogTableStreamReader(schema, self.options)
 
 
 from iceberg_metadata_pipeline_spark.queries import query
@@ -265,10 +227,7 @@ def stream_table_source_feed(spark, sf_dir: str):
 
 def read_table_stream(spark, table, from_snapshot_id: int | None = None, **opts):
     """Structured-streaming handle over a metacat Table's append feed."""
-    try:
-        spark.dataSource.register(CatalogTableDataSource)
-    except Exception:  # noqa: BLE001 — already registered in this session
-        pass
+    CatalogTableDataSource.register(spark)
     reader = spark.readStream.format("metacat_table").option(
         "location", table.location
     )

@@ -1979,3 +1979,18 @@ def test_cow_update_after_mor_delete_respects_sequences(spark, catalog):
     assert got == [(i, 0) for i in range(10) if i % 3] + [
         (i, i % 3) for i in range(100, 110) if i % 3
     ]
+
+
+def test_delete_keys_mor_skips_empty_key_sets(spark, catalog):
+    """An equality delete whose keys are all NULL, or that has no keys at
+    all, deletes nothing and commits no delete entry: a 0-row delete file
+    would otherwise be listed and read by every later scan."""
+    t = catalog.create_table(
+        "nyc", "emptykeys", spark.createDataFrame([(1, "a")], "k long, s string").schema
+    )
+    t.append_dataframe(spark.createDataFrame([(1, "a"), (2, "b")], "k long, s string"))
+    t.refresh().delete_keys_mor(spark.createDataFrame([(None,)], "k long"))
+    t.refresh().delete_keys_mor(spark.createDataFrame([], "k long"))
+    t.refresh()
+    assert t._resolve_deletes(t.current_snapshot) == []
+    assert sorted(r["k"] for r in t.scan().collect()) == [1, 2]

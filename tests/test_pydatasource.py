@@ -190,3 +190,14 @@ def test_sql_using_pyavro(registered, tmp_path):
         f"CREATE OR REPLACE TEMPORARY VIEW pyavro_v USING pyavro OPTIONS (path '{loc}')"
     )
     assert spark.sql("SELECT SUM(v) AS s FROM pyavro_v").collect()[0].s == 210
+
+
+def test_empty_write_tasks_stage_no_file(registered, tmp_path):
+    """A task that receives no rows writes nothing: a 1-row frame spread
+    over 8 partitions publishes exactly one part file, not seven empty
+    ones beside it."""
+    spark = registered
+    loc = str(tmp_path / "one")
+    spark.range(1).repartition(8).write.format("pyavro").mode("append").save(loc)
+    assert len(glob.glob(loc + "/part-*.avro")) == 1
+    assert [r.id for r in spark.read.format("pyavro").load(loc).collect()] == [0]

@@ -30,8 +30,10 @@ def main() -> None:
 
     from pyspark.sql.datasource import DataSource, DataSourceWriter
 
+    from iceberg_metadata_pipeline_spark.ingest.datasource_base import (
+        StagedFiles,
+    )
     from iceberg_metadata_pipeline_spark.ingest.pyice_source import (
-        IceWriteCommit,
         PyIceBatchWriter,
         PyIceDataSource,
     )
@@ -44,26 +46,17 @@ def main() -> None:
         RecordBatches instead of Rows."""
 
         def __init__(self, schema, options, overwrite):
-            inner = PyIceBatchWriter(schema, options, overwrite)
+            self.inner = PyIceBatchWriter(schema, options, overwrite)
             self.schema = schema
-            self.part_cols = inner.part_cols
-            self.part_names = inner.part_names
-            self.data_dir = inner.data_dir
-            self.dest = inner.dest
-            self.exists = inner.exists
-            self.overwrite = inner.overwrite
+            self.part_cols = self.inner.part_cols
+            self.part_names = self.inner.part_names
+            self.data_dir = self.inner.stage_dir
 
         def commit(self, messages):
-            return PyIceBatchWriter.commit(self, messages)
+            return self.inner.commit(messages)
 
         def abort(self, messages):
-            return PyIceBatchWriter.abort(self, messages)
-
-        def _gather(self, messages):
-            return PyIceBatchWriter._gather(self, messages)
-
-        def _ensure_table(self):
-            return PyIceBatchWriter._ensure_table(self)
+            return self.inner.abort(messages)
 
         def write(self, iterator):  # noqa: D102 — probe replica
             import json as _json
@@ -85,6 +78,7 @@ def main() -> None:
                 groups.setdefault(
                     tuple(row[i] for i in part_idx), []
                 ).append(row)
+            os.makedirs(self.data_dir, exist_ok=True)
             out = []
             for pv, rows in groups.items():
                 cols = {n: [r[i] for r in rows] for i, n in enumerate(names)}
@@ -99,7 +93,7 @@ def main() -> None:
                 out.append(
                     (tmp, len(rows), os.path.getsize(tmp), _json.dumps(part))
                 )
-            return IceWriteCommit(files=tuple(out))
+            return StagedFiles(files=tuple(out))
 
     class PyIceRowDataSource(PyIceDataSource):
         @classmethod
