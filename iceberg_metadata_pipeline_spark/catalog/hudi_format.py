@@ -1116,26 +1116,59 @@ def _decode_delete_block(content: bytes) -> list[str]:
 # --- per-slice merge (the MOR read path) -----------------------------------
 
 
+def _data_block_table(content: bytes, headers: dict[int, str]):
+    """One data block → an Arrow table: the vectorized decode, or the
+    per-record reference decode when the schema is outside its subset."""
+    import pyarrow as pa
+
+    batch = _decode_data_block_arrow(content, headers)
+    if batch is not None:
+        return pa.Table.from_batches([batch])
+    return pa.Table.from_pylist(_decode_data_block(content, headers))
+
+
+def conform_table(table, schema):
+    """``table``'s columns by name as ``schema`` (a column it lacks reads
+    as nulls)."""
+    import pyarrow as pa
+
+    have = set(table.column_names)
+    return pa.Table.from_arrays(
+        [
+            table.column(f.name).cast(f.type)
+            if f.name in have
+            else pa.nulls(table.num_rows, f.type)
+            for f in schema
+        ],
+        schema=schema,
+    )
+
+
 def merge_file_slice(
     base_path: str | None,
     logs: list[tuple[str, str]],
     key_field: str,
     valid_instants: frozenset | set,
     as_of: str = "",
+    schema=None,
 ):
-    """Merge one file slice: base parquet rows + its log blocks, by
-    record key. ``logs`` is [(path, deltacommit instant)] already sorted
-    in apply order. Yields plain dict rows — base rows keep their file
-    order (updates in place), log-only inserts append in first-seen
-    order. This runs INSIDE a reader task (one task per slice): the
-    distributed-read unit is the file slice, exactly like Hudi's own
-    MOR scan, so nothing here is driver-sized."""
-    rows: dict[str, dict] = {}
-    if base_path is not None:
-        import pyarrow.parquet as pq
+    """Merge one file slice — base parquet rows + its log blocks — into
+    one Arrow table (columns as ``schema``, by default the first data
+    source's). ``logs`` is [(path, deltacommit instant)] already sorted
+    in apply order. A row survives unless a LATER valid block names its
+    record key, as an upsert or a delete: each block is an equality
+    delete at its instant over everything before it, and within one
+    block the last duplicate of a key wins. One reverse sweep applies
+    that rule; only the key column becomes Python values, as
+    ``str(value)`` — the form delete blocks store. Rows come out base
+    first, then each block's survivors in apply order. This runs INSIDE
+    a task (one per slice), exactly like Hudi's own MOR scan, so nothing
+    here is driver-sized."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-        for rec in pq.read_table(base_path).to_pylist():
-            rows[str(rec[key_field])] = rec
+    # (rows, None) per data source, (None, keys) per delete block
+    layers = [(pq.read_table(base_path), None)] if base_path is not None else []
     for lpath, _linstant in logs:
         blocks = read_log_blocks(lpath)
         rolled = {
@@ -1153,25 +1186,35 @@ def merge_file_slice(
             ):
                 continue
             if bt == BLOCK_AVRO_DATA:
-                batch = _decode_data_block_arrow(content, h)
-                recs = (
-                    batch.to_pylist()
-                    if batch is not None
-                    else _decode_data_block(content, h)
-                )
-                for rec in recs:
-                    rows[str(rec[key_field])] = rec
+                layers.append((_data_block_table(content, h), None))
             elif bt == BLOCK_DELETE:
-                for k in _decode_delete_block(content):
-                    rows.pop(k, None)
-            elif bt == BLOCK_COMMAND:
-                continue
-            else:
+                layers.append((None, _decode_delete_block(content)))
+            elif bt != BLOCK_COMMAND:
                 raise NotImplementedError(
                     f"{lpath}: log block type {bt} (COMMAND/DELETE/"
                     "AVRO_DATA implemented)"
                 )
-    yield from rows.values()
+    if schema is None:
+        schema = next((t.schema for t, _k in layers if t is not None and t.num_columns), None)
+    if schema is None:
+        return pa.table({})
+    named: set[str] = set()  # keys a later block upserts or deletes
+    kept = []
+    for table, deleted in reversed(layers):
+        if table is None:
+            named.update(deleted)
+            continue
+        if not table.num_rows:
+            continue
+        keys = [str(k) for k in table.column(key_field).to_pylist()]
+        take = []
+        for i in range(len(keys) - 1, -1, -1):
+            if keys[i] not in named:
+                named.add(keys[i])
+                take.append(i)
+        if take:
+            kept.append(conform_table(table.take(take[::-1]), schema))
+    return pa.concat_tables(kept[::-1]) if kept else schema.empty_table()
 
 
 # --- MOR write path ---------------------------------------------------------
@@ -1503,7 +1546,6 @@ def compact_mor(location: str, spark=None) -> str:
         )
 
         return compact_mor_dist(spark, location)
-    import pyarrow as pa
     import pyarrow.parquet as pq
 
     props = read_properties(location)
@@ -1518,24 +1560,23 @@ def compact_mor(location: str, spark=None) -> str:
     for key in sorted(state.log_files):
         ppath, fid = key
         bf = state.files[key]
-        merged = list(
-            merge_file_slice(
-                bf.path or None,  # None: log-only group's first base
-                [(lg.path, lg.instant_time) for lg in state.log_files[key]],
-                key_field,
-                state.valid_instants,
-                state.instant,
-            )
+        merged = merge_file_slice(
+            bf.path or None,  # None: log-only group's first base
+            [(lg.path, lg.instant_time) for lg in state.log_files[key]],
+            key_field,
+            state.valid_instants,
+            state.instant,
+            arrow_schema,
         )
         rel = os.path.join(ppath, _base_file_name(fid, t)) if ppath else _base_file_name(fid, t)
         dest = os.path.join(location, rel)
-        pq.write_table(pa.Table.from_pylist(merged, schema=arrow_schema), dest)
+        pq.write_table(merged, dest)
         stats.setdefault(ppath, []).append(
             {
                 "fileId": fid,
                 "path": rel,
                 "prevCommit": bf.instant_time,
-                "numWrites": len(merged),
+                "numWrites": merged.num_rows,
                 "numDeletes": 0,
                 "numUpdateWrites": 0,
                 "numInserts": 0,

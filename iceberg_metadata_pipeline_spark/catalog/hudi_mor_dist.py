@@ -759,8 +759,6 @@ def compact_mor_dist(spark: SparkSession, location: str) -> str:
 
 
     def _compact_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        import pyarrow as pa
-
         from iceberg_metadata_pipeline_spark.catalog.hudi_format import (
             _arrow_schema_of,
             _base_file_name,
@@ -771,38 +769,32 @@ def compact_mor_dist(spark: SparkSession, location: str) -> str:
         arrow_schema = _arrow_schema_of(sch)
         out = []
         for r in pdf.itertuples():
-            merged = list(
-                merge_file_slice(
-                    r.base or None,  # None: log-only group's first base
-                    [tuple(x) for x in json.loads(r.logs)],
-                    key_field,
-                    frozenset(valid),
-                    as_of,
-                )
+            merged = merge_file_slice(
+                r.base or None,  # None: log-only group's first base
+                [tuple(x) for x in json.loads(r.logs)],
+                key_field,
+                frozenset(valid),
+                as_of,
+                arrow_schema,
             )
             rel = (
                 os.path.join(r.ppath, _base_file_name(r.fid, t))
                 if r.ppath
                 else _base_file_name(r.fid, t)
             )
-            size = _atomic_write_parquet(
-                pa.Table.from_pylist(merged, schema=arrow_schema),
-                os.path.join(location, rel),
-            )
+            size = _atomic_write_parquet(merged, os.path.join(location, rel))
             stat = {
                 "fileId": r.fid,
                 "path": rel,
                 "prevCommit": r.base_instant,
-                "numWrites": len(merged),
+                "numWrites": merged.num_rows,
                 "numDeletes": 0,
                 "numUpdateWrites": 0,
                 "numInserts": 0,
                 "totalWriteBytes": size,
                 "fileSizeInBytes": size,
                 "partitionPath": r.ppath,
-                "keyBloom": _build_key_bloom(
-                    rec[key_field] for rec in merged
-                ),
+                "keyBloom": _build_key_bloom(merged.column(key_field).to_pylist()),
             }
             out.append({"ppath": r.ppath, "stat": json.dumps(stat)})
         return pd.DataFrame(out)

@@ -16,6 +16,16 @@ only what its protocol owns; the parts every source shares live here:
   stream commit first drops a re-delivered epoch (``_last_epoch``).
 - :class:`FormatDataSource` — ``name()``, ``register(spark)`` and the
   reader/writer factories, resolved from class attributes.
+- :class:`ScanTask` + :class:`FileScanReader` — the one scan core of the
+  lakehouse readers (``pyice``, ``pyrest``, ``pydelta``, ``pyhudi``). A
+  format only plans tasks: the data file, the values of the columns the
+  file does not hold, and the delete descriptors that apply to it (the
+  sequence rules are settled at planning). ``read(task)`` owns the
+  ``iter_batches`` loop, the fills, one keep mask and the cast to the
+  Arrow schema Spark targets, so the Python↔JVM boundary stays columnar.
+  A format hooks in through ``_open`` (where the rows come from),
+  ``_resolve`` (which file column serves each logical column) and
+  ``_row_filter`` (a format-level row predicate).
 
 Write type posture: every group casts to the writer's target Arrow
 schema (``arrow_types.arrow_fields`` unless a format overrides
@@ -33,10 +43,12 @@ import os
 import uuid
 from dataclasses import dataclass
 
+from pyspark.sql import types as T
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceArrowWriter,
     DataSourceStreamReader,
+    InputPartition,
     WriterCommitMessage,
 )
 
@@ -324,3 +336,248 @@ class FormatDataSource(DataSource):
         if self.STREAM_WRITER is None:
             return super().streamWriter(schema, overwrite)
         return self.STREAM_WRITER(schema, self.options, overwrite)
+
+
+# --- the scan core -----------------------------------------------------------
+
+
+def spark_to_arrow_schema(schema):
+    """The Arrow schema Spark itself targets for ``schema``: batches cast
+    to it cross to the JVM with no row conversion (IntegerType stays
+    int32, TimestampType is ``timestamp('us', 'UTC')`` under the
+    session's pinned UTC zone)."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return to_arrow_schema(schema)
+
+
+def coerce_literal(value, dtype: T.DataType):
+    """A metadata literal — a Delta ``partitionValues`` string, an Iceberg
+    initial-default JSON value — → the Python value a column of Spark
+    type ``dtype`` holds. None stays None."""
+    import datetime as _dt
+    from decimal import Decimal
+
+    if value is None:
+        return None
+    if isinstance(dtype, T.BooleanType):
+        return value if isinstance(value, bool) else str(value).lower() == "true"
+    if isinstance(dtype, T.IntegralType):
+        return int(value)
+    if isinstance(dtype, T.DecimalType):
+        return Decimal(str(value))
+    if isinstance(dtype, (T.DoubleType, T.FloatType)):
+        return float(value)
+    if isinstance(dtype, T.DateType):
+        return _dt.date.fromisoformat(str(value))
+    if isinstance(dtype, (T.TimestampType, T.TimestampNTZType)):
+        return _dt.datetime.fromisoformat(str(value))
+    return str(value)
+
+
+@dataclass
+class ScanTask(InputPartition):
+    """One unit of a file scan: the data file and what the task adds to
+    or removes from its rows. It stays O(#delete files) in size: delete
+    files decode in the task, never on the driver, and a descriptor is
+    here only if the format's sequence rules let it apply to this file.
+
+    - ``fills``: ``((column, value), ...)`` for columns the file does not
+      hold (a partition value, an initial default); other columns the
+      file lacks read as null.
+    - ``positions``: dead file positions shipped inline.
+    - ``pos_files``: position-delete descriptors ``(kind, path, offset,
+      size)``: ``parquet`` (``file_path``/``pos`` rows, for any data
+      file), ``puffin`` (Iceberg deletion-vector blobs at ``offset``) or
+      ``dv`` (one Delta deletion vector at ``offset``/``size``).
+    - ``eq_files``: equality deletes ``(columns, path)``: a row whose
+      ``columns`` tuple appears in the file is dead (null-safe).
+    - ``residual``: a pyrest row predicate (Iceberg REST expression JSON).
+    - ``logs`` and the ``stream_*`` fields: Hudi log files
+      (pyhudi_source).
+    """
+
+    path: str
+    fills: tuple = ()
+    positions: tuple = ()
+    pos_files: tuple = ()
+    eq_files: tuple = ()
+    residual: str = ""
+    logs: tuple = ()
+    stream_log: str = ""
+    stream_instants: tuple = ()
+    stream_ignore_deletes: bool = False
+
+
+def _positions_for_file(delete_table, me: str, plain_path):
+    """The ``pos`` values of a ``(file_path, pos)`` delete table that name
+    data file ``me``. Distinct paths normalize once — there are
+    O(#data files) of them, not O(#deleted rows)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    fps = delete_table.column("file_path")
+    mine = [
+        v for v in pc.unique(fps).to_pylist() if v is not None and plain_path(v) == me
+    ]
+    if not mine:
+        return []
+    mask = pc.is_in(fps, value_set=pa.array(mine))
+    return delete_table.filter(mask).column("pos").to_numpy()
+
+
+def _dead_positions(task: ScanTask):
+    """Every dead position of the task's file → one sorted, deduplicated
+    int64 array (None: no row is dead)."""
+    import numpy as np
+
+    parts = [task.positions]
+    me = None
+    for kind, path, offset, size in task.pos_files:
+        if kind == "dv":
+            from iceberg_metadata_pipeline_spark.catalog.delta_format import (
+                read_dv_from_file,
+            )
+
+            parts.append(read_dv_from_file(path, offset, size))
+            continue
+        from iceberg_metadata_pipeline_spark.catalog.metacat import plain_path
+
+        me = me or plain_path(task.path)
+        if kind == "puffin":
+            from iceberg_metadata_pipeline_spark.catalog.puffin import (
+                read_deletion_vectors,
+            )
+
+            parts += [p for ref, p in read_deletion_vectors(path, offset) if plain_path(ref) == me]
+        else:
+            import pyarrow.parquet as pq
+
+            deletes = pq.read_table(path, columns=["file_path", "pos"])
+            parts.append(_positions_for_file(deletes, me, plain_path))
+    arrays = [np.asarray(p, dtype=np.int64) for p in parts if len(p)]
+    return np.unique(np.concatenate(arrays)) if arrays else None
+
+
+def _equality_probes(task: ScanTask) -> list:
+    """``[(columns, set of key tuples)]``, one per equality-delete file."""
+    import pyarrow.parquet as pq
+
+    probes = []
+    for cols, path in task.eq_files:
+        t = pq.read_table(path, columns=list(cols))
+        probes.append((cols, set(zip(*(t.column(c).to_pylist() for c in cols)))))
+    return probes
+
+
+def _position_mask(start: int, n: int, dead):
+    """KEEP mask for file rows ``[start, start + n)``; None when no dead
+    position falls in range (an all-alive batch pays two binary
+    searches)."""
+    import numpy as np
+
+    if dead is None:
+        return None
+    lo, hi = np.searchsorted(dead, [start, start + n])
+    if lo == hi:
+        return None
+    mask = np.ones(n, dtype=bool)
+    mask[dead[lo:hi] - start] = False
+    return mask
+
+
+def _equality_mask(arrays: dict, n: int, probes):
+    """KEEP mask against the equality probes. Only key columns become
+    Python values; null-safe equality is tuple membership, where
+    ``(None,) == (None,)``."""
+    import numpy as np
+
+    mask = None
+    for cols, probe in probes:
+        if probe:
+            keys = zip(*(arrays[c].to_pylist() for c in cols))
+            hit = np.fromiter((k in probe for k in keys), dtype=bool, count=n)
+            mask = _and(mask, ~hit)
+    return mask
+
+
+def _and(a, b):
+    """AND two keep masks, None meaning all rows."""
+    if a is None:
+        return b
+    return a if b is None else a & b
+
+
+def _fill(value, n: int, pa_type):
+    """``n`` copies of one value (null when None), built in O(1)."""
+    import pyarrow as pa
+
+    if value is None:
+        return pa.nulls(n, pa_type)
+    return pa.repeat(pa.scalar(value, type=pa_type), n)
+
+
+class FileScanReader:
+    """``read(task)`` for the lakehouse readers. A batch reader mixes it
+    into ``DataSourceReader``, a stream reader into
+    :class:`TailingStreamReader`; ``schema`` is the Spark schema the rows
+    leave in. A format overrides only its hooks."""
+
+    schema: T.StructType
+
+    def _open(self, task: ScanTask):
+        """``(arrow schema, columns → batch iterator)`` over the task's rows
+        in file shape, positions counting from the file's first row; None
+        when the task reads nothing (an empty table's sentinel)."""
+        if not task.path:
+            return None
+        import pyarrow.parquet as pq
+
+        pf = pq.ParquetFile(task.path)
+        return pf.schema_arrow, lambda cols: pf.iter_batches(columns=cols)
+
+    def _resolve(self, task: ScanTask, file_schema) -> dict:
+        """Logical column → ``(file column, convert)`` for every column the
+        file serves; ``convert(column, arrow_type)`` (None: as read)
+        brings a column to its logical shape. By name unless a format
+        maps names."""
+        have = set(file_schema.names)
+        return {n: (n, None) for n in self.schema.names if n in have}
+
+    def _row_filter(self, task: ScanTask, batch):
+        """A format's own row predicate over the cast batch: a numpy KEEP
+        mask, or None."""
+        return None
+
+    def read(self, task: ScanTask):
+        import pyarrow as pa
+
+        opened = self._open(task)
+        if opened is None:
+            return
+        file_schema, batches = opened
+        source = self._resolve(task, file_schema)
+        target = spark_to_arrow_schema(self.schema)
+        fills = dict(task.fills)
+        dead = _dead_positions(task)
+        probes = _equality_probes(task)
+        pos = 0
+        for batch in batches(list(dict.fromkeys(c for c, _conv in source.values()))):
+            n = batch.num_rows
+            got = dict(zip(batch.schema.names, batch.columns))
+            arrays = {}
+            for f in target:
+                if f.name not in source:
+                    arrays[f.name] = _fill(fills.get(f.name), n, f.type)
+                    continue
+                col, convert = source[f.name]
+                arrays[f.name] = got[col] if convert is None else convert(got[col], f.type)
+            keep = _and(_position_mask(pos, n, dead), _equality_mask(arrays, n, probes))
+            pos += n
+            out = pa.RecordBatch.from_arrays(list(arrays.values()), names=target.names)
+            out = out.cast(target)
+            keep = _and(keep, self._row_filter(task, out))
+            if keep is not None:
+                out = out.filter(pa.array(keep))
+            if out.num_rows:
+                yield out

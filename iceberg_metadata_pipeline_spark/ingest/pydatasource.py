@@ -109,20 +109,6 @@ def _decode_record(rec: dict, names: list[str], logical: dict[str, str | None]):
     return tuple(out)
 
 
-def _encode_value(v, simple: str):
-    """One python Row value → the avro-codec value for its field type."""
-    if v is None:
-        return None
-    if simple == "date":
-        return (v - _EPOCH_DATE).days
-    if simple in ("timestamp", "timestamp_ntz"):
-        # exact integer micros (float total_seconds() truncates ~1µs)
-        return (v - _EPOCH_TS) // datetime.timedelta(microseconds=1)
-    if isinstance(v, bytearray):
-        return bytes(v)
-    return v
-
-
 # --- filter pushdown --------------------------------------------------
 
 _COMPARATORS = {

@@ -26,8 +26,9 @@ table directory without delta-spark or delta-rs:
   intact).
 
 Scale notes: offsets and planning are O(log tail) driver-side metadata;
-each file decodes in one executor task via pyarrow (row-group batches,
-never a whole-file python list). The batch path is for interop
+each file decodes in one executor task through the shared scan core
+(``datasource_base.FileScanReader``: row-group batches, never a
+whole-file python list); this module plans the tasks and maps columns. The batch path is for interop
 completeness — for heavy analytics, import_delta_table registers the
 files into metacat and Spark's native vectorized parquet reader takes
 over; this source is the tailing/read-anywhere path.
@@ -35,17 +36,11 @@ over; this source is the tailing/read-anywhere path.
 
 from __future__ import annotations
 
-import datetime
 import json
 import os
-from dataclasses import dataclass
 
-from pyspark.sql.datasource import (
-    DataSourceReader,
-    DataSourceStreamArrowWriter,
-    InputPartition,
-)
 from pyspark.sql import types as T
+from pyspark.sql.datasource import DataSourceReader, DataSourceStreamArrowWriter
 
 from iceberg_metadata_pipeline_spark.catalog.delta_format import (
     _commit_path,
@@ -53,48 +48,21 @@ from iceberg_metadata_pipeline_spark.catalog.delta_format import (
     read_delta_table,
 )
 from iceberg_metadata_pipeline_spark.ingest.datasource_base import (
+    FileScanReader,
     FormatDataSource,
+    ScanTask,
     StagedArrowWriter,
     TailingStreamReader,
+    coerce_literal,
     source_path,
 )
 
-def _coerce_partition(value: str | None, dt: T.DataType):
-    """Spec: partitionValues are strings (null = JSON null) — cast back
-    to the schema's type for the rows we emit."""
-    if value is None:
-        return None
-    s = dt.simpleString()
-    if s in ("int", "smallint", "tinyint"):
-        return int(value)
-    if s in ("bigint", "long"):
-        return int(value)
-    if s in ("double", "float"):
-        return float(value)
-    if s == "boolean":
-        return value.lower() == "true"
-    if s == "date":
-        return datetime.date.fromisoformat(value)
-    return value
 
-
-@dataclass
-class DeltaFilePartition(InputPartition):
-    path: str
-    partition_values: tuple  # aligned with the table's partition columns
-    deleted: tuple = ()  # inline-DV row positions to skip, sorted
-    # file-based ('u'/'p') DV descriptor, decoded IN THE TASK — the
-    # driver ships only (dv_path, offset, sizeInBytes), never the
-    # positions, so a table with billions of deleted rows plans in
-    # O(#files) driver memory
-    dv_file: tuple = ()
-
-
-class _DeltaReadMixin:
-    """Shared per-file decode: parquet row groups via pyarrow, partition
-    columns appended from the log's values, deletion-vector positions
-    skipped by running row index (pyarrow batches are sequential, so
-    the file-relative position is just a counter)."""
+class _DeltaScanReader(FileScanReader):
+    """The shared scan core with Delta's column mapping: partition
+    columns fill from the log's ``partitionValues`` (Delta does not store
+    them in the data files), and ``_resolve`` maps logical columns to the
+    file's physical ones."""
 
     schema: T.StructType
     partition_columns: list[str]
@@ -109,8 +77,8 @@ class _DeltaReadMixin:
 
     def _resolve_mapping(self, state) -> None:
         """Set (physical, field_ids) per the table's column-mapping mode:
-        'id' resolves parquet columns by field id (per file, in _rows);
-        'name'/'none' by the static physicalName map."""
+        'id' resolves parquet columns by field id (per file, in
+        ``_resolve``); 'name'/'none' by the static physicalName map."""
         from iceberg_metadata_pipeline_spark.catalog.delta_format import (
             column_mapping_ids,
             column_mapping_mode,
@@ -118,6 +86,8 @@ class _DeltaReadMixin:
             physical_names_meta,
         )
 
+        self.schema = state.schema
+        self.partition_columns = state.partition_columns
         # partitionValues are keyed by physicalName in EVERY mapping
         # mode (the spec writes physicalNames even under id mode, where
         # only PARQUET column resolution goes through field ids) — so
@@ -131,8 +101,30 @@ class _DeltaReadMixin:
             self.physical = physical_names(state)
             self.field_ids = None
 
-    def _rows(self, part: DeltaFilePartition):
-        import pyarrow.parquet as pq
+    def _task(self, add: dict, **deletes) -> ScanTask:
+        """The ScanTask of one ``add`` action: its partition values,
+        typed per the table schema, fill the partition columns."""
+        p = add["path"]
+        values = add.get("partitionValues") or {}
+        return ScanTask(
+            p if os.path.isabs(p) else os.path.join(self.path, p),
+            tuple(
+                (c, coerce_literal(values.get(self.part_phys.get(c, c)), self.schema[c].dataType))
+                for c in self.partition_columns
+            ),
+            **deletes,
+        )
+
+    def _resolve(self, task: ScanTask, file_schema) -> dict:
+        """Logical → physical per file. Under id mode THIS file's field
+        ids decide which parquet column serves each logical field (names
+        are arbitrary under the protocol, at EVERY nesting level); a field
+        id absent from the file means the column was added after the file
+        was written → nulls, but a file with no ids at all is a protocol
+        violation → loud refusal. Nested-mapped struct columns rebuild per
+        value (structural rename by field id / physicalName has no arrow
+        kernel); flat columns stay columnar."""
+        import pyarrow as pa
 
         from iceberg_metadata_pipeline_spark.catalog.delta_format import (
             _has_nested_mapping,
@@ -140,163 +132,87 @@ class _DeltaReadMixin:
             to_logical_py,
         )
 
-        if part is None or not part.path:
-            return  # empty-table sentinel (zero live files)
         pcols = set(self.partition_columns)
-        file_fields = [f for f in self.schema.fields if f.name not in pcols]
-        pvals = dict(zip(self.partition_columns, part.partition_values))
-        dead_parts = [part.deleted] if part.deleted else []
-        if part.dv_file:
-            from iceberg_metadata_pipeline_spark.catalog.delta_format import (
-                read_dv_from_file,
-            )
-
-            dv_path, offset, size = part.dv_file
-            dead_parts.append(read_dv_from_file(dv_path, int(offset), size))
-        pf = pq.ParquetFile(part.path)
-        file_cols = set(pf.schema_arrow.names)
-        arrow_of: dict = {}
+        fields = [f for f in self.schema.fields if f.name not in pcols]
         if self.physical is None:
-            # id mode: THIS file's field ids decide which parquet column
-            # serves each logical field (names are arbitrary under the
-            # protocol, at EVERY nesting level — round 10); a field id
-            # absent from the file means the column was added after the
-            # file was written → nulls, but a file with no ids at all is
-            # a protocol violation → loud refusal
-            fid_to_field = {}
-            for af in pf.schema_arrow:
-                fid = (af.metadata or {}).get(b"PARQUET:field_id")
-                if fid is not None:
-                    fid_to_field[int(fid)] = af
-            if file_fields and not fid_to_field:
+            by_id = {
+                int(fid): af
+                for af in file_schema
+                if (fid := (af.metadata or {}).get(b"PARQUET:field_id")) is not None
+            }
+            if fields and not by_id:
                 raise ValueError(
-                    f"id-mode table but data file {part.path} carries no "
+                    f"id-mode table but data file {task.path} carries no "
                     "PARQUET:field_id metadata — unreadable by field id"
                 )
-            physical = {}
-            for f in file_fields:
-                af = fid_to_field.get(self.field_ids[f.name])
-                physical[f.name] = "\x00absent" if af is None else af.name
-                arrow_of[f.name] = None if af is None else af.type
+            served = {f.name: by_id.get(self.field_ids[f.name]) for f in fields}
         else:
-            physical = self.physical
-        names = [
-            n
-            for f in file_fields
-            if (n := physical.get(f.name, f.name)) in file_cols
-        ]
-        # vectorized (round 12): RecordBatch yields — deletion-vector
-        # positions apply as a searchsorted mask, partition columns and
-        # added-after columns fill via O(1) arrays. Only NESTED-mapped
-        # struct columns still rebuild per value (structural rename by
-        # field id / physicalName has no arrow kernel); flat tables and
-        # flat-mapped tables stay columnar end to end.
-        from iceberg_metadata_pipeline_spark.ingest import arrow_scan
-
-        dead_np = arrow_scan.merge_positions(dead_parts)
-        pa_schema = arrow_scan.spark_to_arrow_schema(self.schema)
-        pos = 0
-        for batch in pf.iter_batches(columns=names):
-            n = batch.num_rows
-            got = dict(zip(batch.schema.names, batch.columns))
-            arrays = []
-            for i, f in enumerate(self.schema.fields):
-                tgt_type = pa_schema.field(i).type
-                if f.name in pcols:
-                    arrays.append(arrow_scan.fill_array(pvals[f.name], n, tgt_type))
-                    continue
-                col = got.get(physical.get(f.name, f.name))
-                if col is None:
-                    # columns ADDED after this file was written are null
-                    # for its rows (Delta's add-column semantics: no
-                    # rewrite, readers project missing columns as null)
-                    arrays.append(arrow_scan.fill_array(None, n, tgt_type))
-                elif _has_nested_mapping(f.dataType):
-                    # struct values decode as dicts keyed by the FILE'S
-                    # parquet nested names — rebuild to logical shape,
-                    # recursively: by nested field id under id mode
-                    # (round 10), by physicalName under name mode
-                    import pyarrow as pa
-
-                    vals = col.to_pylist()
-                    if self.physical is None:
-                        at = arrow_of.get(f.name)
-                        vals = [to_logical_by_id(v, f.dataType, at) for v in vals]
-                    else:
-                        vals = [to_logical_py(v, f.dataType) for v in vals]
-                    arrays.append(pa.array(vals, type=tgt_type))
-                else:
-                    arrays.append(col)
-            keep = arrow_scan.position_mask(pos, n, dead_np)
-            pos += n
-            out = arrow_scan.finish_batch(arrays, pa_schema, keep)
-            if out is not None:
-                yield out
+            have = {af.name: af for af in file_schema}
+            served = {f.name: have.get(self.physical.get(f.name, f.name)) for f in fields}
+        out = {}
+        for f in fields:
+            af = served[f.name]
+            if af is None:
+                continue  # added after this file was written: null
+            convert = None
+            if _has_nested_mapping(f.dataType):
+                # struct values decode keyed by the FILE's nested names:
+                # rebuild the logical shape by nested field id (id mode)
+                # or physicalName (name mode)
+                def convert(col, typ, dt=f.dataType, at=af.type, by_id=self.physical is None):
+                    return pa.array(
+                        [
+                            to_logical_by_id(v, dt, at) if by_id else to_logical_py(v, dt)
+                            for v in col.to_pylist()
+                        ],
+                        type=typ,
+                    )
+            out[f.name] = (af.name, convert)
+        return out
 
 
-class PyDeltaBatchReader(DataSourceReader, _DeltaReadMixin):
+class PyDeltaBatchReader(_DeltaScanReader, DataSourceReader):
     def __init__(self, options):
+        from iceberg_metadata_pipeline_spark.catalog.delta_format import (
+            _decode_dv_descriptor,
+            dv_file_path,
+        )
+
         self.path = source_path(options)
         version = options.get("versionAsOf")
         state = read_delta_table(
             self.path, None if version is None else int(version)
         )
-        self.schema = state.schema
-        self.partition_columns = state.partition_columns
-        from iceberg_metadata_pipeline_spark.catalog.delta_format import (
-            _decode_dv_descriptor,
-        )
-
         self._resolve_mapping(state)
-        from iceberg_metadata_pipeline_spark.catalog.delta_format import (
-            dv_file_path,
-        )
 
-        def _dv_fields(a: dict) -> tuple[tuple, tuple]:
-            """(inline positions, file descriptor) for the partition:
-            inline vectors are already O(positions) in the log and ship
-            decoded; file-based vectors ship as a descriptor and decode
-            in the task."""
+        def deletes(a: dict) -> dict:
+            """Inline vectors are already O(positions) in the log and ship
+            decoded; file-based vectors ship as a descriptor and decode in
+            the task."""
             dv = a.get("deletionVector")
             if not dv:
-                return (), ()
+                return {}
             if dv.get("storageType") == "i":
-                return tuple(_decode_dv_descriptor(dv)), ()
-            return (), (
-                dv_file_path(self.path, dv),
-                int(dv["offset"]),
-                dv.get("sizeInBytes"),
-            )
+                return {"positions": tuple(_decode_dv_descriptor(dv))}
+            return {
+                "pos_files": (
+                    ("dv", dv_file_path(self.path, dv), int(dv["offset"]), dv.get("sizeInBytes")),
+                )
+            }
 
         self._parts = [
-            DeltaFilePartition(
-                self._abs(p),
-                tuple(
-                    _coerce_partition(
-                        (a.get("partitionValues") or {}).get(self.part_phys.get(c, c)),
-                        self.schema[c].dataType,
-                    )
-                    for c in state.partition_columns
-                ),
-                *_dv_fields(a),
-            )
+            self._task({**a, "path": p}, **deletes(a))
             for p, a in sorted(state.files.items())
         ]
-
-    def _abs(self, p: str) -> str:
-        return p if os.path.isabs(p) else os.path.join(self.path, p)
 
     def partitions(self):
         # a table whose current version has zero live files is still a
         # valid (empty) table: the DataSource API needs >=1 partition, so
-        # ship one sentinel the decode path skips
-        return self._parts or [DeltaFilePartition("", ())]
-
-    def read(self, partition: DeltaFilePartition):
-        yield from self._rows(partition)
+        # ship one sentinel the read skips
+        return self._parts or [ScanTask("")]
 
 
-class PyDeltaStreamReader(TailingStreamReader, _DeltaReadMixin):
+class PyDeltaStreamReader(_DeltaScanReader, TailingStreamReader):
     """Offset = the last consumed log version; each batch reads the
     ``add`` actions of commits (start, end]. ``maxFilesPerTrigger``
     weighs a commit by its add count (commits are never split)."""
@@ -313,10 +229,8 @@ class PyDeltaStreamReader(TailingStreamReader, _DeltaReadMixin):
         # commits are immutable, so each file is parsed at most once per
         # reader instance
         self._add_counts: dict[int, int] = {}
-        state = read_delta_table(self.path)  # schema + partitioning from the log
-        self.schema = state.schema
-        self.partition_columns = state.partition_columns
-        self._resolve_mapping(state)
+        # schema + partitioning from the log
+        self._resolve_mapping(read_delta_table(self.path))
 
     def _backlog(self, pos) -> list:
         return list(range((-1 if pos is None else pos) + 1, latest_version(self.path) + 1))
@@ -354,25 +268,8 @@ class PyDeltaStreamReader(TailingStreamReader, _DeltaReadMixin):
                                 "deletion vector (row-level delete)"
                             )
                             continue  # ignoreDeletes: skip the re-add
-                        p = add["path"]
-                        parts.append(
-                            DeltaFilePartition(
-                                p if os.path.isabs(p) else os.path.join(self.path, p),
-                                tuple(
-                                    _coerce_partition(
-                                        (add.get("partitionValues") or {}).get(
-                                            self.part_phys.get(c, c)
-                                        ),
-                                        self.schema[c].dataType,
-                                    )
-                                    for c in self.partition_columns
-                                ),
-                            )
-                        )
+                        parts.append(self._task(add))
         return parts
-
-    def read(self, partition: DeltaFilePartition):
-        yield from self._rows(partition)
 
 
 def _pv(v) -> str | None:

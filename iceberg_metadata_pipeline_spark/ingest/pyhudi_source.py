@@ -17,23 +17,20 @@ in the data files are appended as typed-by-parse strings — the COW
 export path symlinks foreign parquet, so partition values live only in
 the path, exactly like Hudi bootstrap tables.
 
-Scale: planning is O(timeline + files) driver-side metadata; each base
-file is one input partition (pyarrow batch reads inside the worker);
-the stream reads only O(churn) files per micro-batch.
+Scale: planning is O(timeline + files) driver-side metadata; each file
+slice is one input partition, read by the shared scan core
+(``datasource_base.FileScanReader``); a slice with live logs merges
+them columnar in its task (``hudi_format.merge_file_slice``); the
+stream reads only O(churn) files per micro-batch.
 """
 
 from __future__ import annotations
 
 import json
 import os
-from dataclasses import dataclass
 
 from pyspark.sql import types as T
-from pyspark.sql.datasource import (
-    DataSourceReader,
-    DataSourceStreamArrowWriter,
-    InputPartition,
-)
+from pyspark.sql.datasource import DataSourceReader, DataSourceStreamArrowWriter
 
 from iceberg_metadata_pipeline_spark.catalog.hudi_format import (
     completed_instants,
@@ -43,11 +40,14 @@ from iceberg_metadata_pipeline_spark.catalog.hudi_format import (
     read_properties,
 )
 from iceberg_metadata_pipeline_spark.ingest.datasource_base import (
+    FileScanReader,
     FormatDataSource,
+    ScanTask,
     StagedArrowWriter,
     TailingStreamReader,
     append_only_error,
     source_path,
+    spark_to_arrow_schema,
 )
 
 
@@ -85,151 +85,29 @@ def _parse_partition_path(ppath: str) -> dict[str, str]:
     return out
 
 
-@dataclass
-class HudiFilePartition(InputPartition):
-    path: str
-    partition_values: tuple
-    # MOR snapshot: this slice's log files ((path, deltacommit), ...) —
-    # the task merges base + logs by record key (one task per FILE
-    # SLICE, the same distributed unit as Hudi's own MOR scan; the
-    # driver ships O(#log files) paths, never rows)
-    logs: tuple = ()
-    key_field: str = ""
-    valid_instants: tuple = ()
-    as_of: str = ""
-    # MOR incremental stream: emit the data-block records of ONE log
-    # file for the instants of this micro-batch. DELETE blocks refuse
-    # loudly unless the caller opted in with .option('ignoreDeletes',
-    # 'true') — datasource_base.TailingStreamReader's append-only
-    # contract, checked here in the task because only the task reads
-    # the log blocks.
-    stream_log: str = ""
-    stream_instants: tuple = ()
-    stream_ignore_deletes: bool = False
+class _HudiScanReader(FileScanReader):
+    """The shared scan core over Hudi file slices. A base-file task (COW,
+    or a compacted MOR slice) reads like any parquet file; partition-path
+    columns fill from the task."""
 
-
-class _HudiReadMixin:
     schema: T.StructType
     file_cols: list[str]  # columns physically in the parquet files
     part_cols: list[str]  # appended from the partition path
 
-    def _record_batches(self, records, pvals):
-        """Merged/decoded dict-records → arrow batches (round 12): the
-        avro decode is inherently per-row Python, but the Spark
-        boundary goes columnar in 4096-row slabs."""
-        from iceberg_metadata_pipeline_spark.ingest import arrow_scan
+    def _file_arrow_schema(self):
+        return spark_to_arrow_schema(
+            T.StructType([self.schema[c] for c in self.file_cols])
+        )
 
-        pa_schema = arrow_scan.spark_to_arrow_schema(self.schema)
-        names = [f.name for f in self.schema.fields]
+    def _task(self, path: str, partition_path: str, **log_fields) -> ScanTask:
+        values = _parse_partition_path(partition_path)
+        return ScanTask(
+            path, tuple((c, values.get(c)) for c in self.part_cols), **log_fields
+        )
 
-        def merged():
-            for rec in records:
-                yield {**rec, **pvals} if pvals else rec
-
-        yield from arrow_scan.batches_from_records(merged(), names, pa_schema)
-
-    def _decoded_block_batches(self, batch, pvals):
-        """A vectorized-decoded log-block batch → the declared schema:
-        partition-path values fill via O(1) arrays, missing
-        added-after-write columns project null (same projection rules
-        as the parquet path below)."""
-        from iceberg_metadata_pipeline_spark.ingest import arrow_scan
-
-        pa_schema = arrow_scan.spark_to_arrow_schema(self.schema)
-        n = batch.num_rows
-        got = dict(zip(batch.schema.names, batch.columns))
-        arrays = []
-        for i, f in enumerate(self.schema.fields):
-            tgt_type = pa_schema.field(i).type
-            if f.name in pvals:
-                arrays.append(arrow_scan.fill_array(pvals[f.name], n, tgt_type))
-            elif f.name in got:
-                col = got[f.name]
-                arrays.append(col if col.type == tgt_type else col.cast(tgt_type))
-            else:
-                arrays.append(arrow_scan.fill_array(None, n, tgt_type))
-        out = arrow_scan.finish_batch(arrays, pa_schema)
-        if out is not None:
-            yield out
-
-    def _rows(self, part: HudiFilePartition):
-        import pyarrow.parquet as pq
-
-        pvals = dict(zip(self.part_cols, part.partition_values))
-        if part.stream_log:
-            from iceberg_metadata_pipeline_spark.catalog.hudi_format import (
-                BLOCK_AVRO_DATA,
-                BLOCK_DELETE,
-                HEADER_INSTANT_TIME,
-                _decode_data_block,
-                _decode_data_block_arrow,
-                read_log_blocks,
-            )
-
-            live = set(part.stream_instants)
-            for bt, h, content in read_log_blocks(part.stream_log):
-                if h.get(HEADER_INSTANT_TIME) not in live:
-                    continue
-                if bt == BLOCK_DELETE and not part.stream_ignore_deletes:
-                    raise append_only_error(
-                        f"pyhudi stream: {part.stream_log} carries a DELETE "
-                        f"log block at instant {h.get(HEADER_INSTANT_TIME)}"
-                    )
-                if bt == BLOCK_AVRO_DATA:
-                    decoded = _decode_data_block_arrow(content, h)
-                    if decoded is not None:
-                        yield from self._decoded_block_batches(decoded, pvals)
-                    else:
-                        yield from self._record_batches(
-                            _decode_data_block(content, h), pvals
-                        )
-            return
-        if part.logs:
-            from iceberg_metadata_pipeline_spark.catalog.hudi_format import (
-                merge_file_slice,
-            )
-
-            yield from self._record_batches(
-                merge_file_slice(
-                    part.path or None,
-                    list(part.logs),
-                    part.key_field,
-                    frozenset(part.valid_instants),
-                    part.as_of,
-                ),
-                pvals,
-            )
-            return
-        if not part.path:
-            return  # log-only group whose logs all filtered out
-        # vectorized (round 12): base-file slices (no logs — the COW /
-        # compacted-MOR common case) yield RecordBatch directly;
-        # partition-path values and added-after columns fill via O(1)
-        # arrays. Log-merge slices above stay record-at-a-time: the
-        # merge itself is key-hash driven over decoded avro records.
-        from iceberg_metadata_pipeline_spark.ingest import arrow_scan
-
-        pa_schema = arrow_scan.spark_to_arrow_schema(self.schema)
-        pf = pq.ParquetFile(part.path)
-        present = set(pf.schema_arrow.names)
-        for batch in pf.iter_batches(
-            columns=[c for c in self.file_cols if c in present]
-        ):
-            n = batch.num_rows
-            got = dict(zip(batch.schema.names, batch.columns))
-            arrays = []
-            for i, f in enumerate(self.schema.fields):
-                tgt_type = pa_schema.field(i).type
-                if f.name in pvals:
-                    arrays.append(arrow_scan.fill_array(pvals[f.name], n, tgt_type))
-                elif f.name in got:
-                    arrays.append(got[f.name])
-                else:
-                    # files predating an added column project null
-                    arrays.append(arrow_scan.fill_array(None, n, tgt_type))
-            out = arrow_scan.finish_batch(arrays, pa_schema)
-            if out is not None:
-                yield out
+    @staticmethod
+    def _rows_of(table):
+        return table.schema, lambda cols: table.select(cols).to_batches()
 
 
 def _resolve_schema(state) -> tuple[T.StructType, list[str], list[str]]:
@@ -266,36 +144,52 @@ def _resolve_schema(state) -> tuple[T.StructType, list[str], list[str]]:
     return full, file_cols, part_cols
 
 
-class PyHudiBatchReader(DataSourceReader, _HudiReadMixin):
+class PyHudiBatchReader(_HudiScanReader, DataSourceReader):
+    """One task per FILE SLICE, the same distributed unit as Hudi's own
+    MOR scan: a slice with live logs ships its log paths (O(#log files),
+    never rows) and the task merges them over the base by record key."""
+
     def __init__(self, options):
         self.path = source_path(options)
         state = read_hudi_table(self.path, options.get("asOfInstant"))
         self.schema, self.file_cols, self.part_cols = _resolve_schema(state)
-        self._parts = []
-        for key, bf in sorted(state.files.items()):
-            logs = state.log_files.get(key, [])
-            self._parts.append(
-                HudiFilePartition(
-                    bf.path,
-                    tuple(
-                        _parse_partition_path(bf.partition_path).get(c)
-                        for c in self.part_cols
-                    ),
-                    logs=tuple((lg.path, lg.instant_time) for lg in logs),
-                    key_field=state.record_key_field if logs else "",
-                    valid_instants=tuple(sorted(state.valid_instants)) if logs else (),
-                    as_of=state.instant if logs else "",
-                )
+        self.key_field = state.record_key_field if state.log_files else ""
+        self.valid_instants = frozenset(state.valid_instants)
+        self.as_of = state.instant or ""
+        self._parts = [
+            self._task(
+                bf.path,
+                bf.partition_path,
+                logs=tuple(
+                    (lg.path, lg.instant_time) for lg in state.log_files.get(key, [])
+                ),
             )
+            for key, bf in sorted(state.files.items())
+        ]
 
     def partitions(self):
         return self._parts
 
-    def read(self, partition: HudiFilePartition):
-        yield from self._rows(partition)
+    def _open(self, task: ScanTask):
+        if not task.logs:
+            return super()._open(task)
+        from iceberg_metadata_pipeline_spark.catalog.hudi_format import (
+            merge_file_slice,
+        )
+
+        return self._rows_of(
+            merge_file_slice(
+                task.path or None,
+                list(task.logs),
+                self.key_field,
+                self.valid_instants,
+                self.as_of,
+                self._file_arrow_schema(),
+            )
+        )
 
 
-class PyHudiStreamReader(TailingStreamReader, _HudiReadMixin):
+class PyHudiStreamReader(_HudiScanReader, TailingStreamReader):
     """Offset = the last consumed completed instant time (lexicographic —
     Hudi instants are yyyyMMddHHmmssSSS, so string order IS time order).
     Each batch emits the base files written by instants in
@@ -322,16 +216,7 @@ class PyHudiStreamReader(TailingStreamReader, _HudiReadMixin):
 
     def _added(self, lo: str, hi: str) -> list:
         bases, logs = incremental_slices(self.path, begin=lo, end=hi or None)
-        parts = [
-            HudiFilePartition(
-                bf.path,
-                tuple(
-                    _parse_partition_path(bf.partition_path).get(c)
-                    for c in self.part_cols
-                ),
-            )
-            for bf in bases
-        ]
+        parts = [self._task(bf.path, bf.partition_path) for bf in bases]
         # MOR: each log file written in range emits its data-block
         # records for exactly its own deltacommit — the incremental-pull
         # contract extended to upserts. Row-level deletes refuse at
@@ -351,12 +236,9 @@ class PyHudiStreamReader(TailingStreamReader, _HudiReadMixin):
                         f"pyhudi stream: instant {ins.time} deletes {n_del} row(s)"
                     )
         parts.extend(
-            HudiFilePartition(
+            self._task(
                 "",
-                tuple(
-                    _parse_partition_path(lg.partition_path).get(c)
-                    for c in self.part_cols
-                ),
+                lg.partition_path,
                 stream_log=lg.path,
                 stream_instants=(lg.instant_time,),
                 stream_ignore_deletes=self.ignore_deletes,
@@ -365,8 +247,37 @@ class PyHudiStreamReader(TailingStreamReader, _HudiReadMixin):
         )
         return parts
 
-    def read(self, partition: HudiFilePartition):
-        yield from self._rows(partition)
+    def _open(self, task: ScanTask):
+        """A MOR log task emits the data-block records of ONE log file for
+        the instants of this micro-batch. A DELETE block refuses unless
+        the stream opted in with ``ignoreDeletes`` — checked here, in the
+        task, because only the task reads the log blocks."""
+        if not task.stream_log:
+            return super()._open(task)
+        import pyarrow as pa
+
+        from iceberg_metadata_pipeline_spark.catalog.hudi_format import (
+            BLOCK_AVRO_DATA,
+            BLOCK_DELETE,
+            HEADER_INSTANT_TIME,
+            _data_block_table,
+            conform_table,
+            read_log_blocks,
+        )
+
+        schema = self._file_arrow_schema()
+        tables = [schema.empty_table()]
+        for bt, h, content in read_log_blocks(task.stream_log):
+            if h.get(HEADER_INSTANT_TIME) not in task.stream_instants:
+                continue
+            if bt == BLOCK_DELETE and not task.stream_ignore_deletes:
+                raise append_only_error(
+                    f"pyhudi stream: {task.stream_log} carries a DELETE "
+                    f"log block at instant {h.get(HEADER_INSTANT_TIME)}"
+                )
+            if bt == BLOCK_AVRO_DATA:
+                tables.append(conform_table(_data_block_table(content, h), schema))
+        return self._rows_of(pa.concat_tables(tables))
 
 
 def _write_stats(md: dict) -> list[dict]:

@@ -12,18 +12,16 @@ per file with the spec's sequence rules:
 - equality deletes drop rows matching the delete file's column tuple
   where ``delete.seq > data.seq`` (null-safe equality, per spec).
 
-Delete files decode EXECUTOR-side by default: the driver ships only
-O(#delete files) DESCRIPTORS (path + format + sequence + puffin blob
-offset) inside each InputPartition, and the task resolves its own
-delete state — a puffin DV blob decodes in the task, a position-delete
-parquet reads its two columns in the task, an equality-delete parquet
-reads its key columns in the task. This is the real iceberg-spark
-shape: a table with billions of accumulated deletes never
-materializes them on the driver at plan time, and nothing data-sized
-is pickled per partition. Small delete sets (total record_count ≤
-``deleteDecodeThreshold``, default 10 000) keep the round-6 fast path:
-decoded once on the driver, positions shipped directly, so tiny MOR
-tables don't pay a per-task delete-file re-read.
+Delete files decode EXECUTOR-side: the driver ships only O(#delete
+files) DESCRIPTORS (path + kind + puffin blob offset) inside each
+:class:`~iceberg_metadata_pipeline_spark.ingest.datasource_base.ScanTask`,
+and the task resolves its own delete state through the shared scan core
+(``datasource_base.FileScanReader``) — a puffin DV blob decodes in the
+task, a position-delete parquet reads its two columns in the task, an
+equality-delete parquet reads its key columns in the task. This is the
+real iceberg-spark shape: a table with billions of accumulated deletes
+never materializes them on the driver at plan time, and nothing
+data-sized is pickled per partition.
 
 This is the tailing/read-anywhere twin of ``pydelta``: for heavy
 analytics, ``import_iceberg_table`` registers the files into metacat
@@ -35,14 +33,9 @@ from __future__ import annotations
 
 import json
 import os
-from dataclasses import dataclass
 
 from pyspark.sql import types as T
-from pyspark.sql.datasource import (
-    DataSourceReader,
-    DataSourceStreamArrowWriter,
-    InputPartition,
-)
+from pyspark.sql.datasource import DataSourceReader, DataSourceStreamArrowWriter
 
 from iceberg_metadata_pipeline_spark.catalog.iceberg_format import (
     list_metadata_versions,
@@ -50,235 +43,53 @@ from iceberg_metadata_pipeline_spark.catalog.iceberg_format import (
 )
 from iceberg_metadata_pipeline_spark.catalog.metacat import plain_path
 from iceberg_metadata_pipeline_spark.ingest.datasource_base import (
+    FileScanReader,
     FormatDataSource,
+    ScanTask,
     StagedArrowWriter,
     TailingStreamReader,
+    coerce_literal,
     source_path,
 )
 
 
-@dataclass
-class IceFilePartition(InputPartition):
-    path: str
-    data_seq: int
-    # FAST PATH (small delete sets): positions dead under the seq rule
-    # (already filtered: del_seq >= data_seq)
-    deleted_pos: tuple = ()
-    # fast path equality deletes applicable to this file
-    # (del_seq > data_seq): tuple of (columns, value-tuples)
-    eq_deletes: tuple = ()
-    # SCALE PATH: O(#delete files) descriptors, decoded in the task.
-    # position/DV descriptors: (path, is_dv, content_offset) — the seq
-    # rule (del_seq >= data_seq) is applied at planning, so only
-    # applicable descriptors ship
-    pos_descriptors: tuple = ()
-    # equality descriptors: (path, columns) with del_seq > data_seq
-    eq_descriptors: tuple = ()
-
-
-def _py_default(value, dtype: T.DataType):
-    """An initial-default JSON literal → the Python value the DataSource
-    row must carry for the matching Spark type."""
-    import datetime as _dt
-
-    if value is None:
-        return None
-    t = dtype.typeName()
-    if t in ("long", "integer", "short", "byte"):
-        return int(value)
-    if t in ("double", "float"):
-        return float(value)
-    if t == "boolean":
-        return bool(value)
-    if t == "date":
-        return _dt.date.fromisoformat(str(value))
-    if t in ("timestamp", "timestamp_ntz"):
-        return _dt.datetime.fromisoformat(str(value))
-    return str(value)
-
-
-class _IceFileReader:
-    """Shared per-file scan of the batch and stream readers."""
+class _IceFileReader(FileScanReader):
+    """Shared schema state of the batch and stream readers."""
 
     def _read_schema(self, info) -> None:
         self.schema = info.schema
-        self.names = [f.name for f in info.schema.fields]
         # v3 initial-defaults (and plain schema evolution): a column
         # missing from a data file fills per batch — the default when
         # one is declared, else null; files that HAVE the column keep
         # their values including explicit nulls (the spec distinction)
-        self.fill = {
-            f.name: _py_default(info.defaults.get(f.name), f.dataType)
+        self.fills = tuple(
+            (f.name, coerce_literal(info.defaults[f.name], f.dataType))
             for f in info.schema.fields
-        }
-
-    def read(self, partition: IceFilePartition):
-        """Vectorized (round 12): yields ``pa.RecordBatch`` — position
-        deletes apply as a searchsorted mask over the batch's file-row
-        range, equality deletes probe only their key columns, and
-        missing/evolved columns fill via O(1) arrow arrays. The
-        Python↔JVM boundary stays columnar (the r11 'weak #1' per-row
-        tuple loop is gone)."""
-        import pyarrow.parquet as pq
-
-        from iceberg_metadata_pipeline_spark.ingest import arrow_scan
-
-        dead_parts = [partition.deleted_pos] if partition.deleted_pos else []
-        eq_probe = [
-            (cols, set(rows)) for cols, rows in partition.eq_deletes
-        ]
-        # scale path: decode this task's delete state from descriptors
-        me = plain_path(partition.path)
-        for dpath, is_dv, offset in partition.pos_descriptors:
-            if is_dv:
-                from iceberg_metadata_pipeline_spark.catalog.puffin import (
-                    read_deletion_vectors,
-                )
-
-                for ref, positions in read_deletion_vectors(dpath, offset):
-                    if plain_path(ref) == me:
-                        dead_parts.append(positions)
-            else:
-                # two-column columnar read; rows for other data files are
-                # dropped here (real iceberg readers prune by delete-file
-                # bounds at plan time — our manifests don't carry
-                # file_path bounds, so the filter runs in the task).
-                # Row selection is an arrow filter — O(distinct paths)
-                # Python work, not O(deleted rows)
-                t = pq.read_table(dpath, columns=["file_path", "pos"])
-                dead_parts.append(
-                    arrow_scan.positions_for_file(t, me, plain_path)
-                )
-        for dpath, cols in partition.eq_descriptors:
-            t = pq.read_table(dpath, columns=list(cols))
-            rows = set(
-                tuple(t.column(c)[i].as_py() for c in cols)
-                for i in range(t.num_rows)
-            )
-            eq_probe.append((cols, rows))
-
-        dead_np = arrow_scan.merge_positions(dead_parts)
-        pa_schema = arrow_scan.spark_to_arrow_schema(self.schema)
-        eq_cols = {c for cols, _probe in eq_probe for c in cols}
-
-        pf = pq.ParquetFile(partition.path)
-        pos = 0
-        file_cols = set(pf.schema_arrow.names)
-        want = [n for n in self.names if n in file_cols]
-        for batch in pf.iter_batches(columns=want):
-            n = batch.num_rows
-            got = dict(zip(batch.schema.names, batch.columns))
-            arrays = [
-                got[name]
-                if name in got
-                else arrow_scan.fill_array(
-                    self.fill[name], n, pa_schema.field(i).type
-                )
-                for i, name in enumerate(self.names)
-            ]
-            keep = arrow_scan.position_mask(pos, n, dead_np)
-            if eq_probe:
-                col_values = {
-                    c: (
-                        got[c].to_pylist()
-                        if c in got
-                        else [self.fill[c]] * n
-                    )
-                    for c in eq_cols
-                }
-                keep = arrow_scan.combine_masks(
-                    keep, arrow_scan.eq_delete_mask(col_values, n, eq_probe)
-                )
-            pos += n
-            out = arrow_scan.finish_batch(arrays, pa_schema, keep)
-            if out is not None:
-                yield out
+            if info.defaults.get(f.name) is not None
+        )
 
 
 class PyIceBatchReader(_IceFileReader, DataSourceReader):
+    """Each ScanTask carries only the descriptors of delete files
+    applicable under the sequence rules; the task decodes them itself. A
+    DV descriptor with a referenced_data_file routes only to that file;
+    position-delete parquets (which may reference any data file) route to
+    every file with data_seq ≤ delete seq and the task keeps its own
+    path's rows."""
+
     def __init__(self, options):
         self.path = source_path(options)
         # descriptors only: plan-time state stays O(#delete files), never
-        # O(deleted rows) — the r6 'weak' finding was driver-side decode
+        # O(deleted rows)
         info = read_iceberg_table(self.path, decode_dvs=False)
         self._read_schema(info)
-        threshold = int(options.get("deleteDecodeThreshold", 10_000))
-        total_deleted = sum(d.record_count for d in info.delete_files)
-
-        if info.delete_files and total_deleted <= threshold:
-            self._plan_small(info)
-        else:
-            self._plan_descriptors(info)
-
-    def _plan_small(self, info) -> None:
-        """Fast path: decode once on the driver, ship positions. Only for
-        delete sets whose TOTAL record count is under the threshold —
-        saves every task a delete-file re-read on tiny MOR tables."""
-        import pyarrow.parquet as pq
-
-        from iceberg_metadata_pipeline_spark.catalog.puffin import (
-            read_deletion_vectors,
-        )
-
-        pos_by_file: dict[str, list[tuple[int, int]]] = {}  # file -> [(pos, seq)]
-        eq_sets: list[tuple[tuple[str, ...], tuple, int]] = []  # (cols, rows, seq)
-        for d in info.delete_files:
-            if d.content == 1:
-                if d.is_dv:
-                    for ref, positions in read_deletion_vectors(
-                        d.path, d.content_offset
-                    ):
-                        if d.referenced_data_file is not None and plain_path(
-                            ref
-                        ) != plain_path(d.referenced_data_file):
-                            continue
-                        pos_by_file.setdefault(plain_path(ref), []).extend(
-                            (int(p), d.seq) for p in positions
-                        )
-                else:
-                    t = pq.read_table(d.path, columns=["file_path", "pos"])
-                    for fp, pos in zip(
-                        t.column("file_path").to_pylist(),
-                        t.column("pos").to_pylist(),
-                    ):
-                        pos_by_file.setdefault(plain_path(fp), []).append(
-                            (int(pos), d.seq)
-                        )
-            elif d.content == 2:
-                t = pq.read_table(d.path, columns=list(d.equality_cols))
-                rows = tuple(
-                    tuple(t.column(c)[i].as_py() for c in d.equality_cols)
-                    for i in range(t.num_rows)
-                )
-                eq_sets.append((tuple(d.equality_cols), rows, d.seq))
-
         self._parts = []
         for f in info.files:
             fnorm = plain_path(f.path)
-            dead = tuple(
-                sorted(
-                    p
-                    for p, dseq in pos_by_file.get(fnorm, [])
-                    if dseq >= f.seq
-                )
-            )
-            eqs = tuple(
-                (cols, rows) for cols, rows, dseq in eq_sets if dseq > f.seq
-            )
-            self._parts.append(IceFilePartition(f.path, f.seq, dead, eqs))
-
-    def _plan_descriptors(self, info) -> None:
-        """Scale path: each InputPartition carries only the descriptors
-        of delete files applicable under the sequence rules; the task
-        decodes them itself. A DV descriptor with a referenced_data_file
-        routes only to that file; position-delete parquets (which may
-        reference any data file) route to every file with data_seq ≤
-        delete seq and the task filters rows to its own path."""
-        self._parts = []
-        for f in info.files:
-            fnorm = plain_path(f.path)
-            pos_desc = tuple(
-                (d.path, d.is_dv, d.content_offset)
+            pos_files = tuple(
+                ("puffin", d.path, d.content_offset, None)
+                if d.is_dv
+                else ("parquet", d.path, None, None)
                 for d in info.delete_files
                 if d.content == 1
                 and d.seq >= f.seq
@@ -287,16 +98,13 @@ class PyIceBatchReader(_IceFileReader, DataSourceReader):
                     or plain_path(d.referenced_data_file) == fnorm
                 )
             )
-            eq_desc = tuple(
-                (d.path, tuple(d.equality_cols))
+            eq_files = tuple(
+                (tuple(d.equality_cols), d.path)
                 for d in info.delete_files
                 if d.content == 2 and d.seq > f.seq
             )
             self._parts.append(
-                IceFilePartition(
-                    f.path, f.seq,
-                    pos_descriptors=pos_desc, eq_descriptors=eq_desc,
-                )
+                ScanTask(f.path, self.fills, pos_files=pos_files, eq_files=eq_files)
             )
 
     def partitions(self):
@@ -364,7 +172,7 @@ class PyIceStreamReader(_IceFileReader, TailingStreamReader):
                 "(overwrite/compaction)"
             )
         return [
-            IceFilePartition(after[p].path, after[p].seq)
+            ScanTask(after[p].path, self.fills)
             for p in sorted(set(after) - set(before))
         ]
 

@@ -6,9 +6,9 @@ THROUGH the REST catalog's server-side scan planning verb
 never touches a metadata JSON, manifest list, or manifest: the driver
 asks the catalog to PLAN (loadTable only for the schema), gets back
 completed file-scan-tasks with per-task delete-file references, and
-ships one InputPartition per task. Tasks read their data file and
-apply the referenced position/equality delete files with the spec's
-semantics — the thin-engine proof that the plan verb carries
+ships one ScanTask per task. Tasks read their data file and apply the
+referenced position/equality delete files with the spec's semantics
+through the shared scan core (``datasource_base.FileScanReader``) — the thin-engine proof that the plan verb carries
 everything a reader needs.
 
 Contrast with ``pyice`` (reads the table DIRECTORY: metadata → avro
@@ -46,14 +46,15 @@ from __future__ import annotations
 
 import json
 import os
-from dataclasses import dataclass
 
 from pyspark.sql import types as T
-from pyspark.sql.datasource import DataSourceReader, InputPartition
+from pyspark.sql.datasource import DataSourceReader
 
 from iceberg_metadata_pipeline_spark.catalog.metacat import plain_path
 from iceberg_metadata_pipeline_spark.ingest.datasource_base import (
+    FileScanReader,
     FormatDataSource,
+    ScanTask,
     StagedArrowWriter,
     TailingStreamReader,
 )
@@ -115,18 +116,6 @@ def _current_schema(md: dict) -> dict:
     )
 
 
-@dataclass
-class RestScanTask(InputPartition):
-    path: str
-    # (parquet path,) position-delete files referenced by this task
-    pos_deletes: tuple = ()
-    # (columns tuple, parquet path) equality-delete files
-    eq_deletes: tuple = ()
-    # the task's residual-filter (Iceberg REST expression JSON string,
-    # "" when none) — re-applied row-level inside the task
-    residual: str = ""
-
-
 def _residual_mask(expr: dict, batch, name_idx: dict):
     """Evaluate an Iceberg REST expression over an arrow RecordBatch →
     boolean keep array (SQL three-valued logic: null comparisons drop
@@ -178,83 +167,23 @@ def _residual_mask(expr: dict, batch, name_idx: dict):
     raise ValueError(f"unsupported residual expression type {typ!r}")
 
 
-class _RestTaskReadMixin:
-    """Shared task-side scan: vectorized parquet read + delete masks +
-    residual filter (used by the batch reader and the stream tailer —
-    needs self.names / self.spark_schema)."""
+class _RestScanReader(FileScanReader):
+    """The shared scan core plus the task's residual filter."""
 
-    names: list
-    spark_schema: T.StructType
+    def _row_filter(self, task: ScanTask, batch):
+        """Row-level residual: the server's file-level pruning is
+        conservative (false keeps only); exact semantics land here,
+        vectorized (nulls drop, SQL WHERE behavior)."""
+        if not task.residual:
+            return None
+        import pyarrow.compute as pc
 
-    def read(self, partition: RestScanTask):
-        """Vectorized (round 12): RecordBatch yields — position deletes
-        apply as a searchsorted mask over the batch's file-row range,
-        equality deletes probe only their key columns (the per-row tuple
-        loop of r11 is gone; the thin client stays columnar)."""
-        import pyarrow.parquet as pq
-
-        from iceberg_metadata_pipeline_spark.ingest import arrow_scan
-
-        me = plain_path(partition.path)
-        dead_parts = []
-        for dpath in partition.pos_deletes:
-            t = pq.read_table(dpath, columns=["file_path", "pos"])
-            dead_parts.append(arrow_scan.positions_for_file(t, me, plain_path))
-        eq_probe = []
-        for cols, dpath in partition.eq_deletes:
-            t = pq.read_table(dpath, columns=list(cols))
-            rows = set(
-                tuple(t.column(c)[i].as_py() for c in cols)
-                for i in range(t.num_rows)
-            )
-            eq_probe.append((cols, rows))
-
-        dead_np = arrow_scan.merge_positions(dead_parts)
-        pa_schema = arrow_scan.spark_to_arrow_schema(self.spark_schema)
-        eq_cols = {c for cols, _probe in eq_probe for c in cols}
-
-        pf = pq.ParquetFile(partition.path)
-        file_cols = set(pf.schema_arrow.names)
-        want = [n for n in self.names if n in file_cols]
-        pos = 0
-        for batch in pf.iter_batches(columns=want):
-            n = batch.num_rows
-            got = dict(zip(batch.schema.names, batch.columns))
-            arrays = [
-                got[name]
-                if name in got
-                else arrow_scan.fill_array(None, n, pa_schema.field(i).type)
-                for i, name in enumerate(self.names)
-            ]
-            keep = arrow_scan.position_mask(pos, n, dead_np)
-            if eq_probe:
-                col_values = {
-                    c: (got[c].to_pylist() if c in got else [None] * n)
-                    for c in eq_cols
-                }
-                keep = arrow_scan.combine_masks(
-                    keep, arrow_scan.eq_delete_mask(col_values, n, eq_probe)
-                )
-            pos += n
-            out = arrow_scan.finish_batch(arrays, pa_schema, keep)
-            if out is not None and partition.residual:
-                # row-level residual: the server's file-level pruning is
-                # conservative (false keeps only); exact semantics land
-                # here, vectorized (nulls drop, SQL WHERE behavior)
-                name_idx = {f.name: i for i, f in enumerate(out.schema)}
-                out = out.filter(
-                    _residual_mask(
-                        json.loads(partition.residual), out, name_idx
-                    )
-                )
-                if out.num_rows == 0:
-                    out = None
-            if out is not None:
-                yield out
+        name_idx = {f.name: i for i, f in enumerate(batch.schema)}
+        keep = _residual_mask(json.loads(task.residual), batch, name_idx)
+        return pc.fill_null(keep, False).to_numpy(zero_copy_only=False)
 
 
-
-class PyRestReader(_RestTaskReadMixin, DataSourceReader):
+class PyRestReader(_RestScanReader, DataSourceReader):
     def __init__(self, options, schema: T.StructType):
         self.url, self.ns, self.table = _table_ref(options)
         self.snapshot_id = options.get("snapshotId")
@@ -262,8 +191,7 @@ class PyRestReader(_RestTaskReadMixin, DataSourceReader):
         # pageSize: ask the server for a PAGED plan (plan-tasks tokens
         # walked transparently below) — bounds every response to a page
         self.page_size = int(options.get("pageSize", 0) or 0)
-        self.names = [f.name for f in schema.fields]
-        self.spark_schema = schema
+        self.schema = schema
 
     def partitions(self):
         body: dict = {}
@@ -295,7 +223,7 @@ class PyRestReader(_RestTaskReadMixin, DataSourceReader):
         return parts
 
     def _page_to_parts(self, page: dict) -> list:
-        """One plan/fetchScanTasks response page → RestScanTask list
+        """One plan/fetchScanTasks response page → ScanTask list
         (delete-file indices are PAGE-LOCAL per the spec)."""
         dels = page.get("delete-files") or []
         parts = []
@@ -304,19 +232,14 @@ class PyRestReader(_RestTaskReadMixin, DataSourceReader):
             for i in task.get("delete-file-references") or []:
                 d = dels[i]
                 if d["content"] == "position-deletes":
-                    pos.append(d["file-path"])
+                    pos.append(("parquet", d["file-path"], None, None))
                 else:
-                    eq.append(
-                        (
-                            tuple(self._eq_cols(d)),
-                            d["file-path"],
-                        )
-                    )
+                    eq.append((tuple(self._eq_cols(d)), d["file-path"]))
             parts.append(
-                RestScanTask(
-                    path=task["data-file"]["file-path"],
-                    pos_deletes=tuple(pos),
-                    eq_deletes=tuple(eq),
+                ScanTask(
+                    task["data-file"]["file-path"],
+                    pos_files=tuple(pos),
+                    eq_files=tuple(eq),
                     residual=(
                         json.dumps(task["residual-filter"])
                         if task.get("residual-filter") is not None
@@ -339,7 +262,7 @@ class PyRestReader(_RestTaskReadMixin, DataSourceReader):
 
 
 
-class PyRestStreamReader(_RestTaskReadMixin, TailingStreamReader):
+class PyRestStreamReader(_RestScanReader, TailingStreamReader):
     """Tail APPENDS through the REST catalog (round 12 — the thin
     engine's streaming leg): the OFFSET is the served current snapshot
     id from loadTable (monotone along the mirror's snapshot-log; the
@@ -356,8 +279,7 @@ class PyRestStreamReader(_RestTaskReadMixin, TailingStreamReader):
     def __init__(self, schema: T.StructType, options):
         super().__init__(options)
         self.url, self.ns, self.table = _table_ref(options)
-        self.names = [f.name for f in schema.fields]
-        self.spark_schema = schema
+        self.schema = schema
 
     def _backlog(self, pos) -> list:
         sid = _load_table(self.url, self.ns, self.table).get("current-snapshot-id")
@@ -391,7 +313,7 @@ class PyRestStreamReader(_RestTaskReadMixin, TailingStreamReader):
                     f"pyrest stream: newly added file {p} carries "
                     "merge-on-read delete references"
                 )
-            parts.append(RestScanTask(path=task["data-file"]["file-path"]))
+            parts.append(ScanTask(task["data-file"]["file-path"]))
         return parts
 
 

@@ -112,17 +112,6 @@ class Check:
     def is_non_negative(self, col: str) -> "Check":
         return self.satisfies(f"{col} >= 0", f"{col} non-negative")
 
-    def has_pattern(self, col: str, regex: str, assertion=None) -> "Check":
-        self.constraints.append(
-            _Constraint(
-                f"pattern({col})",
-                "row_agg",
-                _ratio(F.col(col).rlike(regex)),
-                assertion or (lambda v: v == 1.0),
-            )
-        )
-        return self
-
     def is_contained_in(self, col: str, values: list, assertion=None) -> "Check":
         self.constraints.append(
             _Constraint(
@@ -153,17 +142,6 @@ class Check:
                 "row_agg",
                 F.sum(F.col(col).cast("decimal(38,6)")).cast("double")
                 / F.count(F.col(col)).cast("double"),
-                assertion,
-            )
-        )
-        return self
-
-    def has_approx_count_distinct(self, col: str, assertion) -> "Check":
-        self.constraints.append(
-            _Constraint(
-                f"approx_count_distinct({col})",
-                "row_agg",
-                F.approx_count_distinct(col).cast("double"),
                 assertion,
             )
         )

@@ -11,6 +11,11 @@ overridable by env vars:
 - ``SPARK_GRAFT_SHUFFLE_PARTITIONS`` — default: thread count
 - ``SPARK_GRAFT_DRIVER_MEM`` — default 48g (local mode = driver-only JVM)
 
+Python workers import this package from the directory that holds it
+(``spark.executorEnv.PYTHONPATH``, which Spark merges with the worker's
+inherited ``PYTHONPATH``), so a DataSource or UDF task runs from any
+working directory.
+
 At 1000-executor / 100 TB scale the same builder is used with ``master``
 pointed at the cluster manager; the scale-relevant confs (AQE, 64-128 MB
 partition targets, broadcast threshold, skew-join) are already what a large
@@ -31,6 +36,9 @@ def _env_int(name: str, default: int) -> int:
     except ValueError:
         return default
 
+
+#: the directory holding this package, for the Python workers' path
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 #: target bytes per shuffle partition at scale — the SCALE.md rule
 #: "shuffle partitions ≈ total-input-bytes / 128 MB" as executable code.
@@ -120,6 +128,7 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-XX:+UseG1GC")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -185,9 +185,9 @@ def test_command_block_masks_rolled_instant(tmp_path):
         _encode_data_block([{"id": 1, "cat": "doomed", "score": 0.0}], avro),
     )
     append_log_block(path, BLOCK_COMMAND, {HEADER_TARGET_INSTANT_TIME: "002"}, b"")
-    merged = list(
-        merge_file_slice(None, [(path, "002")], "id", frozenset({"002"}), "")
-    )
+    merged = merge_file_slice(
+        None, [(path, "002")], "id", frozenset({"002"}), ""
+    ).to_pylist()
     assert merged == []
 
 
@@ -470,7 +470,7 @@ def test_mor_randomized_sequences_vs_oracle(tmp_path):
             rows.extend(
                 merge_file_slice(
                     bf.path, logs, "id", state.valid_instants, state.instant
-                )
+                ).to_pylist()
             )
         return sorted((r["id"], r["cat"], r["score"]) for r in rows)
 

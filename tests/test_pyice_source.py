@@ -224,8 +224,8 @@ def test_large_delete_set_ships_descriptors_not_positions(spark, tmp_path):
     parts = reader.partitions()
     payload = max(len(pickle.dumps(p)) for p in parts)
     assert payload < 2_000, f"partition payload {payload}B is data-sized"
-    assert all(p.deleted_pos == () for p in parts)
-    assert any(p.pos_descriptors for p in parts)
+    assert all(p.positions == () for p in parts)
+    assert any(p.pos_files for p in parts)
 
     victim_survivors = [
         r[0]
