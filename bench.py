@@ -305,8 +305,20 @@ def _cross_round(timings: dict, sentinel: float, local_path: str) -> dict | None
 
 
 def main() -> None:
-    if len(sys.argv) >= 3 and sys.argv[1] == "--isolate":
-        _isolate([q.strip() for q in sys.argv[2].split(",") if q.strip()])
+    import argparse
+
+    parser = argparse.ArgumentParser(
+        description="Time the headline queries and write BENCH_LOCAL.json."
+    )
+    parser.add_argument(
+        "--isolate",
+        metavar="Q1,Q2",
+        help="re-run only these queries in a fresh session and merge their "
+        'timings into BENCH_LOCAL.json under "isolated"',
+    )
+    args = parser.parse_args()
+    if args.isolate is not None:
+        _isolate([q.strip() for q in args.isolate.split(",") if q.strip()])
         return
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)

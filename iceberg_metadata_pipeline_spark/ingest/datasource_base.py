@@ -393,8 +393,7 @@ class ScanTask(InputPartition):
     - ``eq_files``: equality deletes ``(columns, path)``: a row whose
       ``columns`` tuple appears in the file is dead (null-safe).
     - ``residual``: a pyrest row predicate (Iceberg REST expression JSON).
-    - ``logs`` and the ``stream_*`` fields: Hudi log files
-      (pyhudi_source).
+    - ``logs``: Hudi log files ``(path, instant)`` (pyhudi_source).
     """
 
     path: str
@@ -404,9 +403,6 @@ class ScanTask(InputPartition):
     eq_files: tuple = ()
     residual: str = ""
     logs: tuple = ()
-    stream_log: str = ""
-    stream_instants: tuple = ()
-    stream_ignore_deletes: bool = False
 
 
 def _positions_for_file(delete_table, me: str, plain_path):

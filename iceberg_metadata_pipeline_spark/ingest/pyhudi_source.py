@@ -236,24 +236,19 @@ class PyHudiStreamReader(_HudiScanReader, TailingStreamReader):
                         f"pyhudi stream: instant {ins.time} deletes {n_del} row(s)"
                     )
         parts.extend(
-            self._task(
-                "",
-                lg.partition_path,
-                stream_log=lg.path,
-                stream_instants=(lg.instant_time,),
-                stream_ignore_deletes=self.ignore_deletes,
-            )
+            self._task("", lg.partition_path, logs=((lg.path, lg.instant_time),))
             for lg in logs
         )
         return parts
 
     def _open(self, task: ScanTask):
         """A MOR log task emits the data-block records of ONE log file for
-        the instants of this micro-batch. A DELETE block refuses unless
-        the stream opted in with ``ignoreDeletes`` — checked here, in the
-        task, because only the task reads the log blocks."""
-        if not task.stream_log:
+        its own instant. A DELETE block refuses unless the stream opted
+        in with ``ignoreDeletes`` — checked here, in the task (the reader
+        is pickled to it), because only the task reads the log blocks."""
+        if not task.logs:
             return super()._open(task)
+        ((log_path, instant),) = task.logs
         import pyarrow as pa
 
         from iceberg_metadata_pipeline_spark.catalog.hudi_format import (
@@ -267,12 +262,12 @@ class PyHudiStreamReader(_HudiScanReader, TailingStreamReader):
 
         schema = self._file_arrow_schema()
         tables = [schema.empty_table()]
-        for bt, h, content in read_log_blocks(task.stream_log):
-            if h.get(HEADER_INSTANT_TIME) not in task.stream_instants:
+        for bt, h, content in read_log_blocks(log_path):
+            if h.get(HEADER_INSTANT_TIME) != instant:
                 continue
-            if bt == BLOCK_DELETE and not task.stream_ignore_deletes:
+            if bt == BLOCK_DELETE and not self.ignore_deletes:
                 raise append_only_error(
-                    f"pyhudi stream: {task.stream_log} carries a DELETE "
+                    f"pyhudi stream: {log_path} carries a DELETE "
                     f"log block at instant {h.get(HEADER_INSTANT_TIME)}"
                 )
             if bt == BLOCK_AVRO_DATA:

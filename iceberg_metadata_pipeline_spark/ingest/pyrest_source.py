@@ -46,11 +46,12 @@ from __future__ import annotations
 
 import json
 import os
+import uuid
 
 from pyspark.sql import types as T
 from pyspark.sql.datasource import DataSourceReader
 
-from iceberg_metadata_pipeline_spark.catalog.metacat import plain_path
+from iceberg_metadata_pipeline_spark.catalog.metacat import DataFileEntry, plain_path
 from iceberg_metadata_pipeline_spark.ingest.datasource_base import (
     FileScanReader,
     FormatDataSource,
@@ -317,32 +318,6 @@ class PyRestStreamReader(_RestScanReader, TailingStreamReader):
         return parts
 
 
-def _manifest_part_value(v, source_type: str):
-    """Python row value → the spec-typed manifest representation of an
-    identity partition value (dates as epoch days, timestamps as epoch
-    micros — the Avro appendix encodings manifest_entry_schema types)."""
-    import datetime as _dt
-
-    if v is None:
-        return None
-    if source_type in ("long", "int", "integer", "smallint", "tinyint"):
-        return int(v)
-    if source_type == "boolean":
-        return bool(v)
-    if source_type in ("double", "float"):
-        return float(v)
-    if source_type == "string":
-        return str(v)
-    if source_type == "date":
-        return (v - _dt.date(1970, 1, 1)).days
-    if source_type in ("timestamp", "timestamp_ntz"):
-        naive = v.replace(tzinfo=None) if v.tzinfo else v
-        return (naive - _dt.datetime(1970, 1, 1)) // _dt.timedelta(
-            microseconds=1
-        )
-    raise ValueError(f"unsupported partition source type {source_type!r}")
-
-
 class PyRestBatchWriter(StagedArrowWriter):
     """``df.write.format("pyrest").option("url", base).mode("append")
     .save("ns.table")`` — the WRITE symmetry of the thin-engine story
@@ -385,6 +360,7 @@ class PyRestBatchWriter(StagedArrowWriter):
         self.stage_dir = os.path.join(self.location, "data")
         served = _current_schema(md)
         from iceberg_metadata_pipeline_spark.catalog.iceberg_format import (
+            _shape,
             iceberg_schema_to_spark,
         )
 
@@ -405,7 +381,6 @@ class PyRestBatchWriter(StagedArrowWriter):
         # non-identity transform still refuses loudly — routing a
         # bucket/truncate/days tuple needs the transform evaluated
         # writer-side, which this thin client does not do.
-        self.spec_id = int(md.get("default-spec-id", 0) or 0)
         self.part_fields: list[dict] = []
         _ice2src = {
             "long": "long",
@@ -447,82 +422,50 @@ class PyRestBatchWriter(StagedArrowWriter):
                 }
             )
         self.part_cols = [pf["column"] for pf in self.part_fields]
+        self.shape = _shape(md, self.part_fields)
 
     def _file_key(self, values: tuple) -> dict:
-        # the spec-typed tuple rides the commit message into the manifest
+        # metacat's partition-string form rides the commit message; the
+        # manifest writer types it (timestamps arrive as naive UTC)
         return {
-            pf["name"]: _manifest_part_value(v, pf["source_type"])
+            pf["name"]: None if v is None else str(v)
             for pf, v in zip(self.part_fields, values)
         }
 
     def _commit(self, staged, epoch) -> None:
         import urllib.error
-        import uuid as _uuid
 
-        from iceberg_metadata_pipeline_spark.catalog import avro_io
         from iceberg_metadata_pipeline_spark.catalog.iceberg_format import (
-            manifest_entry_schema,
-            manifest_list_schema,
+            _data_entry,
+            _new_ids,
+            _write_manifest,
+            _write_manifest_list,
         )
 
         if not staged:
             return
         meta_dir = os.path.join(self.location, "metadata")
         os.makedirs(meta_dir, exist_ok=True)
-        finals = []
+        files = []
         for tmp, rows, size, part in staged:
-            final = os.path.join(self.stage_dir, f"part-{_uuid.uuid4().hex}.parquet")
+            final = os.path.join(self.stage_dir, f"part-{uuid.uuid4().hex}.parquet")
             os.rename(tmp, final)
-            finals.append((final, rows, size, part))
-        sid = int(_uuid.uuid4().int % (1 << 62))
-        mpath = os.path.join(meta_dir, f"pyrest-{sid}-m0.avro")
-        avro_io.write_container(
-            mpath,
-            manifest_entry_schema(
-                [
-                    {"name": pf["name"], "source_type": pf["source_type"]}
-                    for pf in self.part_fields
-                ]
-            ),
-            [
-                {
-                    "status": 1,
-                    "snapshot_id": sid,
-                    "sequence_number": 1,
-                    "data_file": {
-                        "content": 0,
-                        "file_path": path,
-                        "file_format": "PARQUET",
-                        "partition": part,
-                        "record_count": rows,
-                        "file_size_in_bytes": size,
-                    },
-                }
-                for path, rows, size, part in finals
-            ],
+            files.append(
+                DataFileEntry(
+                    path=final, record_count=rows, file_size_bytes=size,
+                    format="PARQUET", partition=part,
+                )
+            )
+        sid, commit_uuid = _new_ids()
+        row = _write_manifest(
+            os.path.join(meta_dir, f"{commit_uuid}-m0.avro"),
+            self.shape,
+            [_data_entry(f, sid, 1, self.part_fields) for f in files],
+            sid,
+            1,
         )
-        mlist = os.path.join(meta_dir, f"snap-{sid}-pyrest.avro")
-        avro_io.write_container(
-            mlist,
-            manifest_list_schema(),
-            [
-                {
-                    "manifest_path": mpath,
-                    "manifest_length": os.path.getsize(mpath),
-                    "partition_spec_id": self.spec_id,
-                    "content": 0,
-                    "sequence_number": 1,
-                    "min_sequence_number": 1,
-                    "added_snapshot_id": sid,
-                    "added_files_count": len(finals),
-                    "existing_files_count": 0,
-                    "deleted_files_count": 0,
-                    "added_rows_count": sum(r for _p, r, _s, _pt in finals),
-                    "existing_rows_count": 0,
-                    "deleted_rows_count": 0,
-                }
-            ],
-        )
+        mlist = os.path.join(meta_dir, f"snap-{sid}-1-{commit_uuid}.avro")
+        _write_manifest_list(mlist, self.shape.fv, [row], sid, None, 1)
         url = f"{self.url}/v1/namespaces/{self.ns}/tables/{self.table}"
         for attempt in range(self.MAX_RETRIES):
             cur = _req(url)["metadata"].get("current-snapshot-id")

@@ -1994,3 +1994,64 @@ def test_delete_keys_mor_skips_empty_key_sets(spark, catalog):
     t.refresh()
     assert t._resolve_deletes(t.current_snapshot) == []
     assert sorted(r["k"] for r in t.scan().collect()) == [1, 2]
+
+
+def test_replace_equality_delete_preserves_anchor_seq(spark, tmp_path):
+    """r11 ADVICE (low): a 1:1 equality rewrite passing the removed
+    entry's seq (4-tuple group) applies to exactly the original files;
+    the bare 3-tuple form re-anchors to the maintenance commit and
+    widens reach — both behaviors pinned."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    def build(wh):
+        catalog = Catalog(spark, str(tmp_path / wh))
+        t = catalog.create_table(
+            "nyc", "anch", spark.range(1).selectExpr("id", "id AS k").schema
+        )
+        t.append_dataframe(
+            spark.range(0, 5).selectExpr("id", "id AS k").coalesce(1)
+        )
+        eqp = str(tmp_path / f"{wh}-eq.parquet")
+        pq.write_table(pa.table({"k": pa.array([2], pa.int64())}), eqp)
+        t.add_foreign_delete_files([], [(["k"], [eqp])])
+        orig_seq = next(
+            d["seq"]
+            for d in t._resolve_deletes(t.current_snapshot)
+            if d["kind"] == "equality"
+        )
+        # rows appended AFTER the delete: k=2 here must SURVIVE
+        t.append_dataframe(
+            spark.createDataFrame([(100, 2)], "id long, k long").coalesce(1)
+        )
+        from iceberg_metadata_pipeline_spark.ingest.discover import (
+            find_parquet_files,
+        )
+
+        old_root = next(
+            d["path"]
+            for d in t._resolve_deletes(t.current_snapshot)
+            if d["kind"] == "equality"
+        )
+        import os as _os
+
+        old_path = (
+            find_parquet_files(old_root)
+            if _os.path.isdir(old_root)
+            else [old_root]
+        )
+        eqp2 = str(tmp_path / f"{wh}-eq2.parquet")
+        pq.write_table(pa.table({"k": pa.array([2], pa.int64())}), eqp2)
+        return t, orig_seq, old_path, eqp2
+
+    # anchored rewrite: the later k=2 row survives (exact 1:1 semantics)
+    t, orig_seq, old_path, eqp2 = build("wh-a")
+    t.replace_delete_files(list(old_path), [], [(["k"], [eqp2], None, orig_seq)])
+    got = sorted(r.id for r in t.scan().collect())
+    assert got == [0, 1, 3, 4, 100]
+
+    # bare rewrite re-anchors: the later k=2 row is now deleted too
+    t2, _seq, old_path2, eqp3 = build("wh-b")
+    t2.replace_delete_files(list(old_path2), [], [(["k"], [eqp3])])
+    got2 = sorted(r.id for r in t2.scan().collect())
+    assert got2 == [0, 1, 3, 4]

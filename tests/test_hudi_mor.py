@@ -582,14 +582,11 @@ def test_stream_refuses_deletes_unless_opted_in(spark, mor_table, tmp_path):
     parts = PyHudiStreamReader(
         None, {"path": loc, "ignoreDeletes": "true"}
     ).partitions({"t": t0}, {"t": t2})
-    log_parts = [p for p in parts if p.stream_log]
+    log_parts = [p for p in parts if p.logs]
     assert log_parts
-    from dataclasses import replace
-
-    strict = replace(log_parts[0], stream_ignore_deletes=False)
     rd = PyHudiStreamReader(None, {"path": loc})
     with pytest.raises(ValueError, match="DELETE"):
-        list(rd.read(strict))
+        list(rd.read(log_parts[0]))
 
     # opted-in end-to-end: upserts flow, deletes skipped, no failure
     register(spark)

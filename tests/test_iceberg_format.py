@@ -997,3 +997,263 @@ def test_incremental_export_appends_only_new_manifest(spark, tmp_path):
     export_iceberg_table(t.refresh(), dest)
     info3 = read_iceberg_table(dest)
     assert sum(f.record_count for f in info3.files) == 6
+
+
+def test_incremental_export_occ_retry(spark, tmp_path, monkeypatch):
+    """r11 ADVICE (low): _mirror_commit claims EXACTLY
+    base_version+1 — a concurrent mirror commit between read and claim
+    fails the claim and the caller retries from the fresh latest state
+    instead of superseding the concurrent commit with a stale snapshot."""
+    import json as _json
+    import shutil
+
+    from iceberg_metadata_pipeline_spark.catalog import iceberg_format as IF
+
+    catalog = Catalog(spark, str(tmp_path / "wh"))
+    df = spark.range(20).selectExpr("id", "id % 3 AS k")
+    t = catalog.create_table("nyc", "occ", df.schema)
+    t.append_dataframe(df.coalesce(1))
+    dest = str(tmp_path / "ice")
+    IF.export_iceberg_table(t.refresh(), dest)
+
+    # next change: a positional MOR delete → incremental row-delta path
+    # (delete_where_mor would mint a PREDICATE entry, which disables the
+    # incremental path by design)
+    t.delete_where_positional("k = 1")
+
+    real_claim = IF._claim_metadata_version
+    state = {"raced": False}
+
+    def racing_claim(location, metadata, version):
+        if not state["raced"] and location == dest:
+            state["raced"] = True
+            # concurrent writer lands first at the same version
+            latest = IF._latest_metadata_path(dest)
+            with open(latest) as fh:
+                md = _json.load(fh)
+            md["last-updated-ms"] = md.get("last-updated-ms", 0) + 1
+            assert real_claim(dest, md, version) is not None
+        return real_claim(location, metadata, version)
+
+    monkeypatch.setattr(IF, "_claim_metadata_version", racing_claim)
+    out = IF.export_iceberg_table(t.refresh(), dest)
+    assert state["raced"]
+    monkeypatch.undo()
+
+    # the export landed ABOVE the concurrent commit and serves the
+    # post-delete rows exactly
+    from iceberg_metadata_pipeline_spark.ingest.pyice_source import register
+
+    register(spark)
+    got = sorted(
+        r.id for r in spark.read.format("pyice").load(dest).collect()
+    )
+    assert got == [i for i in range(20) if i % 3 != 1]
+
+
+def test_incremental_export_compaction_replace_diff(spark, tmp_path):
+    """r11 verdict #6: a delete-free compaction exports as ONE
+    replace-diff — untouched manifests carried VERBATIM (same file
+    paths), affected manifests rewritten to their survivors (EXISTING,
+    original sequence numbers), rewrite outputs in one new manifest —
+    instead of a full metadata rewrite. Delete-carrying compactions
+    keep the conservative full path (pinned in test_round11.py)."""
+    import os
+
+    from iceberg_metadata_pipeline_spark.catalog import avro_io
+    from iceberg_metadata_pipeline_spark.catalog.iceberg_format import (
+        export_iceberg_table,
+        read_iceberg_table,
+    )
+    from iceberg_metadata_pipeline_spark.catalog.metacat import DataFileEntry
+    from iceberg_metadata_pipeline_spark.ingest.pyice_source import register
+
+    catalog = Catalog(spark, str(tmp_path / "wh"))
+    t = catalog.create_table("nyc", "cpt", spark.range(1).selectExpr("id").schema)
+    dest = str(tmp_path / "ice")
+    # three incremental appends → three data manifests in the mirror
+    # (append A writes TWO files so the partial-survivor path is hit)
+    t.append_dataframe(
+        spark.range(0, 4).selectExpr("id").repartitionByRange(2, "id")
+    )
+    export_iceberg_table(t.refresh(), dest)
+    t.append_dataframe(spark.range(10, 14).selectExpr("id").coalesce(1))
+    export_iceberg_table(t.refresh(), dest)
+    t.append_dataframe(spark.range(20, 24).selectExpr("id").coalesce(1))
+    export_iceberg_table(t.refresh(), dest)
+
+    def manifests(dest):
+        info = read_iceberg_table(dest, decode_dvs=False)
+        import json as _json
+
+        with open(info.metadata_path) as fh:
+            md = _json.load(fh)
+        snap = next(
+            s
+            for s in md["snapshots"]
+            if int(s["snapshot-id"]) == int(md["current-snapshot-id"])
+        )
+        _, _, rows = avro_io.read_container(snap["manifest-list"])
+        return {r["manifest_path"]: r for r in rows}
+
+    before = manifests(dest)
+    assert len(before) == 3
+
+    # compact: one file of append A + the append-B file → one new file;
+    # the other A file and the append-C manifest are untouched
+    files = {os.path.abspath(f.path): f for f in t.snapshot_files()}
+    a_files = sorted(p for p in files if files[p].record_count == 2)
+    b_file = next(
+        p for p in files if files[p].record_count == 4
+        and sorted(
+            r.id for r in spark.read.parquet(p).collect()
+        )[0] == 10
+    )
+    victims = {a_files[0], b_file}
+    merged = str(tmp_path / "merged")
+    spark.read.parquet(*sorted(victims)).coalesce(1).write.parquet(merged)
+    import glob as _glob
+
+    mfile = _glob.glob(merged + "/*.parquet")[0]
+    import pyarrow.parquet as pq
+
+    t.replace_files(
+        [
+            DataFileEntry(
+                path=mfile,
+                record_count=pq.read_metadata(mfile).num_rows,
+                file_size_bytes=os.path.getsize(mfile),
+                format="PARQUET",
+                partition={},
+            )
+        ],
+        victims,
+        operation="replace",
+    )
+    export_iceberg_table(t.refresh(), dest)
+    after = manifests(dest)
+
+    # the untouched append-C manifest path is carried verbatim
+    untouched_carried = set(before) & set(after)
+    assert untouched_carried, "no manifest carried verbatim"
+    # the partially-affected manifest was rewritten: a survivor entry
+    # exists with status=EXISTING and its ORIGINAL sequence number
+    survivor_path = a_files[1]
+    surv_entries = []
+    for mp in set(after) - set(before):
+        _, _, es = avro_io.read_container(mp)
+        surv_entries.extend(es)
+    surv = [
+        e
+        for e in surv_entries
+        if os.path.abspath(e["data_file"]["file_path"]) == survivor_path
+    ]
+    assert surv and int(surv[0]["status"]) == 0
+    assert int(surv[0]["sequence_number"]) == int(files[survivor_path].seq)
+
+    # the read is exact
+    register(spark)
+    back = spark.read.format("pyice").load(dest)
+    assert sorted(r.id for r in back.collect()) == sorted(
+        list(range(0, 4)) + list(range(10, 14)) + list(range(20, 24))
+    )
+    # and the summary says replace, not a full rewrite
+    info = read_iceberg_table(dest, decode_dvs=False)
+    import json as _json
+
+    with open(info.metadata_path) as fh:
+        md = _json.load(fh)
+    snap = next(
+        s
+        for s in md["snapshots"]
+        if int(s["snapshot-id"]) == int(md["current-snapshot-id"])
+    )
+    assert snap["summary"]["operation"] == "replace"
+
+
+@pytest.mark.parametrize("writer", ["full_export", "add_column_with_default"])
+def test_writer_claims_version_atomically(spark, tmp_path, monkeypatch, writer):
+    """A concurrent writer claims base+1 first: the full export (a
+    predicate delete turns the incremental path off) and the add-column
+    commit must land above it instead of overwriting it, log it as their
+    base, and serve the right rows."""
+    from iceberg_metadata_pipeline_spark.catalog import iceberg_format as IF
+    from iceberg_metadata_pipeline_spark.ingest.pyice_source import register
+
+    catalog = Catalog(spark, str(tmp_path / "wh"))
+    df = spark.range(20).selectExpr("id", "id % 3 AS k")
+    t = catalog.create_table("nyc", "race", df.schema)
+    t.append_dataframe(df.coalesce(1))
+    dest = str(tmp_path / "ice")
+    if writer == "full_export":
+        IF.export_iceberg_table(t.refresh(), dest)
+        t.delete_where_mor("k = 1")
+        expect = [(i, i % 3) for i in range(20) if i % 3 != 1]
+
+        def run():
+            return IF.export_iceberg_table(t.refresh(), dest)
+    else:
+        IF.export_iceberg_table(t.refresh(), dest, format_version=3)
+        expect = [(i, i % 3, "x") for i in range(20)]
+
+        def run():
+            return IF.add_column_with_default(dest, "tag", "string", "x")
+
+    base = IF.list_metadata_versions(dest)[-1]
+    real_claim = IF._claim_metadata_version
+    raced = []
+
+    def racing_claim(location, metadata, version):
+        if not raced and location == dest:
+            raced.append(version)
+            # a concurrent writer lands first at the same version
+            with open(IF._latest_metadata_path(dest)) as fh:
+                md = json.load(fh)
+            md["last-updated-ms"] = md.get("last-updated-ms", 0) + 1
+            assert real_claim(dest, md, version) is not None
+        return real_claim(location, metadata, version)
+
+    monkeypatch.setattr(IF, "_claim_metadata_version", racing_claim)
+    out = run()
+    monkeypatch.undo()
+
+    assert raced == [base + 1]
+    assert out == os.path.join(dest, "metadata", f"v{base + 2}.metadata.json")
+    assert IF.list_metadata_versions(dest) == list(range(1, base + 3))
+    with open(out) as fh:
+        logged = json.load(fh)["metadata-log"][-1]["metadata-file"]
+    assert logged == os.path.join(dest, "metadata", f"v{base + 1}.metadata.json")
+    register(spark)
+    got = sorted(tuple(r) for r in spark.read.format("pyice").load(dest).collect())
+    assert got == expect
+
+
+def test_export_over_torn_latest_version(spark, tmp_path):
+    """A torn latest vN (a crash mid-write) does not wedge the mirror:
+    the next export is a full one that claims the version above it and
+    serves the right rows, while a direct append, which would build on
+    the torn content, refuses."""
+    from iceberg_metadata_pipeline_spark.catalog import iceberg_format as IF
+    from iceberg_metadata_pipeline_spark.ingest.pyice_source import register
+
+    catalog = Catalog(spark, str(tmp_path / "wh"))
+    df = spark.range(10).selectExpr("id")
+    t = catalog.create_table("nyc", "torn", df.schema)
+    t.append_dataframe(df.coalesce(1))
+    dest = str(tmp_path / "ice")
+    IF.export_iceberg_table(t.refresh(), dest)
+    t.append_dataframe(spark.range(10, 15).selectExpr("id").coalesce(1))
+    torn = IF.export_iceberg_table(t.refresh(), dest)
+    with open(torn, "r+") as fh:
+        fh.truncate(40)
+
+    with pytest.raises(ValueError, match="unreadable"):
+        IF.commit_iceberg_append(dest, [])
+    out = IF.export_iceberg_table(t.refresh(), dest)
+    assert IF._version_of(out) == IF._version_of(torn) + 1
+    with open(out) as fh:
+        logged = [e["metadata-file"] for e in json.load(fh)["metadata-log"]]
+    assert os.path.abspath(torn) not in logged
+    register(spark)
+    got = sorted(r.id for r in spark.read.format("pyice").load(dest).collect())
+    assert got == list(range(15))
